@@ -2,56 +2,30 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.FeatureIdExpression
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.Natives
 
 /** SparkSessionExtensions entry point (SURVEY §4B: the documented injection
-  * point for custom Catalyst pieces). Registers the engine's native
-  * expressions so ANY session built with
+  * point for custom Catalyst pieces). A session built with
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)   // code
-  *   --conf spark.sql.extensions=graft.GraftExtensions            // config
+  *   builder.withExtensions(new GraftExtensions)         // code
+  *   --conf spark.sql.extensions=graft.GraftExtensions   // config
   *
-  * gets `feature_id(...)` in SQL with full whole-stage codegen, plus the
-  * [[graft.plans.RangeJoinBucketing]] optimizer rule, which rewrites naive
-  * band/interval theta joins (O(n·m) nested-loop plans) into bucketed equi
-  * joins. The rule is also installable on an extension-less session via
-  * `spark.experimental.extraOptimizations` (see TemporalJoins b15b).
+  * gets every native of [[graft.functions.Natives]]'s table in SQL with
+  * full whole-stage codegen (other sessions get the same table from
+  * [[graft.functions.Natives.install]], which every registry entry runs),
+  * plus the three graft optimizer rules: [[graft.plans.RangeJoinBucketing]],
+  * which rewrites naive band/interval theta joins (O(n·m) nested-loop
+  * plans) into bucketed equi joins, [[graft.plans.CosineLshRewrite]] and
+  * [[graft.plans.GlobalWindowScanRewrite]]. On extension-less sessions the
+  * entries that exercise a rule install it themselves via
+  * [[graft.plans.RuleInstall]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("feature_id"),
-      new ExpressionInfo(classOf[FeatureIdExpression].getName, "feature_id"),
-      (children: Seq[Expression]) => FeatureIdExpression(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_f64"),
-      new ExpressionInfo(classOf[graft.functions.DotProductExpression].getName, "dot_f64"),
-      graft.functions.DotProductExpression.build _))
-    ext.injectFunction((
-      new FunctionIdentifier("sign_lsh_bands"),
-      new ExpressionInfo(classOf[graft.functions.SignLshBandsExpression].getName, "sign_lsh_bands"),
-      graft.functions.SignLshBandsExpression.build _))
-    ext.injectFunction((
-      new FunctionIdentifier("z_order2"),
-      new ExpressionInfo(classOf[graft.functions.ZOrderExpression].getName, "z_order2"),
-      graft.functions.ZOrderExpression.build _))
-    ext.injectFunction((
-      new FunctionIdentifier("trigram_hashes"),
-      new ExpressionInfo(classOf[graft.functions.TrigramHashExpression].getName, "trigram_hashes"),
-      graft.functions.TrigramHashExpression.build _))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[graft.functions.MinHashSigExpression].getName, "minhash_sigs"),
-      graft.functions.MinHashSigExpression.build _))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[graft.functions.ShingleHashesExpression].getName, "shingle_hashes"),
-      graft.functions.ShingleHashesExpression.build _))
-    ext.injectFunction((
-      new FunctionIdentifier("lsh_bands"),
-      new ExpressionInfo(classOf[graft.functions.LshBandsExpression].getName, "lsh_bands"),
-      graft.functions.LshBandsExpression.build _))
+    for ((name, builder) <- Natives.table)
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(Natives.getClass.getName, name), builder))
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinBucketing)
     ext.injectOptimizerRule(_ => graft.plans.CosineLshRewrite)
     ext.injectOptimizerRule(_ => graft.plans.GlobalWindowScanRewrite)

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `<outDir>/<query>.txt` with the formatted physical plan of each
   * named query — the per-change evidence capture behind `plans/r20/`
   * (EXPLAIN.md stays the full-set artifact; this is the targeted
@@ -19,14 +17,7 @@ object PlanDump {
     Files.createDirectories(outDir)
     val names = args(1).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-plandump")
     val byName = SparkEntry.all.map(e => e.name -> e).toMap
     for (n <- names) {
       // `graph_rounds` is a pseudo-name: dump the iterative operators'

@@ -29,8 +29,15 @@ object Registry {
   )
 
   def entry(name: String, oracle: String, bench: Boolean = false)(q: Q): Entry =
-    Entry(name, q, Some(oracle), bench)
+    Entry(name, withNatives(q), Some(oracle), bench)
 
   def entryNoOracle(name: String, bench: Boolean = false)(q: Q): Entry =
-    Entry(name, q, None, bench)
+    Entry(name, withNatives(q), None, bench)
+
+  /** Installs the native functions before the query is built, so every
+    * entry runs in any session, extension-less ones included. */
+  private def withNatives(q: Q): Q = { (s, d) =>
+    graft.functions.Natives.install(s)
+    q(s, d)
+  }
 }

@@ -179,22 +179,4 @@ object BpeByteFallback {
     UTF8String.fromString(sb.toString)
   }
 
-  private def build1(name: String, mk: Expression => Expression)(
-      children: Seq[Expression]): Expression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> name,
-          "expectedNum" -> "1",
-          "actualNum" -> children.size.toString,
-          "docroot" -> "NA"))
-    mk(children.head)
-  }
-
-  /** Session-local registration for extension-less (Verify/Bench) sessions. */
-  def register(s: org.apache.spark.sql.SparkSession): Unit = {
-    RegisterOnce(s, "bpe_encode_bf")(build1("bpe_encode_bf", BpeEncodeBytesExpression.apply))
-    RegisterOnce(s, "bpe_decode_bf")(build1("bpe_decode_bf", BpeDecodeBytesExpression.apply))
-  }
 }

@@ -87,8 +87,4 @@ object BpeDecodeExpression {
           "docroot" -> "NA"))
     BpeDecodeExpression(children.head)
   }
-
-  /** Session-local registration for extension-less (Verify/Bench) sessions. */
-  def register(s: org.apache.spark.sql.SparkSession): Unit =
-    RegisterOnce(s, "bpe_decode")(build)
 }

@@ -135,7 +135,7 @@ object BpeEncodeExpression {
     BpeEncodeExpression(children.head)
   }
 
-  /** Session-local registration for extension-less (Verify/Bench) sessions. */
-  def register(s: org.apache.spark.sql.SparkSession): Unit =
-    RegisterOnce(s, "bpe_encode")(build)
+  /** Installs every native ([[Natives.install]]); kept because
+    * perfbench's kernel pass calls it by this expression's name. */
+  def register(s: org.apache.spark.sql.SparkSession): Unit = Natives.install(s)
 }

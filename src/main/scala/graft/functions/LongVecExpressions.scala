@@ -92,22 +92,3 @@ case class SqDistI64Expression(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): SqDistI64Expression =
     copy(left = newLeft, right = newRight)
 }
-
-object LongVecExpressions {
-  private def arity2(name: String)(children: Seq[Expression])(
-      mk: (Expression, Expression) => Expression): Expression = {
-    if (children.size != 2)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> name, "expectedNum" -> "2",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    mk(children(0), children(1))
-  }
-
-  /** SQL-API form: register `dot_i64` and `sqdist_i64` (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    RegisterOnce(spark, "dot_i64")(arity2("dot_i64")(_)(DotI64Expression))
-    RegisterOnce(spark, "sqdist_i64")(arity2("sqdist_i64")(_)(SqDistI64Expression))
-  }
-}

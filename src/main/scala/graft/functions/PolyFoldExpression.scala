@@ -76,8 +76,4 @@ object PolyFoldExpression {
           "actualNum" -> children.size.toString, "docroot" -> ""))
     PolyFoldExpression(children.head)
   }
-
-  /** SQL-API form: register `poly_fold(s)` (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    RegisterOnce(spark, "poly_fold")(build)
 }

@@ -129,22 +129,4 @@ object PostingCodec {
     new GenericArrayData(out.toArray)
   }
 
-  private def build1(name: String, mk: Expression => Expression)(
-      children: Seq[Expression]): Expression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> name,
-          "expectedNum" -> "1",
-          "actualNum" -> children.size.toString,
-          "docroot" -> "NA"))
-    mk(children.head)
-  }
-
-  /** Session-local registration for extension-less (Verify/Bench) sessions. */
-  def register(s: org.apache.spark.sql.SparkSession): Unit = {
-    RegisterOnce(s, "encode_postings")(build1("encode_postings", EncodePostingsExpression.apply))
-    RegisterOnce(s, "decode_postings")(build1("decode_postings", DecodePostingsExpression.apply))
-  }
 }

@@ -97,8 +97,4 @@ object QualityScoreExpression {
           "actualNum" -> children.size.toString, "docroot" -> ""))
     QualityScoreExpression(children.head)
   }
-
-  /** SQL-API form: register `quality_score(s)` (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    RegisterOnce(spark, "quality_score")(build)
 }

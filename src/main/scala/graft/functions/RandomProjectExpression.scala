@@ -107,8 +107,4 @@ object RandomProjectExpression {
           "actualNum" -> children.size.toString, "docroot" -> ""))
     RandomProjectExpression(children.head)
   }
-
-  /** SQL-API form: register `random_project(v)` (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    RegisterOnce(spark, "random_project")(build)
 }

@@ -109,8 +109,4 @@ object RepetitionStatsExpression {
           "actualNum" -> children.size.toString, "docroot" -> ""))
     RepetitionStatsExpression(children.head)
   }
-
-  /** SQL-API form: register `repetition_stats(s)` (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    RegisterOnce(spark, "repetition_stats")(build)
 }

@@ -215,22 +215,4 @@ object UnigramByteFallback {
     UTF8String.fromString(sb.toString)
   }
 
-  private def build1(name: String, mk: Expression => Expression)(
-      children: Seq[Expression]): Expression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> name,
-          "expectedNum" -> "1",
-          "actualNum" -> children.size.toString,
-          "docroot" -> "NA"))
-    mk(children.head)
-  }
-
-  /** Session-local registration for extension-less (Verify/Bench) sessions. */
-  def register(s: org.apache.spark.sql.SparkSession): Unit = {
-    RegisterOnce(s, "unigram_encode_bf")(build1("unigram_encode_bf", UnigramEncodeBytesExpression.apply))
-    RegisterOnce(s, "unigram_decode_bf")(build1("unigram_decode_bf", UnigramDecodeBytesExpression.apply))
-  }
 }

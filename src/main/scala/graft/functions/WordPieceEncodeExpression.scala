@@ -110,8 +110,4 @@ object WordPieceEncodeExpression {
           "docroot" -> "NA"))
     WordPieceEncodeExpression(children.head)
   }
-
-  /** Session-local registration for extension-less (Verify/Bench) sessions. */
-  def register(s: org.apache.spark.sql.SparkSession): Unit =
-    RegisterOnce(s, "wordpiece_encode")(build)
 }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.functions._
 import graft.Registry._
-import graft.functions.{BpeDecodeExpression, BpeEncodeExpression}
+import graft.functions.BpeEncodeExpression
 import graft.sources.Tables
 
 /** B122 — deterministic subword tokenization (SURVEY §2C tier (b); the
@@ -75,7 +75,6 @@ object BpeTokenize {
 
   private val b122 = entry("b122_bpe_tokenize", bpeOracleSql, bench = true) {
     (s, d) =>
-      BpeEncodeExpression.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), expr("bpe_encode(text)").as("ids"))
         .withColumn("n_tokens",
@@ -127,8 +126,6 @@ object BpeTokenize {
     * presentation only. */
   private val b151 = entry("b151_bpe_roundtrip", roundtripOracleSql) {
     (s, d) =>
-      BpeEncodeExpression.register(s)
-      BpeDecodeExpression.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
           expr("bpe_decode(bpe_encode(text))").as("decoded"))
@@ -173,7 +170,6 @@ object BpeTokenize {
        |              columns={probe_id: 'BIGINT', text: 'VARCHAR'})
        |ORDER BY probe_id""".stripMargin) { (s, _) =>
     import org.apache.spark.sql.types._
-    graft.functions.BpeByteFallback.register(s)
     val schema = StructType(Seq(
       StructField("probe_id", LongType), StructField("text", StringType)))
     s.read.option("header", "true").schema(schema).csv(bytefallbackCsv)

@@ -46,7 +46,6 @@ object Chunker {
   /** The chunk relation without the presentation sort — for consumers
     * (B105) that re-shuffle anyway. */
   def chunksRaw(docs: DataFrame): DataFrame = {
-    graft.functions.PolyFoldExpression.register(docs.sparkSession)
     val ws = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
     // posexplode_outer, not posexplode: the non-outer form lets
     // InferFiltersFromGenerate duplicate the generator into a pushed

@@ -134,13 +134,13 @@ object CleanPipeline {
     val contaminated = Decontaminate.overlapReport(corpus, bench)
       .filter(col("contaminated")).select(col("doc_id"))
     val survivors = corpus.join(contaminated, Seq("doc_id"), "left_anti")
-    // 3. exact dedup on the cleaned text, canonical min id
-    val rel = survivors.groupBy(col("text"))
+    // 3. exact dedup on the cleaned text, canonical min id; the span
+    // relations are released even when the checkpoint fails
+    try survivors.groupBy(col("text"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), col("text"))
       .localCheckpoint(true)
-    releaseSpan()
-    rel
+    finally releaseSpan()
   }
 
   private val b94 = entry(

@@ -333,8 +333,6 @@ object CorpusAnalytics {
        |JOIN srcs sb ON sb.doc_id = db
        |GROUP BY 1, 2
        |ORDER BY src_lo, src_hi""".stripMargin, bench = true) { (s, d) =>
-    graft.functions.ShingleHashesExpression.register(s)
-    graft.functions.MinHashSigExpression.register(s)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("source"), col("text"))
     // ADVICE r14: the mirror-id offset is a literal shared with the oracle;
     // CHECK the headroom instead of assuming it — past 3M docs the mirror
@@ -531,7 +529,6 @@ object CorpusAnalytics {
        |       preview
        |FROM ranked WHERE rnk <= $ExemplarK
        |ORDER BY source, exemplar_rank""".stripMargin) { (s, d) =>
-    graft.functions.PolyFoldExpression.register(s)
     val scored = Tables.documents(s, d)
       .select(col("source"), col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"),

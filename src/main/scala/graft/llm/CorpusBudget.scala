@@ -64,7 +64,6 @@ object CorpusBudget {
     * lesson: per-char interpreted lambdas are the only corpus-
     * proportional cost here besides the scan itself. */
   private def tokenPriorities(docs: DataFrame): DataFrame = {
-    graft.functions.PolyFoldExpression.register(docs.sparkSession)
     val pri = "poly_fold(concat('cap:', CAST(doc_id AS STRING)))"
     docs.select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("n_tok"),
@@ -157,7 +156,6 @@ object CorpusBudget {
     * sample contiguous id runs; the multiplicative scramble decorrelates
     * the order from id adjacency (the b167/b180 lesson). */
   private def quotaPriorities(docs: DataFrame): DataFrame = {
-    graft.functions.PolyFoldExpression.register(docs.sparkSession)
     val pri = "((poly_fold(concat('quota:', CAST(doc_id AS STRING)))" +
       " % 2147483648) * 2654435761) % 2147483648"
     docs.select(col("doc_id"), col("source"),
@@ -301,7 +299,6 @@ object CorpusBudget {
        |SELECT doc_id, source AS domain, n_tok, start
        |FROM offs CROSS JOIN q WHERE start < quota
        |ORDER BY doc_id""".stripMargin, bench = true) { (s, d) =>
-    graft.functions.PolyFoldExpression.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), expr(domainExprSpark).as("source"), col("text"))
     shareQuotaManifest(docs, DomainShareBp)

@@ -219,15 +219,17 @@ object CorpusRelease {
 
   // ---- engine side ---------------------------------------------------
 
-  /** Per-segment (n, XOR) of a candidate's published partitions. A
-    * candidate already carrying a precomputed `fp` row-fold column uses
-    * it as-is (r21: the release fold is evaluated ONCE into the rel
-    * checkpoint and reused by fpPrev/fpClean/fpCorr/version — the r20
-    * shape re-folded the full corpus text in each of those four legs,
-    * ~2 executor-CPU s per fold at sf0.1). */
-  private[graft] def fpOf(cand: DataFrame): DataFrame = {
+  /** Per-segment (n, XOR) of a candidate's published partitions.
+    * `folded = true` reuses the candidate's `fp` column as its row fold
+    * (r21: the release fold is evaluated ONCE into the rel checkpoint and
+    * reused by fpPrev/fpClean/fpCorr/version — the r20 shape re-folded
+    * the full corpus text in each of those four legs, ~2 executor-CPU s
+    * per fold at sf0.1). Only [[releaseReport]]'s relF legs pass it; any
+    * other candidate is folded from its text, whatever columns it
+    * carries, so a stale `fp` cannot hide a mutated row. */
+  private[graft] def fpOf(cand: DataFrame, folded: Boolean = false): DataFrame = {
     val withFp =
-      if (cand.columns.contains("fp")) cand
+      if (folded) cand
       else cand.withColumn("fp", expr(rowFoldSpark))
     withFp.filter(col("doc_id") % 10 < PublishedParts)
       .select((col("doc_id") % 10).as("seg"), col("fp"))
@@ -241,7 +243,8 @@ object CorpusRelease {
     * ANY candidate — CorpusReleaseSpec plants its own corruptions
     * through it. */
   private[graft] def gateLegs(cand: DataFrame, fpPrev: DataFrame,
-      prevCount: DataFrame, leakOverride: Option[DataFrame] = None): DataFrame = {
+      prevCount: DataFrame, leakOverride: Option[DataFrame] = None,
+      folded: Boolean = false): DataFrame = {
     val dedup = cand
       .agg(count(lit(1)).as("n_checked"),
         (count(lit(1)) - countDistinct(col("text"))).as("n_failures"))
@@ -249,7 +252,7 @@ object CorpusRelease {
         col("n_checked"), col("n_failures"))
     val fingerprint = fpPrev
       .select(col("seg"), col("n").as("p_n"), col("fp").as("p_fp"))
-      .join(broadcast(fpOf(cand).select(col("seg"), col("n").as("c_n"),
+      .join(broadcast(fpOf(cand, folded).select(col("seg"), col("n").as("c_n"),
         col("fp").as("c_fp"))), Seq("seg"), "left")
       .agg(count(lit(1)).as("n_checked"),
         sum(when(col("c_fp").isNull || !(col("p_fp") <=> col("c_fp"))
@@ -282,8 +285,9 @@ object CorpusRelease {
   /** Legs + verdict, labeled — the b258 report shape. */
   private[graft] def gateReport(cand: DataFrame, fpPrev: DataFrame,
       prevCount: DataFrame, label: String,
-      leakOverride: Option[DataFrame] = None): DataFrame = {
-    val legs = gateLegs(cand, fpPrev, prevCount, leakOverride)
+      leakOverride: Option[DataFrame] = None,
+      folded: Boolean = false): DataFrame = {
+    val legs = gateLegs(cand, fpPrev, prevCount, leakOverride, folded)
     val verdict = legs.agg(sum("n_failures").as("n_failures"))
       .select(lit("zz_publish_verdict").as("check_id"),
         lit(4L).as("n_checked"), col("n_failures"))
@@ -314,7 +318,6 @@ object CorpusRelease {
     * run on the clean and the leak-planted candidates. */
   private[graft] def releaseReport(s: SparkSession, docs: DataFrame)
       : DataFrame = {
-    graft.functions.PolyFoldExpression.register(s)
     // the release fans out to card, manifest, version, and every gate
     // leg of both candidates — materialize the hygiene chain ONCE
     // (hygieneRelease checkpoints internally since r21)
@@ -360,7 +363,7 @@ object CorpusRelease {
     val fRelF = Future(
       rel.withColumn("fp", expr(rowFoldSpark)).localCheckpoint(true))
     val fFpPrev = fRelF.map(relF =>
-      fpOf(relF.filter(col("doc_id") % 10 < PublishedParts))
+      fpOf(relF.filter(col("doc_id") % 10 < PublishedParts), folded = true)
         .localCheckpoint(true))
     // leakage machinery shared by BOTH candidates: the corrupted train
     // side is tr_clean ⊎ plants (disjoint ids; every plant hashes
@@ -380,7 +383,7 @@ object CorpusRelease {
       // aggs would re-run the whole budget→BPE→packing chain once per
       // metric (the manifest is not checkpointed, and the BPE encode
       // dominates it); the 1-row checkpoint fans out to the 3 info rows
-      ModelReady.modelReadyManifest(s, relsrc)
+      ModelReady.modelReadyManifest(relsrc)
         .agg(countDistinct(col("seq_id")).cast("long").as("n_seq"),
           count(lit(1)).as("n_slices"),
           sum(col("n_toks")).cast("long").as("n_tokens"))
@@ -402,7 +405,7 @@ object CorpusRelease {
       s"b270 plant-id offset exhausted: max(doc_id) = $relMaxId >= " +
         s"$PlantBase — the corrLeak decomposition's disjoint-id premise " +
         "breaks; raise PlantBase in BOTH the entry and its oracle SQL")
-    // the corrupted candidate keeps the fp-column convention: plants
+    // the corrupted candidate carries the row fold too: plants
     // fold their own (appended-token) text — ~1% of the rows
     val corrF = relF.unionByName(plants.withColumn("fp", expr(rowFoldSpark)))
     val cleanLeak = trClean.agg(count(lit(1)).as("n_checked"))
@@ -438,9 +441,10 @@ object CorpusRelease {
           col("v").as("n_checked")))
       .select(lit("release").as("candidate"), col("check_id"),
         col("n_checked"), lit(0L).as("n_failures"), lit("info").as("status"))
-    gateReport(relF, fpPrev, prevCount, "clean", Some(cleanLeak))
+    gateReport(relF, fpPrev, prevCount, "clean", Some(cleanLeak),
+        folded = true)
       .unionByName(gateReport(corrF, fpPrev, prevCount, "corrupted",
-        Some(corrLeak)))
+        Some(corrLeak), folded = true))
       .unionByName(info)
       .orderBy("candidate", "check_id")
   }

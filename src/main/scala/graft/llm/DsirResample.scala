@@ -55,7 +55,6 @@ object DsirResample {
     * bigrams), bucketed. Map-side only: split, guarded bigram
     * transform, explode, polyfold. */
   def featureBuckets(docs: DataFrame): DataFrame = {
-    graft.functions.PolyFoldExpression.register(docs.sparkSession)
     val ws = docs.select(col("doc_id"), col("lang"),
       split(col("text"), " ").as("ws"))
     val bigrams = expr(

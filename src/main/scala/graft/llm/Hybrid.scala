@@ -135,8 +135,6 @@ object Hybrid {
        |  FROM fused) t
        |WHERE rn <= 10 ORDER BY probe_id, rn""".stripMargin,
     bench = true) { (s, d) =>
-    graft.functions.DotProductExpression.register(s)
-
     // -- semantic tower: b44's broadcast-probes shape, ranked on the
     //    ROUNDED cosine so rank boundaries are engine-identical
     val v = Tables.embeddings(s, d)

@@ -39,7 +39,7 @@ object Ivf {
     math.min(4096.0, math.max(1.0, math.ceil(math.sqrt(n.toDouble)))).toInt
 
   /** Native codegen dot product (see [[graft.functions.DotProductExpression]]);
-    * registered by GraftExtensions or per-entry. */
+    * provided by [[graft.functions.Natives]]. */
   private def dot(a: String, b: String) = expr(s"dot_f64($a, $b)")
 
   private[graft] def asDouble(df: DataFrame): DataFrame =
@@ -181,7 +181,6 @@ object Ivf {
   /** B44 scale path #2 — IVF top-10 for the same probe set as the
     * brute-force query (approximate: recall measured in IvfSpec). */
   private val b44ivf = entryNoOracle("b44_similarity_ivf") { (s, d) =>
-    graft.functions.DotProductExpression.register(s)
     search(Tables.embeddings(s, d), col("vec_id") < 20, k = 10, nProbe = 5)
       .orderBy("probe_id", "rn")
   }

@@ -64,7 +64,6 @@ object LangId {
       |         row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, plang) AS rn
       |  FROM scores) r
       |WHERE rn = 1 ORDER BY doc_id""".stripMargin, bench = true) { (s, d) =>
-    graft.functions.TrigramHashExpression.register(s)
     val docs = Tables.documents(s, d)
     // Trigram hashes come from the native fused-loop Expression — one
     // codepoint scan per doc emitting 4-byte ints. The r3 split('') + two
@@ -121,7 +120,6 @@ object LangId {
        |                columns={probe_id: 'BIGINT', text: 'VARCHAR'})
        |  WHERE length(text) >= 3) t
        |ORDER BY probe_id, pos""".stripMargin) { (s, _) =>
-    graft.functions.TrigramHashExpression.register(s)
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("probe_id", LongType), StructField("text", StringType)))

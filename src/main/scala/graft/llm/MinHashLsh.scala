@@ -66,7 +66,6 @@ object MinHashLsh {
     * [[LshCaps.bandedCandidates]]. */
   def candidatePairs(sigs: DataFrame,
       bucketCap: Option[Int] = Some(LshCaps.DefaultBucketCap)): DataFrame = {
-    graft.functions.LshBandsExpression.register(sigs.sparkSession)
     // posexplode_outer: sig is always 64 wide → 16 bands, never empty;
     // the non-outer form would re-evaluate the band-hash expression per
     // row in an inferred Generate guard (the b43 explode lesson).
@@ -141,7 +140,6 @@ object MinHashLsh {
     * (same two xxhash64 evaluations per shingle, and min over the
     * multiset ≡ min over the distinct set), pinned in MinHashLshSpec. */
   def signaturesNative(docs: DataFrame): DataFrame = {
-    graft.functions.MinHashSigExpression.register(docs.sparkSession)
     TextDedup.withShingleArr(docs)
       .select(col("doc_id"), expr("minhash_sigs(sh_arr)").as("sig"))
   }
@@ -208,8 +206,6 @@ object MinHashLsh {
     * banded relation runs at construction time here. */
   def nearDuplicates(docs: DataFrame, threshold: Double,
       bucketCap: Option[Int] = Some(LshCaps.DefaultBucketCap)): DataFrame = {
-    graft.functions.MinHashSigExpression.register(docs.sparkSession)
-    graft.functions.ShingleHashesExpression.register(docs.sparkSession)
     val spread = spreadNarrowInput(docs)
     // size > 0 replays withShingleArr's `size(words) >= 3` gate (the
     // expression returns the empty array below 3 words)

@@ -134,7 +134,6 @@ object MixtureResample {
     * temperature sampling exists precisely to protect small sources. */
   private[graft] def resampleWithWeights(docs: DataFrame, w: DataFrame,
       salt: String, scrambled: Boolean = false): DataFrame = {
-    graft.functions.PolyFoldExpression.register(docs.sparkSession)
     val toks = docs.select(col("doc_id"), col("source"),
       size(split(col("text"), " ")).cast("long").as("n_tok"))
     val tot = toks.groupBy("source").agg(sum("n_tok").as("t"))

@@ -3,7 +3,6 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Registry._
-import graft.functions.BpeEncodeExpression
 import graft.sources.Tables
 
 /** B131 — MODEL-READY CAPSTONE: the last mile of a training-data
@@ -86,9 +85,7 @@ object ModelReady {
   /** The model-ready pipeline's engine side — budget cap → BPE → pack,
     * returning the loader manifest. Shared by b131 and B270's release
     * capstone. Expects (doc_id, source, text). */
-  private[graft] def modelReadyManifest(s: org.apache.spark.sql.SparkSession,
-      docs: DataFrame): DataFrame = {
-    BpeEncodeExpression.register(s)
+  private[graft] def modelReadyManifest(docs: DataFrame): DataFrame = {
     val kept = CorpusBudget.budgetManifest(docs).select("doc_id")
     val toks = docs.join(kept, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), expr("bpe_encode(text)").as("ids"))
@@ -104,7 +101,7 @@ object ModelReady {
        |SELECT seq_id, doc_id, doc_off, n_toks
        |FROM mr_slices
        |ORDER BY seq_id, doc_id""".stripMargin, bench = true) { (s, d) =>
-    modelReadyManifest(s, Tables.documents(s, d))
+    modelReadyManifest(Tables.documents(s, d))
   }
 
   /** Output shards for the training shuffle. */
@@ -134,7 +131,6 @@ object ModelReady {
        |                               ORDER BY k, doc_id) AS BIGINT) AS pos,
        |       doc_id
        |FROM keyed ORDER BY shard, pos""".stripMargin, bench = true) { (s, d) =>
-    graft.functions.PolyFoldExpression.register(s)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("k"), col("doc_id"))
     Tables.documents(s, d).select(col("doc_id"),

@@ -54,7 +54,6 @@ object Perplexity {
     * spec-pinned. `totals` stays broadcast in both modes — it is |langs|
     * rows by construction. */
   def perplexityReport(docs: DataFrame, gramKeyedModel: Boolean = false): DataFrame = {
-    graft.functions.TrigramHashExpression.register(docs.sparkSession)
     val triOf = expr("trigram_hashes(text)")
     val train = docs.filter(col("doc_id") % 2 === 0 && length(col("text")) >= 3)
       .select(col("lang"), explode_outer(triOf).as("tri"))

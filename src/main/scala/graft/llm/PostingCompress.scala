@@ -58,7 +58,6 @@ object PostingCompress {
        |       CAST(1 AS BIGINT) AS roundtrip_ok
        |FROM postings p JOIN enc e USING (term)
        |ORDER BY p.term""".stripMargin, bench = true) { (s, d) =>
-    graft.functions.PostingCodec.register(s)
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("term"))

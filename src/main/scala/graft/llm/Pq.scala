@@ -372,7 +372,6 @@ object Pq {
   /** B44 scale path #3 — PQ/ADC top-10 for the same probe set as the
     * brute-force query (approximate: recall + determinism in PqSpec). */
   private val b84pq = entryNoOracle("b84_similarity_pq") { (s, d) =>
-    graft.functions.DotProductExpression.register(s)
     searchAdc(Tables.embeddings(s, d), col("vec_id") < 20, k = 10)
       .orderBy("probe_id", "rn")
   }
@@ -380,7 +379,6 @@ object Pq {
   /** B44 scale-path composition — IVFADC top-10 for the same probe set
     * (approximate: recall + pruning ratio pinned in PqSpec). */
   private val b84bIvfPq = entryNoOracle("b84b_similarity_ivfpq") { (s, d) =>
-    graft.functions.DotProductExpression.register(s)
     searchIvfAdc(Tables.embeddings(s, d), col("vec_id") < 20, k = 10, nProbe = 10)
       .orderBy("probe_id", "rn")
   }
@@ -397,7 +395,6 @@ object Pq {
     * instead of hiding in the test suite. Same probes/k/nProbe as b84b
     * (whose in-memory search is result-equal by PqSpec). */
   private val b84cIndex = entryNoOracle("b84c_similarity_ivfpq_index") { (s, d) =>
-    graft.functions.DotProductExpression.register(s)
     val emb = Tables.embeddings(s, d)
     writeIvfPqIndex(emb, indexDir84c)
     searchIvfAdcFromIndex(s, indexDir84c, emb.filter(col("vec_id") < 20),

@@ -26,7 +26,6 @@ object QualityClassifier {
   /** (doc_id, score, kept) for every document — no gate, no exchange;
     * the b94-composable building block. */
   def scored(docs: DataFrame): DataFrame = {
-    graft.functions.QualityScoreExpression.register(docs.sparkSession)
     docs.select(col("doc_id"),
       expr("quality_score(text)").as("score"))
   }
@@ -89,7 +88,6 @@ object QualityClassifier {
     * the bite (the b239 diagnostic convention). Zero exchanges before the
     * presentation sort (the B243 posture, spec-asserted). */
   def repetitionReport(docs: DataFrame): DataFrame = {
-    graft.functions.RepetitionStatsExpression.register(docs.sparkSession)
     docs.select(col("doc_id"), expr("repetition_stats(text)").as("st"))
       .select(col("doc_id"),
         expr("st[0]").as("n_tok"),
@@ -184,7 +182,6 @@ object QualityClassifier {
     * closed-form ntile; no SinglePartition anywhere (spec-asserted).
     * The oracle keeps the naive ntile window over the SHARED score CTEs. */
   def calibrationDeciles(docs: DataFrame): DataFrame = {
-    graft.functions.QualityScoreExpression.register(docs.sparkSession)
     val sc = docs.select(col("doc_id"),
       expr("CAST(size(filter(split(text, ' '), t -> t <> '')) AS BIGINT)")
         .as("n_tok"),
@@ -261,7 +258,6 @@ object QualityClassifier {
        |       kept_tokens * 10000 // (SELECT t FROM tot) AS kept_token_bp
        |FROM k ORDER BY thr""".stripMargin
     }, bench = true) { (s, d) =>
-    graft.functions.QualityScoreExpression.register(s)
     val sc = Tables.documents(s, d).select(
       expr("quality_score(text)").as("score"),
       expr("CAST(size(filter(split(text, ' '), t -> t <> '')) AS BIGINT)")
@@ -330,7 +326,6 @@ object QualityClassifier {
        |FROM bk JOIN cal ON cal.i = bk.b
        |ORDER BY decile""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    graft.functions.QualityScoreExpression.register(s)
     val sc = docs.select(col("doc_id"),
       expr("quality_score(text)").as("score"))
     val (ranked, n, _) = graft.operators.OrderStats.withGlobalRank(sc,

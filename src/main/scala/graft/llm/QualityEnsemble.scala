@@ -90,9 +90,6 @@ object QualityEnsemble {
     * heuristic gate rides the b245 expression for free. Input columns
     * other than the two consumed intermediates pass through. */
   private[graft] def withFusedFlags(docs: DataFrame): DataFrame = {
-    val sp = docs.sparkSession
-    graft.functions.QualityScoreExpression.register(sp)
-    graft.functions.RepetitionStatsExpression.register(sp)
     docs
       .withColumn("_score", expr("quality_score(text)"))
       .withColumn("_st", expr("repetition_stats(text)"))

@@ -198,7 +198,6 @@ object Quantize {
     * broadcast-probe plan. The quadratic exact pass is the measurement
     * harness at gate SFs — production audits recall on a sampled slice. */
   private val b127 = entryNoOracle("b127_quantized_ann_recall") { (s, d) =>
-    graft.functions.DotProductExpression.register(s)
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val thr = clippedDimStats(emb).select(col("dim"), col("scale_f"))
       .collect().sortBy(_.getLong(0)).map(_.getDouble(1))
@@ -276,7 +275,6 @@ object Quantize {
     * their quantizers exploit what structure the data has instead of a
     * data-oblivious projection.) */
   def projected(emb: DataFrame): DataFrame = {
-    graft.functions.RandomProjectExpression.register(emb.sparkSession)
     emb.select(col("vec_id"), expr("random_project(embedding)").as("y"))
   }
 

@@ -69,7 +69,6 @@ object SemDedup {
     * norm is the native dot_i64 (integer sums are order-insensitive, so
     * the fused loop is bit-equal to any fold spelling). */
   def quantize(embeddings: DataFrame): DataFrame = {
-    graft.functions.LongVecExpressions.register(embeddings.sparkSession)
     embeddings.select(col("vec_id"),
         transform(col("embedding"),
           x => floor(x.cast("double") * QuantScale + lit(0.5d)).cast("long"))
@@ -93,7 +92,6 @@ object SemDedup {
     * compare — distance then seed-id tiebreak), one fused codegen'd
     * projection with no exchange and no interpreted lambdas. */
   def assignCells(quantized: DataFrame, seedRows: Array[(Long, Seq[Long])]): DataFrame = {
-    graft.functions.LongVecExpressions.register(quantized.sparkSession)
     require(seedRows.nonEmpty, "assignCells needs at least one seed")
     val cand = seedRows.toIndexedSeq.map { case (cid, cv) =>
       val arr = cv.mkString("array(", "L, ", "L)")

@@ -25,11 +25,8 @@ object Similarity {
     * [[graft.functions.DotProductExpression]] — same left-to-right
     * summation order as DuckDB's list_dot_product (bit-identical values),
     * but a fused primitive loop instead of two interpreted HOF lambdas
-    * per element. Registered by GraftExtensions or [[register]]. */
+    * per element. Provided by [[graft.functions.Natives]]. */
   private def dot(a: String, b: String) = expr(s"dot_f64($a, $b)")
-
-  private def register(s: org.apache.spark.sql.SparkSession): Unit =
-    graft.functions.DotProductExpression.register(s)
 
   private def withNorm(df: DataFrame): DataFrame =
     df.select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -52,7 +49,6 @@ object Similarity {
       |           ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rn
       |  FROM pairs) t
       |WHERE rn <= 10 ORDER BY probe_id, rn""".stripMargin, bench = true) { (s, d) =>
-    register(s)
     val v = withNorm(Tables.embeddings(s, d))
     val probes = v.filter(col("vec_id") < 20)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pnorm"))
@@ -96,7 +92,6 @@ object Similarity {
     * naive path generate identical candidates. */
   def candidatePairs(embeddings: DataFrame,
       bucketCap: Option[Int] = Some(LshCaps.DefaultBucketCap)): DataFrame = {
-    graft.functions.SignLshBandsExpression.register(embeddings.sparkSession)
     // posexplode_outer: constant 4-element band array, never empty (and
     // the non-outer Generate guard would re-evaluate it per row)
     val banded = embeddings
@@ -123,7 +118,6 @@ object Similarity {
     * shifted by 1e6; LSH must surface them at cosine 1.0). Approximate by
     * design → no SQL oracle; recall properties in SimilaritySpec. */
   private val b44lsh = entryNoOracle("b44_similarity_lsh") { (s, d) =>
-    register(s)
     val base = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val withDups = base.unionByName(
       base.filter(col("vec_id") < 10)
@@ -160,8 +154,7 @@ object Similarity {
     * SFs; at 100 TB recall is audited the same way on a sampled slice,
     * never the full corpus. */
   private val b44recall = entryNoOracle("b44_lsh_rule_recall") { (s, d) =>
-    register(s)
-    // Verify/Bench sessions are extension-less — install the rule there
+    // Sessions.local sessions are extension-less — install the rule there
     // (no-op under GraftExtensions; see RuleInstall's idempotence note)
     graft.plans.RuleInstall.ensure(s, graft.plans.CosineLshRewrite)
     val tau = 0.3
@@ -258,7 +251,6 @@ object Similarity {
       |  SELECT r.n, e.b FROM reach r JOIN edges e ON e.a = r.m)
       |SELECT n AS vec_id, min(m) AS component
       |FROM reach GROUP BY n ORDER BY vec_id""".stripMargin) { (s, d) =>
-    register(s)
     val aug = plantedCorpus(s, d)
     val pairs = verifyCosine(candidatePairs(aug, bucketCap = None), aug, threshold = 0.9)
       .select(col("a"), col("b"))
@@ -316,7 +308,6 @@ object Similarity {
          |GROUP BY t.k, t.probe_id
          |ORDER BY t.k, t.probe_id""".stripMargin
     }) { (s, d) =>
-    register(s)
     val base = Tables.embeddings(s, d)
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -388,7 +379,6 @@ object Similarity {
       |            ELSE 'video/mp4' END AS media_kind
       |FROM topk t JOIN documents d ON d.doc_id = t.neighbor_id
       |ORDER BY t.probe_id, t.rn""".stripMargin) { (s, d) =>
-    register(s)
     val v = withNorm(Tables.embeddings(s, d))
     val probes = v.filter(col("vec_id") < 20)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("norm").as("pnorm"))

@@ -172,12 +172,11 @@ object SpanDedup {
       dupOccurrences(docs, SpanWords, hashedGramKey, materializeOcc)
     // materialize the per-doc relation eagerly (dup-mass-sized), then
     // release the persisted occurrence relation — nothing persisted
-    // escapes the operator
+    // escapes the operator, not even when the checkpoint fails
     val perDoc =
-      if (materializeOcc) {
-        val pd = perDocCov(dup, SpanWords).localCheckpoint(true)
-        release(); pd
-      } else perDocCov(dup, SpanWords)
+      if (materializeOcc)
+        try perDocCov(dup, SpanWords).localCheckpoint(true) finally release()
+      else perDocCov(dup, SpanWords)
     rebuildFromCov(docs, perDoc)
   }
 
@@ -340,10 +339,8 @@ object SpanDedup {
         s"""array_distinct(flatten(transform(ivs,
            |  v -> sequence(v.p0, v.p1 + ${GramK - 1}))))""".stripMargin).as("cov"))
     val perDoc =
-      if (materializeOcc) {
-        val pd = perDoc0.localCheckpoint(true)
-        release(); pd
-      } else perDoc0
+      if (materializeOcc) try perDoc0.localCheckpoint(true) finally release()
+      else perDoc0
     rebuildFromCov(docs, perDoc)
   }
 

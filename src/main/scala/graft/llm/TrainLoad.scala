@@ -117,7 +117,6 @@ object TrainLoad {
     * sort; the manifest is what both the trainer and every eval job read
     * so they can never disagree about membership. */
   def splitManifest(docs: DataFrame): DataFrame = {
-    graft.functions.PolyFoldExpression.register(docs.sparkSession)
     docs.select(col("doc_id"), col("source"),
         splitCol.as("split"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
@@ -149,7 +148,6 @@ object TrainLoad {
     * complete-mode aggregate; the stats are count-source-agnostic (the
     * B125/B133 split). */
   private[llm] def docTokStats(docs: DataFrame): DataFrame = {
-    graft.functions.BpeEncodeExpression.register(docs.sparkSession)
     docs.select(col("source"),
         size(split(col("text"), " ")).cast("long").as("words"),
         expr("bpe_encode(text)").as("ids"),
@@ -308,7 +306,6 @@ object TrainLoad {
        |                               ORDER BY k, doc_id) AS BIGINT) AS pos,
        |       doc_id
        |FROM keyed ORDER BY tier, shard, pos""".stripMargin) { (s, d) =>
-    graft.functions.PolyFoldExpression.register(s)
     val docs = Tables.documents(s, d)
     val wTier = Window.partitionBy(col("source"))
       .orderBy(col("score_fp").desc, col("doc_id"))
@@ -409,7 +406,6 @@ object TrainLoad {
        |       count(*) >= ${Decontaminate.MinOverlap} AS contaminated
        |FROM tgrams JOIN egrams USING (gram)
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-    graft.functions.PolyFoldExpression.register(s)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       .withColumn("h",
         expr("poly_fold(concat('split:', CAST(doc_id AS STRING), ':v1')) % 10000"))

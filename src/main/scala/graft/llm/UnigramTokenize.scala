@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.functions._
 import graft.Registry._
-import graft.functions.{UnigramEncodeExpression, WordPieceEncodeExpression}
+import graft.functions.UnigramEncodeExpression
 import graft.sources.Tables
 
 /** B152 — deterministic UNIGRAM-LM subword tokenization (SURVEY §2C
@@ -89,7 +89,6 @@ object UnigramTokenize {
   private val b152 = entry("b152_unigram_tokenize", unigramOracleSql,
     bench = true) {
     (s, d) =>
-      UnigramEncodeExpression.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), expr("unigram_encode(text)").as("ids"))
         .withColumn("n_tokens",
@@ -150,7 +149,6 @@ object UnigramTokenize {
     * implementation. */
   private val b155 = entry("b155_wordpiece_tokenize", wordpieceOracleSql) {
     (s, d) =>
-      WordPieceEncodeExpression.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"), expr("wordpiece_encode(text)").as("ids"))
         .withColumn("n_tokens",
@@ -234,9 +232,6 @@ object UnigramTokenize {
          |       CAST(base.chars * 10000 // tokens AS BIGINT) AS cpt_bp
          |FROM per, base ORDER BY tokenizer""".stripMargin
     }) { (s, d) =>
-    graft.functions.BpeEncodeExpression.register(s)
-    UnigramEncodeExpression.register(s)
-    WordPieceEncodeExpression.register(s)
     def ntoks(e: String) =
       when(expr(e) === "", lit(0L))
         .otherwise(size(split(expr(e), " ")).cast("long"))
@@ -291,7 +286,6 @@ object UnigramTokenize {
        |              columns={probe_id: 'BIGINT', text: 'VARCHAR'})
        |ORDER BY probe_id""".stripMargin) { (s, _) =>
     import org.apache.spark.sql.types._
-    graft.functions.UnigramByteFallback.register(s)
     val schema = StructType(Seq(
       StructField("probe_id", LongType), StructField("text", StringType)))
     s.read.option("header", "true").schema(schema).csv(bytefallbackCsv)

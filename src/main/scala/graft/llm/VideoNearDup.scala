@@ -119,7 +119,6 @@ object VideoNearDup {
          |FROM m WHERE containment_bp >= ${SetSimJoin.ContainTauBp}
          |ORDER BY contained_vid, container_vid""".stripMargin
     }) { (s, d) =>
-    graft.functions.PolyFoldExpression.register(s)
     val vids = Tables.documents(s, d).filter(col("doc_id") % 3 === 2)
       .select(col("doc_id").as("vid"),
         expr(Winnowing.polyFoldSpark("text")).as("h"))

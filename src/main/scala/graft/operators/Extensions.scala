@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Registry._
-import graft.functions.{FeatureIdExpression, TopKAgg, Udfs, WeightedMeanAgg}
+import graft.functions.{TopKAgg, Udfs, WeightedMeanAgg}
 import graft.sources.Tables
 
 /** SURVEY §2B extension-path operators: B3 (CSV scan), B4 (sorted sink +
@@ -156,7 +156,6 @@ object Extensions {
       |         sin(radians((-104.9903 - (c_custkey % 360 - 180 + 0.5)) / 2)) ^ 2
       |       )), 4) AS dist_km
       |FROM customer ORDER BY c_custkey""".stripMargin) { (s, d) =>
-    FeatureIdExpression.register(s)
     val hav = udf(Udfs.haversineKm _)
     val lat = (col("c_custkey") % 160 - 80 + 0.5).cast("double")
     val lon = (col("c_custkey") % 360 - 180 + 0.5).cast("double")

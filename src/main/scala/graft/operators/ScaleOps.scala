@@ -365,7 +365,6 @@ object ScaleOps {
       |  AND l_partkey <= pklo + (pkhi - pklo) // 20
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-    graft.functions.ZOrderExpression.register(s)
     val li = Tables.lineitem(s, d)
     // O(1) driver row: bucketization boundaries (table stats at 100 TB)
     val b = li.agg(min("l_orderkey"), max("l_orderkey"),

@@ -5,9 +5,12 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Runtime installer for the graft optimizer rules on extension-less
-  * sessions. The Verify/Bench drivers build plain sessions, so entries
-  * exercising an injected rule install it via
-  * `experimental.extraOptimizations`; the test harness builds its session
+  * sessions. The mains build plain sessions ([[graft.Sessions.local]]),
+  * so the three entries exercising a rule install it via
+  * `experimental.extraOptimizations`. Unlike the natives, which every
+  * entry installs ([[graft.functions.Natives.install]]), the rules stay
+  * per entry: turning them on session-wide would change the plans of the
+  * entries that do not install them. The test harness builds its session
   * with `spark.sql.extensions=graft.GraftExtensions`, where the rule is
   * already in the optimizer. Installing again there would (a) apply the
   * rule twice per batch and (b) permanently widen shared session state

@@ -250,14 +250,7 @@ object SinglePartitionAudit {
     * given SF so allowlist bounds can be written/checked by hand. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-sp-audit")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("graft-sp-audit")
     val plans = plansFor(spark,
       graft.ExplainDump.dumpSet.map(e => e.name -> ((s: SparkSession) => e.q(s, sfDir))))
     val r = audit(plans)

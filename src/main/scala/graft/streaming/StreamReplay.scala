@@ -508,7 +508,6 @@ object StreamReplay {
     graft.llm.CorpusBudget.admissionOracleSql) { (s, d) =>
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    graft.functions.PolyFoldExpression.register(s)
     val pri = "poly_fold(concat('adm:', CAST(doc_id AS STRING)))"
     val docs = graft.sources.Tables.documents(s, d).select(
       col("doc_id"), col("source"),
@@ -1398,7 +1397,6 @@ object StreamReplay {
     }) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val CR = graft.llm.CorpusRelease
-    graft.functions.PolyFoldExpression.register(s)
     val docs = graft.sources.Tables.documents(s, d)
       .select(col("doc_id"), col("text"))
     val rel = graft.llm.CleanPipeline.hygieneRelease(docs) // checkpoints internally (r21)

@@ -1,7 +1,5 @@
 package graft.wildweb
 
-import org.apache.spark.sql.SparkSession
-
 /** A16 — the scheduled-invocation entrypoint (reference task.ts:47-50,
   * 161-164): one batch run = read landed envelopes → pipeline → submit →
   * error epilogue. Run via spark-submit on a schedule (the EventBridge/
@@ -17,12 +15,7 @@ import org.apache.spark.sql.SparkSession
 object WildWebJob {
   def main(args: Array[String]): Unit = {
     val Array(inputDir, submitUrl, range, nowIso) = args.take(4)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .appName("wildweb-etl")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.Sessions.local("wildweb-etl")
     try {
       val config = WildWebConfig(range, java.time.Instant.parse(nowIso))
       WildWebPipeline.run(spark, inputDir, config) match {

@@ -314,7 +314,6 @@ class CorpusBudgetSpec extends AnyFunSuite {
 
   test("B260: the synthetic domain is deterministic (JVM replay), an order" +
     " of magnitude finer-grained than source, and total (no doc unassigned)") {
-    graft.functions.PolyFoldExpression.register(spark)
     val got = docs.selectExpr("doc_id",
         s"${CorpusBudget.domainExprSpark} AS domain")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -335,7 +334,6 @@ class CorpusBudgetSpec extends AnyFunSuite {
     val manifest = SparkEntry.queries("b260_domain_share_quota")(spark, sf)
       .collect().map(r =>
         (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    graft.functions.PolyFoldExpression.register(spark)
     val totals = docs.selectExpr(
         s"${CorpusBudget.domainExprSpark} AS domain",
         "CAST(size(split(text, ' ')) AS BIGINT) AS n")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.llm.{Decontaminate, SpanDedup, TextDedup}
+import graft.llm.{CleanPipeline, Decontaminate, SpanDedup, TextDedup}
 import graft.sources.Tables
 
 /** Corpus-cleaning operators beyond doc-level dedup: benchmark
@@ -231,6 +231,10 @@ class CorpusCleanSpec extends AnyFunSuite {
       materializeOcc = false).queryExecution.sparkPlan.toString
     assert(plan.contains("Window"), plan.take(1500))
     assert(!plan.contains("Exchange SinglePartition"), plan.take(1500))
+    // and the shipping entry's default materialized path, under AQE
+    val shipped = SparkEntry.queries("b244_exact_substr_dedup")(spark, sf)
+      .queryExecution.executedPlan.toString
+    assert(!shipped.contains("Exchange SinglePartition"), shipped.take(1500))
   }
 
   test("B244: materializeOcc is result-invisible (recompute path ≡ persisted path)") {
@@ -239,5 +243,31 @@ class CorpusCleanSpec extends AnyFunSuite {
     val b = SpanDedup.removeLongRepeats(docs, materializeOcc = false)
       .collect().map(_.toString).toSeq
     assert(a === b, "occurrence materialization changed b244 results")
+  }
+
+  test("a failing span-pass checkpoint leaves no relation persisted") {
+    val boom = udf { (id: Long) =>
+      if (id >= 0L) throw new IllegalStateException("planted text failure")
+      "never"
+    }
+    val docs = spark.range(64).select(col("id").as("doc_id"),
+      boom(col("id")).as("text"))
+    val sc = spark.sparkContext
+    // a persist whose first job fails registers a cache entry but never
+    // builds its RDD, so count the entries too (numCachedEntries is
+    // private[spark] in Scala, public in bytecode)
+    val cache = spark.sharedState.cacheManager
+    def entries = cache.getClass.getMethod("numCachedEntries").invoke(cache)
+    for ((label, run) <- Seq[(String, () => Any)](
+        "hygieneRelease" -> (() => CleanPipeline.hygieneRelease(docs)),
+        "removeRepeatedSpans" -> (() => SpanDedup.removeRepeatedSpans(docs)),
+        "removeLongRepeats" -> (() => SpanDedup.removeLongRepeats(docs)))) {
+      val (rdds, cached) = (sc.getPersistentRDDs.size, entries)
+      val e = intercept[Exception](run())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("planted text failure")), e)
+      assert(sc.getPersistentRDDs.size === rdds, label)
+      assert(entries === cached, label)
+    }
   }
 }

@@ -16,7 +16,6 @@ class CorpusReleaseSpec extends AnyFunSuite {
     .select(col("doc_id"), col("text"), col("source"))
 
   private lazy val rel = {
-    graft.functions.PolyFoldExpression.register(spark)
     CleanPipeline.hygieneRelease(docs.select(col("doc_id"), col("text")))
       .localCheckpoint(true)
   }
@@ -88,6 +87,21 @@ class CorpusReleaseSpec extends AnyFunSuite {
       when(col("doc_id") % 10 === 0, concat(col("text"), lit(" zzmut")))
         .otherwise(col("text")).as("text"))
     assert(failing(mutated) === Seq("fingerprint:immutable_segments"))
+  }
+
+  test("fpOf folds the text of a candidate carrying a stale fp column;" +
+    " only an explicit folded = true reuses it") {
+    def segs(fp: DataFrame): Map[Long, (Long, Long)] = fp.collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val relF = rel.withColumn("fp", expr(CorpusRelease.rowFoldSpark))
+    val mutated = relF.withColumn("text",
+      when(col("doc_id") % 10 === 0, concat(col("text"), lit(" zzmut")))
+        .otherwise(col("text")))
+    val clean = segs(CorpusRelease.fpOf(rel))
+    assert(segs(CorpusRelease.fpOf(relF, folded = true)) === clean)
+    val stale = segs(CorpusRelease.fpOf(mutated))
+    assert(stale(0L) !== clean(0L), "a stale fp column hid a mutated row")
+    assert(stale - 0L === clean - 0L)
   }
 
   test("a dropped published partition trips the fingerprint leg in the" +
@@ -163,7 +177,7 @@ class CorpusReleaseSpec extends AnyFunSuite {
     val card = CorpusAnalytics.datasetCard(relsrc).collect()
       .map(r => s"card:${r.getString(0)}:${r.getString(1)}" -> r.getLong(2))
       .toMap
-    val man = ModelReady.modelReadyManifest(spark, relsrc)
+    val man = ModelReady.modelReadyManifest(relsrc)
     val manMap = Map(
       "manifest:n_sequences" ->
         man.select(countDistinct("seq_id")).head().getLong(0),

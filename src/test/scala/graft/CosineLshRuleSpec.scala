@@ -19,7 +19,6 @@ class CosineLshRuleSpec extends AnyFunSuite {
   private val sf = TestSession.sf0001
 
   private def vecs = {
-    graft.functions.DotProductExpression.register(spark)
     val base = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
     val withDups = base.unionByName(
       base.filter(col("vec_id") < 10)
@@ -166,7 +165,6 @@ class CosineLshRuleSpec extends AnyFunSuite {
     // cosine ≈ 0.97-0.99; expected banded sign-LSH recall at that angle is
     // ~0.99 (p_plane = 1 - θ/π ≈ 0.95, band⁴-of-4 ≈ 1-(1-0.95⁴)⁴), so 0.9
     // is a robust statistical floor for a fixed seed.
-    graft.functions.DotProductExpression.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val dim = 16

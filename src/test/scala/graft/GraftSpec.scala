@@ -17,6 +17,9 @@ object TestSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // getOrCreate hands back any live session, and BenchSweepSpec leaves
+    // an extension-less one behind: install the natives either way
+    graft.functions.Natives.install(s)
     s
   }
   // self-healing (not a lazy val): BenchSweepSpec deliberately kills the

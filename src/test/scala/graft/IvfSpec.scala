@@ -29,7 +29,6 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("k-means refinement improves average within-cell cosine (spherical Lloyd)") {
-    graft.functions.DotProductExpression.register(spark)
     val e = Tables.embeddings(spark, sf)
     val k = Ivf.defaultNumCells(e.count())
     val vecs = Ivf.asDouble(e)
@@ -51,7 +50,6 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("cell-partitioned layout: pruned on-disk search equals in-memory, prunes dirs") {
-    graft.functions.DotProductExpression.register(spark)
     val e = Tables.embeddings(spark, sf)
     val k = Ivf.defaultNumCells(e.count())
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_layout").toString

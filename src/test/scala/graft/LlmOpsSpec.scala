@@ -77,7 +77,6 @@ class MinHashLshSpec extends AnyFunSuite {
   }
 
   test("native shingle_hashes equals distinct xxhash64 of declarative shingles") {
-    graft.functions.ShingleHashesExpression.register(spark)
     import spark.implicits._
     // corpus + spacing/unicode edge rows the synthetic data never hits:
     // double/leading/trailing spaces (empty tokens), <3 words, empty text,
@@ -109,7 +108,6 @@ class MinHashLshSpec extends AnyFunSuite {
   }
 
   test("shingle_hashes property: random spacing/unicode strings match the declarative spelling") {
-    graft.functions.ShingleHashesExpression.register(spark)
     import spark.implicits._
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
@@ -154,7 +152,6 @@ class MinHashLshSpec extends AnyFunSuite {
   }
 
   test("minhash_sigs of an empty array is NULL, matching the agg spelling's no-row") {
-    graft.functions.MinHashSigExpression.register(spark)
     import spark.implicits._
     // a shingle-less doc has no signature: the groupBy-min spelling emits
     // no row, so the session-registered function must not emit a sentinel
@@ -171,7 +168,6 @@ class MinHashLshSpec extends AnyFunSuite {
   }
 
   test("native lsh_bands equals the transform+slice+xxhash64 spelling") {
-    graft.functions.LshBandsExpression.register(spark)
     val sigs = MinHashLsh.signaturesNative(
       Tables.documents(spark, sf).select(col("doc_id"), col("text")))
     val both = sigs.select(col("doc_id"),
@@ -201,7 +197,6 @@ class MinHashLshSpec extends AnyFunSuite {
   }
 
   test("array-intersect verify is bit-identical to the exploded-join verify") {
-    graft.functions.ShingleHashesExpression.register(spark)
     // the r6 hot-path reformulation (verifyJaccardFromArrays) must agree
     // with the exploded (doc, sh) join spelling on EVERY candidate pair
     val docs = docsWithDups
@@ -465,7 +460,6 @@ class CodepointSplitSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("native trigram_hashes equals the split('')-HOF spelling and codegens") {
-    graft.functions.TrigramHashExpression.register(spark)
     import spark.implicits._
     val df = probes.toDF("text") // all ≥ 3 codepoints (the LangId gate)
     val rows = df

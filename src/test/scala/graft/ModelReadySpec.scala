@@ -14,7 +14,6 @@ class ModelReadySpec extends AnyFunSuite {
 
   test("B131: manifest covers exactly the budget-kept, BPE-nonempty docs — " +
     "contiguously, with full sequences except the last") {
-    graft.functions.BpeEncodeExpression.register(spark)
     val docs = Tables.documents(spark, sf)
     val manifest = SparkEntry.queries("b131_model_ready_pipeline")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

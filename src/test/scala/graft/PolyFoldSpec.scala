@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{LongVecExpressions, PolyFoldExpression}
 import graft.llm.Winnowing
 
 /** The native poly_fold / dot_i64 / sqdist_i64 Expressions must be
@@ -19,7 +18,6 @@ class PolyFoldSpec extends AnyFunSuite {
     "mixed ascii ünd 中文 🤖 end", "sem:4999")
 
   test("poly_fold ≡ HOF SQL fold ≡ Winnowing.polyFoldString on all planes") {
-    PolyFoldExpression.register(spark)
     val df = samples.toDF("s")
       .withColumn("native", expr("poly_fold(s)"))
       .withColumn("hof", expr(Winnowing.polyFoldSpark("s")))
@@ -31,7 +29,6 @@ class PolyFoldSpec extends AnyFunSuite {
   }
 
   test("dot_i64 / sqdist_i64 ≡ HOF spellings, null on length mismatch") {
-    LongVecExpressions.register(spark)
     val vecs = Seq(
       (Seq(1L, -2L, 3L), Seq(4L, 5L, -6L)),
       (Seq(-127L, 127L, 0L), Seq(127L, -127L, 1L)),

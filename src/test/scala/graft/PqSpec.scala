@@ -17,7 +17,6 @@ class PqSpec extends AnyFunSuite {
   private lazy val emb = Tables.embeddings(spark, sf)
 
   test("identical vectors get identical codes (encode is content-determined)") {
-    graft.functions.DotProductExpression.register(spark)
     // plant exact duplicates under shifted ids (the b75 corpus rule)
     val dups = emb.filter(col("vec_id") % 5 === 0)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"), col("label"))
@@ -33,7 +32,6 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("codes have shape m with values in [0, ksub)") {
-    graft.functions.DotProductExpression.register(spark)
     val coded = Pq.encode(emb, Pq.codebook(emb, M, KSUB), M)
     assert(coded.filter(size(col("codes")) =!= M).count() === 0)
     assert(coded.filter(
@@ -41,7 +39,6 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("codebook members reconstruct exactly (quantization error zero in the coded limit)") {
-    graft.functions.DotProductExpression.register(spark)
     // A vector that IS a codebook sample vector must assign each of its
     // subvectors to its own codebook entry at distance 0 — i.e. decode of
     // its codes reproduces the vector bit-exactly. Pins both the encoder's
@@ -70,7 +67,6 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("codebook refinement is Lloyd-monotone and keeps code ids valid") {
-    graft.functions.DotProductExpression.register(spark)
     val sampled = Pq.codebook(emb, M, KSUB)
     val refined = Pq.refineCodebook(emb, M, KSUB, iters = 2)
     val e0 = Pq.reconstructionError(emb, sampled, M)
@@ -86,7 +82,6 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("recall@10 vs exact brute-force top-10 on the b44 probe set") {
-    graft.functions.DotProductExpression.register(spark)
     val exact = SparkEntry.queries("b44_similarity_bruteforce")(spark, sf)
       .select(col("probe_id"), col("neighbor_id"))
       .collect().groupBy(_.getLong(0)).view
@@ -107,7 +102,6 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("IVFADC scoring join touches only probed cells (pruning ratio)") {
-    graft.functions.DotProductExpression.register(spark)
     val nCells = 25
     val nProbe = 5
     val probeFilter = col("vec_id") < 20
@@ -126,7 +120,6 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("IVFADC equals exhaustive ADC in the nProbe = nCells limit") {
-    graft.functions.DotProductExpression.register(spark)
     // with every cell probed the coarse quantizer filters nothing, so the
     // composition must reproduce searchAdc EXACTLY — pins that the cell
     // routing/join machinery only ever PRUNES, never alters scores
@@ -141,7 +134,6 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("on-disk IVFADC index is result-equal to in-memory and prunes cells at the scan") {
-    graft.functions.DotProductExpression.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx").toString
     Pq.writeIvfPqIndex(emb, dir)
     val fromIndex = Pq.searchIvfAdcFromIndex(spark, dir,
@@ -160,7 +152,6 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("IVFADC recall@10 vs exact brute-force top-10 on the b44 probe set") {
-    graft.functions.DotProductExpression.register(spark)
     val exact = SparkEntry.queries("b44_similarity_bruteforce")(spark, sf)
       .select(col("probe_id"), col("neighbor_id"))
       .collect().groupBy(_.getLong(0)).view

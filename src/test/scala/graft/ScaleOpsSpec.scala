@@ -102,7 +102,6 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("z_order2 matches the JVM interleave twin and handles nulls/masking") {
-    graft.functions.ZOrderExpression.register(spark)
     import spark.implicits._
     val probes = Seq[(java.lang.Long, java.lang.Long)](
       (0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L), (12345L, 67890L),

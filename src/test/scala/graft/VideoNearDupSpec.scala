@@ -68,7 +68,6 @@ class VideoNearDupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // rebuild arrs exactly as the entry does
     import org.apache.spark.sql.functions._
-    graft.functions.PolyFoldExpression.register(spark)
     val vids = graft.sources.Tables.documents(spark, sf)
       .filter(col("doc_id") % 3 === 2)
       .select(col("doc_id").as("vid"),

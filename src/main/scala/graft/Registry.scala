@@ -29,15 +29,16 @@ object Registry {
   )
 
   def entry(name: String, oracle: String, bench: Boolean = false)(q: Q): Entry =
-    Entry(name, withNatives(q), Some(oracle), bench)
+    Entry(name, scoped(name, q), Some(oracle), bench)
 
   def entryNoOracle(name: String, bench: Boolean = false)(q: Q): Entry =
-    Entry(name, withNatives(q), None, bench)
+    Entry(name, scoped(name, q), None, bench)
 
   /** Installs the native functions before the query is built, so every
-    * entry runs in any session, extension-less ones included. */
-  private def withNatives(q: Q): Q = { (s, d) =>
+    * entry runs in any session, extension-less ones included, and builds
+    * it in a [[graft.exec.QueryScope]] named after the entry. */
+  private def scoped(name: String, q: Q): Q = { (s, d) =>
     graft.functions.Natives.install(s)
-    q(s, d)
+    graft.exec.QueryScope(name)(q(s, d))
   }
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B299 — AUDIO perceptual near-dup (VERDICT r18 "what's missing" #1: the
@@ -299,7 +300,7 @@ object AudioFingerprint {
   private val b299 = entry(
     "b299_audio_neardup", audioNeardupOracleSql,
     bench = true) { (s, d) =>
-    val bits = bitRows(s, d).localCheckpoint(true) // feeds bands + verify
+    val bits = QueryScope.materialize("bits")(bitRows(s, d)) // feeds bands + verify
     PerceptualHash.bandedNearDupPairs(bits, AudioIdOffset)
   }
 

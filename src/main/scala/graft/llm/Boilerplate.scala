@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B300/B301 — BOILERPLATE / MAIN-CONTENT EXTRACTION (VERDICT r18
@@ -228,7 +229,7 @@ object Boilerplate {
     * shared by B300 and B305's per-batch admission so the two cannot
     * drift. */
   private[graft] def extractionReport(hd: DataFrame): DataFrame = {
-    val blocks = extractBlocks(hd).localCheckpoint(true) // feeds counts + main
+    val blocks = QueryScope.materialize("blocks")(extractBlocks(hd)) // feeds counts + main
     val nb = blocks.groupBy("doc_id").agg(count(lit(1)).as("n_blocks"))
     hd.join(nb, "doc_id")
       .join(extractMain(blocks), Seq("doc_id"), "left_outer")

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** The corpus-CLEANING capstone (SURVEY §2B round-6 row B94) — the hygiene
@@ -103,9 +104,10 @@ object CleanPipeline {
     * dup probe, per-doc rebuild, decontamination, dedup — executes as
     * ONE job instead of a span-checkpoint job followed by a chain job
     * (the r21 b270 phase probe measured the two-job shape at 2.7 + 1.5 s
-    * wall; the lazy-shared span relations release right after the
-    * checkpoint, so nothing persisted escapes). Shared by all five so
-    * they cannot drift. Expects (doc_id, text).
+    * wall). The span relations are persisted in this function's own
+    * [[graft.exec.QueryScope]], which releases them when it returns or
+    * fails, so nothing persisted escapes. Shared by all five so they
+    * cannot drift. Expects (doc_id, text).
     *
     * NEGATIVE RESULT (r20 A/B at sf0.1/32, still binding): spreading
     * the one-split parquet input across defaultParallelism before the
@@ -113,7 +115,7 @@ object CleanPipeline {
     * own width now comes from the occ size rule inside
     * [[SpanDedup.removeRepeatedSpansShared]]. */
   private[graft] def hygieneRelease(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+      : org.apache.spark.sql.DataFrame = QueryScope("hygieneRelease") {
     // 1. span removal over the plain corpus; FULLY-DELETED docs drop out.
     // "Fully deleted" is n_removed = n_words (zero kept words), NOT
     // clean_text = "" — an originally-empty doc also has empty clean_text
@@ -123,9 +125,8 @@ object CleanPipeline {
     // survivor anti-join's left side); both consumers share the span
     // pass's persisted per-doc covered relation, so the re-run is the
     // cheap doc-keyed rebuild join only.
-    val (spanned, releaseSpan) =
-      SpanDedup.removeRepeatedSpansShared(docs.select(col("doc_id"), col("text")))
-    val cleaned = spanned
+    val cleaned = SpanDedup
+      .removeRepeatedSpansShared(docs.select(col("doc_id"), col("text")))
       .filter(col("n_removed") < col("n_words"))
       .select(col("doc_id"), col("clean_text").as("text"))
     // 2. decontamination on CLEANED text vs the original benchmark split
@@ -134,13 +135,10 @@ object CleanPipeline {
     val contaminated = Decontaminate.overlapReport(corpus, bench)
       .filter(col("contaminated")).select(col("doc_id"))
     val survivors = corpus.join(contaminated, Seq("doc_id"), "left_anti")
-    // 3. exact dedup on the cleaned text, canonical min id; the span
-    // relations are released even when the checkpoint fails
-    try survivors.groupBy(col("text"))
+    // 3. exact dedup on the cleaned text, canonical min id
+    QueryScope.materialize("rel")(survivors.groupBy(col("text"))
       .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"), col("text"))
-      .localCheckpoint(true)
-    finally releaseSpan()
+      .select(col("doc_id"), col("text")))
   }
 
   private val b94 = entry(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** Corpus-level dataset analytics — the monitoring tables a training-data
@@ -72,10 +73,9 @@ object CorpusAnalytics {
        |ORDER BY decile""".stripMargin) { (s, d) =>
     import s.implicits._
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val width = broadcast(docs.agg(
+    val width = broadcast(QueryScope.materialize("width")(docs.agg(
       expr(s"CAST((max(doc_id) + 1 + ${Deciles - 1}) div $Deciles AS BIGINT)")
-        .as("w"))
-      .localCheckpoint(true))
+        .as("w"))))
     val perDocs = docs.crossJoin(width)
       .select(expr("doc_id div w + 1").as("k"),
         size(filter(split(col("text"), " "), x => x =!= "")).cast("long").as("nt"))
@@ -204,9 +204,9 @@ object CorpusAnalytics {
        |FROM sh s JOIN firsts f USING (shingle)
        |GROUP BY s.doc_id
        |ORDER BY s.doc_id""".stripMargin, bench = true) { (s, d) =>
-    val sh = TextDedup.shingles(MinHashLsh.spreadNarrowInput(
-      Tables.documents(s, d).select(col("doc_id"), col("text"))))
-      .localCheckpoint(true) // feeds the min agg AND the novelty join
+    // feeds the min agg AND the novelty join
+    val sh = QueryScope.materialize("sh")(TextDedup.shingles(MinHashLsh.spreadNarrowInput(
+      Tables.documents(s, d).select(col("doc_id"), col("text")))))
     val firsts = sh.groupBy("shingle").agg(min("doc_id").as("fd"))
     sh.join(firsts, "shingle")
       .groupBy("doc_id")
@@ -351,31 +351,29 @@ object CorpusAnalytics {
     // width comes from a propagated (not scan-rooted) size estimate —
     // harmless here because a union of two scan projections keeps
     // additive sizeInBytes; see the spreadNarrowInput scaladoc caveat
-    val hArr = MinHashLsh.spreadNarrowInput(aug.select(col("doc_id"), col("text")))
-      .select(col("doc_id"), expr("shingle_hashes(text)").as("hs"))
-      .filter(size(col("hs")) > 0)
-      .cache()
-    try {
-      val sigs = hArr.select(col("doc_id"), expr("minhash_sigs(hs)").as("sig"))
-      // bucketCap = None: the tau = 1 recall proof must be unconditional
-      val cands = MinHashLsh.candidatePairs(sigs, bucketCap = None)
-        .select(col("doc_a").as("da"), col("doc_b").as("db"))
-      val a = hArr.select(col("doc_id").as("da"), col("hs").as("hs_a"))
-      val b = hArr.select(col("doc_id").as("db"), col("hs").as("hs_b"))
-      val dup = cands.join(a, "da").join(b, "db")
-        .filter(size(array_intersect(col("hs_a"), col("hs_b"))).cast("long") * 2L ===
-          size(col("hs_a")).cast("long") + size(col("hs_b")).cast("long"))
-        .select(col("da"), col("db"))
-      val srcs = aug.select(col("doc_id"), col("source"))
-      dup
-        .join(srcs.select(col("doc_id").as("da"), col("source").as("src_a")), "da")
-        .join(srcs.select(col("doc_id").as("db"), col("source").as("src_b")), "db")
-        .select(least(col("src_a"), col("src_b")).as("src_lo"),
-          greatest(col("src_a"), col("src_b")).as("src_hi"))
-        .groupBy("src_lo", "src_hi").agg(count(lit(1)).as("n_dup_pairs"))
-        .localCheckpoint(true) // materialize before releasing the cache
-        .orderBy("src_lo", "src_hi")
-    } finally hArr.unpersist()
+    val hArr = QueryScope.persist(
+      MinHashLsh.spreadNarrowInput(aug.select(col("doc_id"), col("text")))
+        .select(col("doc_id"), expr("shingle_hashes(text)").as("hs"))
+        .filter(size(col("hs")) > 0))
+    val sigs = hArr.select(col("doc_id"), expr("minhash_sigs(hs)").as("sig"))
+    // bucketCap = None: the tau = 1 recall proof must be unconditional
+    val cands = MinHashLsh.candidatePairs(sigs, bucketCap = None)
+      .select(col("doc_a").as("da"), col("doc_b").as("db"))
+    val a = hArr.select(col("doc_id").as("da"), col("hs").as("hs_a"))
+    val b = hArr.select(col("doc_id").as("db"), col("hs").as("hs_b"))
+    val dup = cands.join(a, "da").join(b, "db")
+      .filter(size(array_intersect(col("hs_a"), col("hs_b"))).cast("long") * 2L ===
+        size(col("hs_a")).cast("long") + size(col("hs_b")).cast("long"))
+      .select(col("da"), col("db"))
+    val srcs = aug.select(col("doc_id"), col("source"))
+    // materialized before the entry's scope releases hArr
+    val dupPairs = QueryScope.materialize("dupPairs")(dup
+      .join(srcs.select(col("doc_id").as("da"), col("source").as("src_a")), "da")
+      .join(srcs.select(col("doc_id").as("db"), col("source").as("src_b")), "db")
+      .select(least(col("src_a"), col("src_b")).as("src_lo"),
+        greatest(col("src_a"), col("src_b")).as("src_hi"))
+      .groupBy("src_lo", "src_hi").agg(count(lit(1)).as("n_dup_pairs")))
+    dupPairs.orderBy("src_lo", "src_hi")
   }
 
   /** B190 — DATASET CARD (Gebru et al. '21 "Datasheets for Datasets" /
@@ -454,14 +452,14 @@ object CorpusAnalytics {
     def row(section: String, metric: String, v: org.apache.spark.sql.DataFrame) =
       v.select(lit(section).as("section"), lit(metric).as("metric"),
         col(v.columns.head).cast("long").as("value"))
-    val corpusTotals = toks.agg(count(lit(1)).as("n_docs"),
-      sum("n_tok").as("n_tokens")).localCheckpoint(true)
+    val corpusTotals = QueryScope.materialize("corpusTotals")(toks.agg(count(lit(1)).as("n_docs"),
+      sum("n_tok").as("n_tokens")))
     val nTerms = docs
       .select(explode(split(col("text"), " ")).as("term"))
       .agg(countDistinct("term").as("n_terms"))
     // nearest-rank percentiles from the bounded distinct-length relation
-    val lens = toks.groupBy("n_tok").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true) // bounded (distinct lengths); feeds 2 windows
+    // bounded (distinct lengths); feeds 2 windows
+    val lens = QueryScope.materialize("lens")(toks.groupBy("n_tok").agg(count(lit(1)).as("cnt")))
     val cumW = Window.orderBy(col("n_tok"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = lens
@@ -469,14 +467,12 @@ object CorpusAnalytics {
       .crossJoin(broadcast(lens.agg(sum("cnt").as("total"))))
     def pct(p: Int) = cum.filter(col("cum") * 100 >= lit(p) * col("total"))
       .agg(min("n_tok").as(s"p$p"))
-    val dups = docs.groupBy("text").agg(count(lit(1)).as("c"))
+    val dups = QueryScope.materialize("dups")(docs.groupBy("text").agg(count(lit(1)).as("c"))
       .agg(count(lit(1)).as("n_distinct"),
-        (sum("c") - count(lit(1))).as("surplus"), max("c").as("max_copies"))
-      .localCheckpoint(true)
-    val src = docs.groupBy("source").agg(count(lit(1)).as("c"))
+        (sum("c") - count(lit(1))).as("surplus"), max("c").as("max_copies")))
+    val src = QueryScope.materialize("src")(docs.groupBy("source").agg(count(lit(1)).as("c"))
       .agg(count(lit(1)).as("n_sources"),
-        expr("max(c) * 10000 div sum(c)").as("top_share"))
-      .localCheckpoint(true)
+        expr("max(c) * 10000 div sum(c)").as("top_share")))
     row("corpus", "n_docs", corpusTotals.select("n_docs"))
       .unionByName(row("corpus", "n_tokens", corpusTotals.select("n_tokens")))
       .unionByName(row("corpus", "n_terms", nTerms))
@@ -634,9 +630,9 @@ object CorpusAnalytics {
        |FROM st WHERE total >= $TrendMinTotal
        |ORDER BY term""".stripMargin, bench = true) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val width = broadcast(docs.agg(
+    val width = broadcast(QueryScope.materialize("width")(docs.agg(
       expr(s"CAST((max(doc_id) + 1 + ${Deciles - 1}) div $Deciles AS BIGINT)")
-        .as("w")).localCheckpoint(true))
+        .as("w"))))
     val cnt = docs.crossJoin(width)
       .select(expr("doc_id div w + 1").as("k"),
         explode(split(col("text"), " ")).as("term"))

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B270 — THE CORPUS-RELEASE CAPSTONE: the one composition that takes the
@@ -334,16 +335,15 @@ object CorpusRelease {
     // overlap independent jobs) so their walls overlap instead of
     // serializing at DataFrame-construction time. Contents are
     // deterministic; only job submission order changes. r21 widened the
-    // pool to everything the final report consumes — the row-fold
-    // relation, the dataset card, the manifest rollup, the leakage legs
-    // — so the report action itself is a union of small checkpointed
-    // legs (the r20 shape left the card, the version fold and both
-    // candidates' fpOf folds in the final action: ~7 executor-CPU s of
-    // re-folded corpus text and a serial stage chain).
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    // concurrent set to everything the final report consumes — the
+    // row-fold relation, the dataset card, the manifest rollup, the
+    // leakage legs — so the report action itself is a union of small
+    // checkpointed legs (the r20 shape left the card, the version fold
+    // and both candidates' fpOf folds in the final action: ~7
+    // executor-CPU s of re-folded corpus text and a serial stage chain).
+    // Each leg is a lazy val that QueryScope.parallel forces on its own
+    // thread; fpPrev forces relF on the same thread.
+    //
     // ADVICE r20: the corrLeak decomposition below counts clean-train
     // and plants-only failures separately, which equals one overlap
     // pass over their union ONLY if plant ids (doc_id + PlantBase)
@@ -351,20 +351,18 @@ object CorpusRelease {
     // grams in the union counting but count two docs here. Check the
     // headroom (the b244/b282 guard class); rel is checkpointed, so
     // this is one cheap concurrent scan, off the serial path.
-    val fMaxId = Future(Option(rel.agg(max(col("doc_id"))).head()
-      .getAs[java.lang.Long](0)).map(_.longValue).getOrElse(-1L))
-    val fPrevCount = Future(
+    lazy val relMaxId = Option(rel.agg(max(col("doc_id"))).head()
+      .getAs[java.lang.Long](0)).map(_.longValue).getOrElse(-1L)
+    lazy val prevCount = QueryScope.materialize("prevCount")(
       rel.filter(col("doc_id") % 10 < PublishedParts)
-        .agg(count(lit(1)).as("n_prev")).localCheckpoint(true))
+        .agg(count(lit(1)).as("n_prev")))
     // the release row fold, evaluated ONCE (r21): fpPrev, fpClean,
     // fpCorr and version:fingerprint all read the checkpointed fp
     // column — the r20 shape re-folded the full corpus text in each of
     // those four legs (~2 executor-CPU s per fold at sf0.1)
-    val fRelF = Future(
-      rel.withColumn("fp", expr(rowFoldSpark)).localCheckpoint(true))
-    val fFpPrev = fRelF.map(relF =>
-      fpOf(relF.filter(col("doc_id") % 10 < PublishedParts), folded = true)
-        .localCheckpoint(true))
+    lazy val relF = QueryScope.materialize("relF")(rel.withColumn("fp", expr(rowFoldSpark)))
+    lazy val fpPrev = QueryScope.materialize("fpPrev")(
+      fpOf(relF.filter(col("doc_id") % 10 < PublishedParts), folded = true))
     // leakage machinery shared by BOTH candidates: the corrupted train
     // side is tr_clean ⊎ plants (disjoint ids; every plant hashes
     // train-side by construction) and its eval side is EXACTLY the
@@ -373,34 +371,20 @@ object CorpusRelease {
     // clean failures + plants-only failures, and the full clean-side
     // overlap pass runs ONCE instead of twice (the plants-only pass
     // touches ~1% of the docs). Eval grams are built once for both.
-    val fLeak = Future {
-      val evGrams = Decontaminate.benchGramSet(ev).localCheckpoint(true)
-      (Decontaminate.contaminatedCount(trClean, evGrams).localCheckpoint(true),
-        evGrams)
-    }
-    val fMan = Future {
-      // ONE aggregate pass over the manifest: three separate scalar
-      // aggs would re-run the whole budget→BPE→packing chain once per
-      // metric (the manifest is not checkpointed, and the BPE encode
-      // dominates it); the 1-row checkpoint fans out to the 3 info rows
-      ModelReady.modelReadyManifest(relsrc)
-        .agg(countDistinct(col("seq_id")).cast("long").as("n_seq"),
-          count(lit(1)).as("n_slices"),
-          sum(col("n_toks")).cast("long").as("n_tokens"))
-        .localCheckpoint(true)
-    }
-    val fCard = Future(CorpusAnalytics.datasetCard(relsrc)
-      .localCheckpoint(true))
-    val (prevCount, relF, fpPrev, (cleanLeakFail, evGrams), man, card,
-        relMaxId) =
-      try (Await.result(fPrevCount, Duration.Inf),
-        Await.result(fRelF, Duration.Inf),
-        Await.result(fFpPrev, Duration.Inf),
-        Await.result(fLeak, Duration.Inf),
-        Await.result(fMan, Duration.Inf),
-        Await.result(fCard, Duration.Inf),
-        Await.result(fMaxId, Duration.Inf))
-      finally pool.shutdown()
+    lazy val evGrams = QueryScope.materialize("evGrams")(Decontaminate.benchGramSet(ev))
+    lazy val cleanLeakFail = QueryScope.materialize("cleanLeakFail")(
+      Decontaminate.contaminatedCount(trClean, evGrams))
+    // ONE aggregate pass over the manifest: three separate scalar
+    // aggs would re-run the whole budget→BPE→packing chain once per
+    // metric (the manifest is not checkpointed, and the BPE encode
+    // dominates it); the 1-row checkpoint fans out to the 3 info rows
+    lazy val man = QueryScope.materialize("man")(ModelReady.modelReadyManifest(relsrc)
+      .agg(countDistinct(col("seq_id")).cast("long").as("n_seq"),
+        count(lit(1)).as("n_slices"),
+        sum(col("n_toks")).cast("long").as("n_tokens")))
+    lazy val card = QueryScope.materialize("card")(CorpusAnalytics.datasetCard(relsrc))
+    QueryScope.parallel(Seq(() => relMaxId, () => prevCount, () => fpPrev,
+      () => cleanLeakFail, () => man, () => card))
     require(relMaxId < PlantBase,
       s"b270 plant-id offset exhausted: max(doc_id) = $relMaxId >= " +
         s"$PlantBase — the corrLeak decomposition's disjoint-id premise " +
@@ -497,18 +481,12 @@ object CorpusRelease {
        |FROM d GROUP BY status ORDER BY status""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     // the two snapshot releases are independent — build their
-    // checkpoints CONCURRENTLY (guide §2.6, the b270 pool convention)
-    // so the two hygiene chains' walls overlap instead of serializing
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val fPrv = Future(CleanPipeline
-      .hygieneRelease(docs.filter(col("doc_id") % 10 < PublishedParts)))
-    val fCnd = Future(CleanPipeline.hygieneRelease(docs))
-    val (prv, cnd) =
-      try (Await.result(fPrv, Duration.Inf), Await.result(fCnd, Duration.Inf))
-      finally pool.shutdown()
+    // checkpoints CONCURRENTLY (guide §2.6, the b270 convention) so the
+    // two hygiene chains' walls overlap instead of serializing
+    val Seq(prv, cnd) = QueryScope.parallel(Seq(
+      () => CleanPipeline.hygieneRelease(
+        docs.filter(col("doc_id") % 10 < PublishedParts)),
+      () => CleanPipeline.hygieneRelease(docs)))
     prv.select(col("doc_id"), col("text").as("p_text"))
       .join(cnd.select(col("doc_id"), col("text").as("c_text")),
         Seq("doc_id"), "full_outer")

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** DSIR-style IMPORTANCE RESAMPLING (SURVEY §2B round-7 row B100) — the
@@ -190,7 +191,7 @@ object DsirResample {
     import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select("doc_id", "text", "lang")
     // frozen model: trained on the batch corpus, materialized once
-    val wt = bucketWeights(featureBuckets(docs), "de").localCheckpoint(true)
+    val wt = QueryScope.materialize("wt")(bucketWeights(featureBuckets(docs), "de"))
     val dir = chunkDir104
     graft.streaming.StreamingOps.writeChunksDf(docs, dir, n = 6,
       sortCols = Seq("doc_id"))

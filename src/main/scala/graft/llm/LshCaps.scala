@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.exec.QueryScope
 
 /** Bucket-size cap for banded-LSH candidate generation (SCALE.md §3.2).
   *
@@ -64,7 +65,7 @@ object LshCaps {
     * checkpoint or a persisted intermediate table. */
   def bandedCandidates(banded: DataFrame, idCol: String, bucketCap: Option[Int],
       carry: Seq[String] = Nil): DataFrame = {
-    val capped = capBuckets(banded.localCheckpoint(true), bucketCap)
+    val capped = capBuckets(QueryScope.materialize("banded")(banded), bucketCap)
     def side(suffix: String) = capped.select(
       (Seq(col("band"), col("bucket"), col(idCol).as(s"$idCol$suffix")) ++
         carry.map(c => col(c).as(s"$c$suffix"))): _*)

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.exec.QueryScope
 
 /** Deterministic MinHash + banded LSH near-duplicate detection
   * (SURVEY B43 scale path).
@@ -201,24 +202,23 @@ object MinHashLsh {
     * cached so the fused shingling pass runs once. Since r6 the verifier
     * is [[verifyJaccardFromArrays]] (the shingle hashes never explode at
     * all — see its A/B numbers), which also consumes the candidates once,
-    * so only `hArr` needs a cache. bandedCandidates still holds its EAGER
+    * so only `hArr` is persisted (in this function's own
+    * [[QueryScope]], released on return). bandedCandidates still holds its EAGER
     * localCheckpoint barrier (LshCaps scaladoc), so a Spark job for the
     * banded relation runs at construction time here. */
   def nearDuplicates(docs: DataFrame, threshold: Double,
-      bucketCap: Option[Int] = Some(LshCaps.DefaultBucketCap)): DataFrame = {
+      bucketCap: Option[Int] = Some(LshCaps.DefaultBucketCap)): DataFrame =
+      QueryScope("nearDuplicates") {
     val spread = spreadNarrowInput(docs)
     // size > 0 replays withShingleArr's `size(words) >= 3` gate (the
     // expression returns the empty array below 3 words)
-    val hArr = spread
+    val hArr = QueryScope.persist(spread
       .select(col("doc_id"), expr("shingle_hashes(text)").as("hs"))
-      .filter(size(col("hs")) > 0)
-      .cache()
+      .filter(size(col("hs")) > 0))
     val sigs = hArr.select(col("doc_id"), expr("minhash_sigs(hs)").as("sig"))
-    try {
-      verifyJaccardFromArrays(candidatePairs(sigs, bucketCap), hArr)
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
-        .localCheckpoint(true) // materialize before releasing the cache
-    } finally hArr.unpersist()
+    // materialized before the scope releases hArr
+    QueryScope.materialize("pairs")(verifyJaccardFromArrays(candidatePairs(sigs, bucketCap), hArr)
+      .filter(col("jaccard") >= threshold)
+      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard")))
   }
 }

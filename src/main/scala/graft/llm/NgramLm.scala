@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B129 — KNESER-NEY BIGRAM LM TRAINING (Kneser & Ney '95, the smoothing
@@ -141,7 +142,7 @@ object NgramLm {
     * batch and stream cannot drift. */
   def liftFromBigrams(bgIn: DataFrame, minSupport: Long = MinSupport,
       top: Int = CollocTop): DataFrame = {
-    val bg = bgIn.localCheckpoint(true) // feeds both marginals + N + the join
+    val bg = QueryScope.materialize("bg")(bgIn) // feeds both marginals + N + the join
     val mleft = bg.groupBy("w1").agg(sum(col("c")).as("c1"))
     val mright = bg.groupBy("w2").agg(sum(col("c")).as("c2"))
     val ntok = bg.agg(sum(col("c")).as("n"))

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B290 — PERCEPTUAL NEAR-DUP for multimodal payloads (VERDICT r17 item 3:
@@ -281,7 +282,7 @@ object PerceptualHash {
   private val b290 = entry(
     "b290_perceptual_neardup", neardupOracleSql,
     bench = true) { (s, d) =>
-    val bits = bitRows(s, d).localCheckpoint(true) // feeds bands + verify
+    val bits = QueryScope.materialize("bits")(bitRows(s, d)) // feeds bands + verify
     bandedNearDupPairs(bits, PerceptIdOffset)
   }
 
@@ -319,7 +320,7 @@ object PerceptualHash {
        |       CAST(count(*) - 1 AS BIGINT) AS n_dropped
        |FROM comp GROUP BY component HAVING count(*) >= 2
        |ORDER BY cluster_id""".stripMargin) { (s, d) =>
-    val bits = bitRows(s, d).localCheckpoint(true)
+    val bits = QueryScope.materialize("bits")(bitRows(s, d))
     val pairs = bandedNearDupPairs(bits, PerceptIdOffset)
     val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
     val nodes = bits.select(col("media_id").as("n")).distinct()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** Product quantization (PQ) approximate nearest-neighbor search — SURVEY
@@ -231,17 +232,16 @@ object Pq {
     * fetched for p·shortlist rows. Recall = P(true top-k ⊆ ADC shortlist),
     * pinned in PqSpec. */
   def searchAdc(embeddings: DataFrame, probeFilter: org.apache.spark.sql.Column,
-      k: Int, m: Int = 16, ksub: Int = 16, shortlist: Int = 50): DataFrame = {
-    val cb = codebook(embeddings, m, ksub).cache()
-    try {
-      val coded = encode(embeddings, cb, m)
-      val probes = Ivf.asDouble(embeddings.filter(probeFilter))
-        .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-          col("norm").as("pnorm"))
-      val tables = distanceTables(probes, cb, m, ksub)
-      val scoring = coded.crossJoin(broadcast(tables))
-      adcShortlistRerank(scoring, Ivf.asDouble(embeddings), probes, k, m, ksub, shortlist)
-    } finally cb.unpersist()
+      k: Int, m: Int = 16, ksub: Int = 16, shortlist: Int = 50): DataFrame =
+      QueryScope("searchAdc") {
+    val cb = QueryScope.persist(codebook(embeddings, m, ksub))
+    val coded = encode(embeddings, cb, m)
+    val probes = Ivf.asDouble(embeddings.filter(probeFilter))
+      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
+        col("norm").as("pnorm"))
+    val tables = distanceTables(probes, cb, m, ksub)
+    val scoring = coded.crossJoin(broadcast(tables))
+    adcShortlistRerank(scoring, Ivf.asDouble(embeddings), probes, k, m, ksub, shortlist)
   }
 
   /** The IVFADC scoring input (Jégou et al. §V: coarse quantizer + PQ):
@@ -262,10 +262,9 @@ object Pq {
     * re-scan the corpus behind the probe filter. O(p) rows. */
   private def ivfProbes(embeddings: DataFrame,
       probeFilter: org.apache.spark.sql.Column): DataFrame =
-    Ivf.asDouble(embeddings.filter(probeFilter))
+    QueryScope.materialize("probes")(Ivf.asDouble(embeddings.filter(probeFilter))
       .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("norm").as("pnorm"))
-      .localCheckpoint(true)
+        col("norm").as("pnorm")))
 
   private def ivfAdcScoringInputFor(embeddings: DataFrame, probes: DataFrame,
       m: Int, ksub: Int, nProbe: Int, numCells: Option[Int]): DataFrame = {
@@ -273,12 +272,12 @@ object Pq {
     // codebook + centroids are each consumed twice-plus (encode's broadcast
     // join, the distance-table collect, cell assignment AND routing); both
     // are tiny by construction (m·ksub / nCells rows), so materialize ONCE.
-    // localCheckpoint, not searchAdc's cache()/unpersist: the RETURNED lazy
-    // plan still references them after this function exits, so there is no
-    // safe point to unpersist — each extra consumption would otherwise
+    // checkpointed, not persisted like searchAdc's codebook: the RETURNED
+    // lazy plan still references them after this function exits, so there
+    // is no safe point to unpersist — each extra consumption would otherwise
     // re-run the sample sort+limit job over the corpus (ADVICE r6).
-    val cents = Ivf.centroids(embeddings, nCells).localCheckpoint(true)
-    val cb = codebook(embeddings, m, ksub).localCheckpoint(true)
+    val cents = QueryScope.materialize("cents")(Ivf.centroids(embeddings, nCells))
+    val cb = QueryScope.materialize("cb")(codebook(embeddings, m, ksub))
     // coarse index: cell id per corpus vector, attached to the PQ codes so
     // the scoring join carries (cell, codes, norm) — never raw vectors
     val codedCells = encode(embeddings, cb, m)

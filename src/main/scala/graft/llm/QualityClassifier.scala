@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B243 — learned quality-classifier inference over the documents table:
@@ -335,10 +336,10 @@ object QualityClassifier {
       .select("doc_id", "b")
     val rel = graft.llm.CleanPipeline.hygieneRelease(docs)
       .select(col("doc_id"), lit(1L).as("y1"))
-    val bk = dec.join(rel, Seq("doc_id"), "left")
+    // 10-row rollup fans out to the fit joins
+    val bk = QueryScope.materialize("bk")(dec.join(rel, Seq("doc_id"), "left")
       .select(col("b"), coalesce(col("y1"), lit(0L)).as("y"))
-      .groupBy("b").agg(count(lit(1)).as("n"), sum("y").as("pos"))
-      .localCheckpoint(true) // 10-row rollup fans out to the fit joins
+      .groupBy("b").agg(count(lit(1)).as("n"), sum("y").as("pos")))
     bk.join(graft.operators.ChangepointOps.isotonicCal(bk),
         col("b") === col("i"))
       .select(col("b").as("decile"), col("n"), col("pos"),

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B264 — QUALITY-SIGNAL DRIFT MONITOR (b192's Deequ-style profile-delta
@@ -228,7 +229,7 @@ object QualityDrift {
         " ELSE text END").as("text"),
       expr("CASE WHEN doc_id % 10 = 0 THEN 2 * n_chars + 1" +
         " ELSE n_chars END").as("n_chars"))
-    val pa = profile(a).localCheckpoint(true) // feeds both legs once
+    val pa = QueryScope.materialize("pa")(profile(a)) // feeds both legs once
     driftRows(pa, profile(bClean), "clean")
       .unionByName(driftRows(pa, profile(bPlant), "planted"))
       .orderBy("leg", "signal")

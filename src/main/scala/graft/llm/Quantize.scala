@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B123 — INT8 EMBEDDING QUANTIZATION (symmetric per-dimension max-abs
@@ -353,18 +354,17 @@ object Quantize {
       |FROM pd JOIN rad ra ON ra.label = pd.la
       |JOIN rad rb ON rb.label = pd.lb
       |ORDER BY la, lb""".stripMargin) { (s, d) =>
-    val x = Tables.embeddings(s, d)
+    val x = QueryScope.materialize("x")(Tables.embeddings(s, d)
       .select(col("vec_id"), col("label").cast("long").as("label"),
         posexplode(col("embedding")))
       .select(col("vec_id"), col("label"), col("pos").cast("long").as("dim"),
         expr("CAST(floor(CAST(col AS DOUBLE) * 10000 + 0.5) AS BIGINT)")
-          .as("q"))
-      .localCheckpoint(true) // feeds three aggregates
+          .as("q"))) // feeds three aggregates
     val n = x.groupBy("label").agg(countDistinct("vec_id").as("n"))
-    val cen = x.groupBy("label", "dim").agg(sum("q").as("s"))
+    // feeds cc + the pair join (x2)
+    val cen = QueryScope.materialize("cen")(x.groupBy("label", "dim").agg(sum("q").as("s"))
       .join(broadcast(n), "label")
-      .select(col("label"), col("dim"), expr("CAST(s div n AS BIGINT)").as("c"))
-      .localCheckpoint(true) // feeds cc + the pair join (x2)
+      .select(col("label"), col("dim"), expr("CAST(s div n AS BIGINT)").as("c")))
     val ssq = x.groupBy("label").agg(sum(col("q") * col("q")).as("ssq"))
     val cc = cen.groupBy("label").agg(sum(col("c") * col("c")).as("c2"))
     val rad = n.join(ssq, "label").join(cc, "label")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** FULL-TEXT RETRIEVAL over the documents corpus (SURVEY §2B rows
@@ -182,9 +183,8 @@ object Retrieval {
     // tf is O(docs × |query terms|) — tiny relative to the corpus — and
     // feeds two consumers (score join + df), so checkpoint it once
     // rather than re-run the pruned corpus explode.
-    val tf = toks.join(broadcast(qt), "term")
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val tf = QueryScope.materialize("tf")(toks.join(broadcast(qt), "term")
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     // doc_id is already distinct within tf → df = per-term row count.
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     (bm25Scores(s, tf, dfreq, dl, stats), tf)
@@ -438,10 +438,9 @@ object Retrieval {
       .write.mode("overwrite").parquet(s"$dir/terms")
     // dl feeds two writes (dl + stats) — materialize the tiny per-doc
     // aggregate once instead of re-running the corpus explode per consumer
-    val dlBuild = docs
+    val dlBuild = QueryScope.materialize("dlBuild")(docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      .localCheckpoint(true)
+      .groupBy("doc_id").agg(count(lit(1)).as("dl")))
     dlBuild.write.mode("overwrite").parquet(s"$dir/dl")
     dlBuild.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
       .write.mode("overwrite").parquet(s"$dir/stats")
@@ -455,9 +454,8 @@ object Retrieval {
     }
     // -- query side: corpus never read again
     val terms = QueryTerms.map(_._2).distinct
-    val probe = s.read.parquet(s"$b111IndexDir/terms")
-      .filter(col("term").isin(terms: _*))
-      .localCheckpoint(true) // tiny (query-term block rows); feeds tf + df
+    val probe = QueryScope.materialize("probe")(s.read.parquet(s"$b111IndexDir/terms")
+      .filter(col("term").isin(terms: _*))) // tiny (query-term block rows); feeds tf + df
     val tf = probe
       .select(col("term"), explode(col("postings")).as("m"))
       .select(col("term"), expr(s"m div $PosBits").as("doc_id"))
@@ -519,12 +517,11 @@ object Retrieval {
     val dl = s.read.parquet(s"$dir/dl")
     val stats = s.read.parquet(s"$dir/stats")
     graft.streaming.StreamingOps.runForeachBatch(stream, "append") { (batch, id) =>
-      val qb = batch.localCheckpoint(true)
+      val qb = QueryScope.materialize("qb")(batch)
       val batchTerms = qb.select("term").distinct().collect().map(_.getString(0))
       if (batchTerms.nonEmpty) {
-        val probe = s.read.parquet(s"$dir/terms")
-          .filter(col("term").isin(batchTerms.toSeq: _*))
-          .localCheckpoint(true) // tiny; feeds tf + df
+        val probe = QueryScope.materialize("probe")(s.read.parquet(s"$dir/terms")
+          .filter(col("term").isin(batchTerms.toSeq: _*))) // tiny; feeds tf + df
         val tf = probe
           .select(col("term"), explode(col("postings")).as("m"))
           .select(col("term"), expr(s"m div $PosBits").as("doc_id"))
@@ -621,8 +618,8 @@ object Retrieval {
       // dl feeds four consumers (dl write, stats write, impact join, avgdl)
       // — materialize the tiny per-doc aggregate once instead of re-running
       // the corpus explode per consumer
-      val dlBuild = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-        .localCheckpoint(true)
+      val dlBuild = QueryScope.materialize("dlBuild")(
+        toks.groupBy("doc_id").agg(count(lit(1)).as("dl")))
       dlBuild.write.mode("overwrite").parquet(s"$b113IndexDir/dl")
       dlBuild.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
         .write.mode("overwrite").parquet(s"$b113IndexDir/stats")
@@ -637,20 +634,19 @@ object Retrieval {
     // ---- query phase 1: bounds from metadata only (no postings column)
     val terms = qts.map(_._2).distinct
     val qdf = broadcast(queriesDf(s, qts))
-    val meta = s.read.parquet(s"$b113IndexDir/terms")
+    val meta = QueryScope.materialize("meta")(s.read.parquet(s"$b113IndexDir/terms")
       .select("term", "block_no", "df")
-      .filter(col("term").isin(terms: _*))
-      .localCheckpoint(true) // tiny; feeds global df
+      .filter(col("term").isin(terms: _*))) // tiny; feeds global df
     val dfreq = meta.groupBy("term").agg(sum(col("df")).as("df"))
     val dl = s.read.parquet(s"$b113IndexDir/dl")
     val stats = s.read.parquet(s"$b113IndexDir/stats")
-    val qub = qdf
+    // consumed by seed pick + survivor filter
+    val qub = QueryScope.materialize("qub")(qdf
       .join(s.read.parquet(s"$b113IndexDir/bmax")
         .filter(col("term").isin(terms: _*)), "term")
       .join(broadcast(dfreq), "term").crossJoin(broadcast(stats))
       .withColumn("u", expr(s"($bm25IdfExpr) * max_impact"))
-      .groupBy("query_id", "block_no").agg(sum(col("u")).as("ub_sum"))
-      .localCheckpoint(true) // consumed by seed pick + survivor filter
+      .groupBy("query_id", "block_no").agg(sum(col("u")).as("ub_sum")))
     /** Exact scores of the docs in `blocks`' (query_id, block_no) pairs —
       * postings read term-pruned at the scan, block-pruned by broadcast. */
     def scoreBlocks(blocks: DataFrame): DataFrame = {
@@ -671,10 +667,10 @@ object Retrieval {
     }
     val wSeed = Window.partitionBy(col("query_id"))
       .orderBy(col("ub_sum").desc, col("block_no"))
-    val seeds = qub.withColumn("rn", row_number().over(wSeed))
-      .filter(col("rn") <= seedBlocks).select("query_id", "block_no")
-      .localCheckpoint(true) // consumed by seed scoring + the phase-2 split
-    val seedScores = scoreBlocks(seeds).localCheckpoint(true)
+    // consumed by seed scoring + the phase-2 split
+    val seeds = QueryScope.materialize("seeds")(qub.withColumn("rn", row_number().over(wSeed))
+      .filter(col("rn") <= seedBlocks).select("query_id", "block_no"))
+    val seedScores = QueryScope.materialize("seedScores")(scoreBlocks(seeds))
     val wTheta = Window.partitionBy(col("query_id"))
       .orderBy(round(col("s"), 4).desc, col("doc_id"))
     val theta = seedScores
@@ -803,16 +799,14 @@ object Retrieval {
       exp: DataFrame, scores: DataFrame, ranked: DataFrame)
 
   private[graft] def rm3(s: SparkSession, d: String): Rm3Parts = {
-    val toks = Tables.documents(s, d)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .localCheckpoint(true)
+    val toks = QueryScope.materialize("toks")(Tables.documents(s, d)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("term")))
     val qdf = queriesDf(s)
-    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      .localCheckpoint(true)
+    val dl = QueryScope.materialize("dl")(toks.groupBy("doc_id").agg(count(lit(1)).as("dl")))
     val stats = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
-    val tf = toks.join(broadcast(qdf.select("term").distinct()), "term")
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val tf = QueryScope.materialize("tf")(
+      toks.join(broadcast(qdf.select("term").distinct()), "term")
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val base = bm25Rank(s, tf, dfreq, dl, stats).select("query_id", "doc_id")
     // -- expansion: integer-keyed selection from the pseudo-relevant docs
@@ -830,13 +824,12 @@ object Retrieval {
       .orderBy(col("etf").desc, col("term"))
     val exp = expTf.withColumn("rn", row_number().over(wExp))
       .filter(col("rn") <= ExpTermsPerQuery).select("query_id", "term")
-    val wq = qdf.withColumn("w", expr("1e0"))
-      .unionByName(exp.withColumn("w", expr(ExpWeight)))
-      .localCheckpoint(true)
+    val wq = QueryScope.materialize("wq")(qdf.withColumn("w", expr("1e0"))
+      .unionByName(exp.withColumn("w", expr(ExpWeight))))
     // -- pass 2: weighted BM25 over the expanded (still tiny) term set
-    val tf2 = toks.join(broadcast(wq.select("term").distinct()), "term")
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val tf2 = QueryScope.materialize("tf2")(
+      toks.join(broadcast(wq.select("term").distinct()), "term")
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val df2 = tf2.groupBy("term").agg(count(lit(1)).as("df"))
     val scores = broadcast(wq).join(tf2, "term").join(broadcast(df2), "term")
       .join(dl, "doc_id").crossJoin(broadcast(stats))
@@ -919,12 +912,11 @@ object Retrieval {
         .as("canonical_id"))
     val toks = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      .localCheckpoint(true)
+    val dl = QueryScope.materialize("dl")(toks.groupBy("doc_id").agg(count(lit(1)).as("dl")))
     val stats = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
-    val tf = toks.join(broadcast(queriesDf(s).select("term").distinct()), "term")
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val tf = QueryScope.materialize("tf")(
+      toks.join(broadcast(queriesDf(s).select("term").distinct()), "term")
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val scores = broadcast(queriesDf(s)).join(tf, "term")
       .join(broadcast(dfreq), "term")
@@ -1012,8 +1004,8 @@ object Retrieval {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
     val qt = queriesDf(s).select("term").distinct()
-    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      .localCheckpoint(true) // feeds stats + the doc-level score part
+    // feeds stats + the doc-level score part
+    val dl = QueryScope.materialize("dl")(toks.groupBy("doc_id").agg(count(lit(1)).as("dl")))
     val stats = dl.agg(sum(col("dl")).cast("long").as("tc"))
     val cf = toks.join(broadcast(qt), "term")
       .groupBy("term").agg(count(lit(1)).as("cf"))

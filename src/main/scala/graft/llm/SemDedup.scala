@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** SEMANTIC deduplication over the embedding column (SURVEY §2B round-7
@@ -112,7 +113,7 @@ object SemDedup {
     // cells is consumed three times (both self-join sides + the final
     // manifest join); materialize the one quantize+assign pass instead
     // of re-running it per consumer (the b93 lesson)
-    val cells = assignCells(q, seedRows).localCheckpoint(true)
+    val cells = QueryScope.materialize("cells")(assignCells(q, seedRows))
 
     val a = cells.select(col("vec_id").as("u"), col("qv").as("qva"),
       col("qq").as("qa"), col("cell"))

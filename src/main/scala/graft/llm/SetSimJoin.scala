@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B145 — PREFIX-FILTERED SET-SIMILARITY SELF-JOIN (the AllPairs/PPJoin
@@ -68,7 +69,7 @@ object SetSimJoin {
     * the join condition (profiled 3× per row, ~4.5 s at sf0.1 vs ~1 s
     * for the posting count). */
   def similarityJoin(docs: DataFrame, tauBp: Long = TauBp): DataFrame = {
-    val arrs = TextDedup.withShingleArr(docs).localCheckpoint(true)
+    val arrs = QueryScope.materialize("arrs")(TextDedup.withShingleArr(docs))
     val sh = arrs.select(col("doc_id"), explode(col("sh_arr")).as("shingle"))
     // per-shingle document frequency — the prefix lemma needs a
     // CONSISTENT global total order, and (df ASC, shingle ASC) IS one:
@@ -88,14 +89,13 @@ object SetSimJoin {
     // per row, never SinglePartition); don't re-try without a new A/B.
     val wDoc = Window.partitionBy(col("doc_id"))
       .orderBy(col("df"), col("shingle"))
-    val prefix = sh.join(dfreq, "shingle")
+    val prefix = QueryScope.materialize("prefix")(sh.join(dfreq, "shingle")
       .withColumn("pos", row_number().over(wDoc))
       .join(arrs.select(col("doc_id"), size(col("sh_arr")).cast("long").as("n")),
         "doc_id")
       .filter(col("pos") <=
         col("n") - expr(s"(n * $tauBp + 9999) div 10000") + 1)
-      .select(col("doc_id"), col("n"), col("shingle"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("n"), col("shingle")))
     val cands = prefix
       .select(col("doc_id").as("da"), col("n").as("na"), col("shingle"))
       .join(prefix
@@ -232,7 +232,7 @@ object SetSimJoin {
     * element type is free (string shingles for b282, BIGINT frame
     * fingerprints for b293): every step below is element-type-agnostic. */
   def containmentJoinArr(arrs0: DataFrame, tauBp: Long = ContainTauBp): DataFrame = {
-    val arrs = arrs0.localCheckpoint(true)
+    val arrs = QueryScope.materialize("arrs")(arrs0)
     val sh = arrs.select(col("doc_id"), explode(col("sh_arr")).as("shingle"))
     val cnt = arrs.select(col("doc_id"), size(col("sh_arr")).cast("long").as("n"))
     val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))

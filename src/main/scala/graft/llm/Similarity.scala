@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** Embedding similarity search (SURVEY B44): brute-force cosine top-k as
@@ -308,10 +309,10 @@ object Similarity {
          |GROUP BY t.k, t.probe_id
          |ORDER BY t.k, t.probe_id""".stripMargin
     }) { (s, d) =>
-    val base = Tables.embeddings(s, d)
+    // sliced 4× (probe+corpus per k-pass)
+    val base = QueryScope.materialize("base")(Tables.embeddings(s, d)
       .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .localCheckpoint(true) // sliced 4× (probe+corpus per k-pass)
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")))
     def top10(k: Int): DataFrame = {
       val vk = base.select(col("vec_id"),
         expr(s"slice(v, 1, $k)").as("v"))

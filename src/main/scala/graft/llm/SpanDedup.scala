@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** Repeated-span removal (SURVEY §2B round-6 row B93): corpus-wide EXACT
@@ -96,32 +97,23 @@ object SpanDedup {
     *     across its salt buckets (strictly safer than the r20 plan,
     *     whose only skew remedy was AQE splitting the join exchange).
     *
-    * Returns the lazy dup relation plus a release handle: callers
-    * materialize their per-doc aggregate eagerly, then release the
-    * persisted occ (the GraphOps pullAdj convention — nothing persisted
-    * outlives the operator). `materialize = false` keeps the pure
-    * recompute form, same logical shape, results identical (pinned in
-    * CorpusCleanSpec). */
+    * Returns the lazy dup relation. occ is persisted in the caller's
+    * [[QueryScope]]: callers materialize their per-doc aggregate
+    * eagerly inside a scope of their own, which releases occ when it
+    * closes — nothing persisted outlives the operator. */
   private def dupOccurrences(docs: DataFrame, k: Int,
-      hashedGramKey: Boolean, materialize: Boolean)
-      : (DataFrame, () => Unit) = {
+      hashedGramKey: Boolean): DataFrame = {
     val occ0 = spans(docs, k)
     val occKeyed =
       if (hashedGramKey) occ0.withColumn("gram", xxhash64(col("gram")))
       else occ0
     val salted = occKeyed.withColumn("salt",
       pmod(xxhash64(col("doc_id"), col("pos")), lit(SaltBuckets)).cast("int"))
-    val (occ, release) =
-      if (materialize) {
-        val parallelism =
-          docs.sparkSession.sparkContext.defaultParallelism.toLong
-        val bytes = salted.queryExecution.optimizedPlan.stats.sizeInBytes *
-          OccEstExpansion
-        val w = (bytes / OccPartitionBytes).max(1).min(parallelism).toInt
-        val p = salted.repartition(w, col("gram"), col("salt"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (p, () => { p.unpersist(false); () })
-      } else (salted, () => ())
+    val parallelism = docs.sparkSession.sparkContext.defaultParallelism.toLong
+    val bytes = salted.queryExecution.optimizedPlan.stats.sizeInBytes *
+      OccEstExpansion
+    val w = (bytes / OccPartitionBytes).max(1).min(parallelism).toInt
+    val occ = QueryScope.persist(salted.repartition(w, col("gram"), col("salt")))
     // per-(gram, salt) partials (exchange-free over the persisted occ),
     // folded per gram: cnt sums, first = min of per-bucket min-structs
     // (min over struct(doc_id, pos) is the global (doc, pos) order
@@ -135,11 +127,10 @@ object SpanDedup {
       .filter(col("cnt") > 1)
     val statsX = gramStats.select(col("gram"), col("first"),
       explode(sequence(lit(0), lit(SaltBuckets - 1))).as("salt"))
-    val dup = occ.join(statsX, Seq("gram", "salt"))
+    occ.join(statsX, Seq("gram", "salt"))
       .filter(!(col("doc_id") === col("first.doc_id") &&
         col("pos") === col("first.pos")))
       .select(col("doc_id"), col("pos"))
-    (dup, release)
   }
 
   /** Cleaned corpus: every non-first occurrence of a corpus-duplicated
@@ -166,17 +157,13 @@ object SpanDedup {
         s"""array_distinct(flatten(transform(starts,
            |  p -> sequence(p, p + ${k - 1}))))""".stripMargin).as("cov"))
 
-  def removeRepeatedSpans(docs: DataFrame, hashedGramKey: Boolean = false,
-      materializeOcc: Boolean = true): DataFrame = {
-    val (dup, release) =
-      dupOccurrences(docs, SpanWords, hashedGramKey, materializeOcc)
-    // materialize the per-doc relation eagerly (dup-mass-sized), then
-    // release the persisted occurrence relation — nothing persisted
-    // escapes the operator, not even when the checkpoint fails
-    val perDoc =
-      if (materializeOcc)
-        try perDocCov(dup, SpanWords).localCheckpoint(true) finally release()
-      else perDocCov(dup, SpanWords)
+  def removeRepeatedSpans(docs: DataFrame, hashedGramKey: Boolean = false)
+      : DataFrame = QueryScope("removeRepeatedSpans") {
+    // materialize the per-doc relation eagerly (dup-mass-sized); the
+    // scope then releases the persisted occurrence relation — nothing
+    // persisted escapes the operator, not even when the checkpoint fails
+    val perDoc = QueryScope.materialize("perDoc")(
+      perDocCov(dupOccurrences(docs, SpanWords, hashedGramKey), SpanWords))
     rebuildFromCov(docs, perDoc)
   }
 
@@ -188,20 +175,13 @@ object SpanDedup {
     * exists only to release occ before returning a lazy frame, and a
     * caller that materializes eagerly anyway shouldn't pay the extra
     * job boundary (r21 b270 phase probe: span job 2.7 s wall + rel
-    * checkpoint 1.5 s → one ~3 s job). Caller MUST invoke the release
-    * handle after its materialization; results are identical to
-    * [[removeRepeatedSpans]] (same logical plan, pinned by the b94
-    * oracle at 3 SFs). */
-  private[llm] def removeRepeatedSpansShared(docs: DataFrame)
-      : (DataFrame, () => Unit) = {
-    val (dup, releaseOcc) =
-      dupOccurrences(docs, SpanWords, hashedGramKey = false,
-        materialize = true)
-    val perDoc = perDocCov(dup, SpanWords)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (rebuildFromCov(docs, perDoc),
-      () => { perDoc.unpersist(false); releaseOcc(); () })
-  }
+    * checkpoint 1.5 s → one ~3 s job). Both relations are persisted in
+    * the caller's [[QueryScope]], so the caller materializes inside a
+    * scope of its own; results are identical to [[removeRepeatedSpans]]
+    * (same logical plan, pinned by the b94 oracle at 3 SFs). */
+  private[llm] def removeRepeatedSpansShared(docs: DataFrame): DataFrame =
+    rebuildFromCov(docs, QueryScope.persist(perDocCov(
+      dupOccurrences(docs, SpanWords, hashedGramKey = false), SpanWords)))
 
   /** The reassembly law shared by B93 and B244, r21 spelling: `perDoc`
     * is (doc_id, cov) with cov = the doc's deleted word positions; the
@@ -319,10 +299,8 @@ object SpanDedup {
     * aggregate, per-doc windows and joins after that; the island window
     * state is O(1) per row. Runs and covered positions are proportional
     * to the DUPLICATED text mass, not the corpus. */
-  def removeLongRepeats(docs: DataFrame,
-      materializeOcc: Boolean = true): DataFrame = {
-    val (dup, release) =
-      dupOccurrences(docs, GramK, hashedGramKey = false, materializeOcc)
+  def removeLongRepeats(docs: DataFrame): DataFrame = QueryScope("removeLongRepeats") {
+    val dup = dupOccurrences(docs, GramK, hashedGramKey = false)
     val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     // island coalescing stays a DOC-partitioned window (state O(1) per
     // row, never SinglePartition); the run rollup and the per-doc
@@ -333,14 +311,11 @@ object SpanDedup {
       .groupBy("doc_id", "island")
       .agg(min("pos").as("p0"), max("pos").as("p1"), count(lit(1)).as("len"))
       .filter(col("len") >= MinRun)
-    val perDoc0 = runs.groupBy("doc_id")
+    val perDoc = QueryScope.materialize("perDoc")(runs.groupBy("doc_id")
       .agg(collect_list(struct(col("p0"), col("p1"))).as("ivs"))
       .select(col("doc_id"), expr(
         s"""array_distinct(flatten(transform(ivs,
-           |  v -> sequence(v.p0, v.p1 + ${GramK - 1}))))""".stripMargin).as("cov"))
-    val perDoc =
-      if (materializeOcc) try perDoc0.localCheckpoint(true) finally release()
-      else perDoc0
+           |  v -> sequence(v.p0, v.p1 + ${GramK - 1}))))""".stripMargin).as("cov")))
     rebuildFromCov(docs, perDoc)
   }
 

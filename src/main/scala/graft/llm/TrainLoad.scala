@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** Round-12 arc — TRAINING-RUN LOADING AND EVALUATION PLUMBING: the
@@ -342,8 +343,7 @@ object TrainLoad {
        |SELECT doc_id, n_bigrams, sum_kn_fp, score_fp
        |FROM docscore ORDER BY doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val model = NgramLm.knTable(docs).select("w1", "w2", "kn_fp")
-      .localCheckpoint(true)
+    val model = QueryScope.materialize("model")(NgramLm.knTable(docs).select("w1", "w2", "kn_fp"))
     graft.streaming.StreamingOps.writeChunksDf(docs, chunkDir139, n = 6,
       sortCols = Seq("doc_id"))
     s.catalog.dropTempView("b139_replay") // idempotent re-runs

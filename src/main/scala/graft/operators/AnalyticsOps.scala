@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** Product-analytics operator family beyond the funnel/cohort/transition
@@ -32,8 +33,7 @@ object AnalyticsOps {
     * the basket array rides only inside map pipelines (generates), it
     * is never shuffled at pair width. */
   private def basketsOf(rel: DataFrame): DataFrame =
-    rel.groupBy(col("o")).agg(collect_set(col("p")).as("ps"))
-      .localCheckpoint(true)
+    QueryScope.materialize("baskets")(rel.groupBy(col("o")).agg(collect_set(col("p")).as("ps")))
 
   /** (p1 < p2) co-occurrence pairs of a basket relation, one row per
     * (order, pair) — the map-side double explode; aggregate downstream.
@@ -172,11 +172,10 @@ object AnalyticsOps {
        |FROM cand ORDER BY p1, p2, p3""".stripMargin, bench = true) { (s, d) =>
     val baskets = basketsOf(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p")))
-    val l2 = basketPairs(baskets)
+    val l2 = QueryScope.materialize("l2")(basketPairs(baskets)
       .groupBy("p1", "p2")
       .agg(count(lit(1)).as("s"))
-      .filter(col("s") >= MinSup)
-      .localCheckpoint(true) // feeds 5 joins below
+      .filter(col("s") >= MinSup)) // feeds 5 joins below
     val l2k = l2.select(col("p1").as("k1"), col("p2").as("k2"))
     // staged pruned enumeration: extend only L2 pairs, check both new
     // sub-pairs against L2 before counting. The basket array rides
@@ -269,15 +268,14 @@ object AnalyticsOps {
        |SELECT o_custkey, recency_days, frequency, monetary_cents,
        |       r_q, f_q, m_q, r_q * 100 + f_q * 10 + m_q AS rfm_code
        |FROM q ORDER BY o_custkey""".stripMargin) { (s, d) =>
-    val m = Tables.orders(s, d).groupBy("o_custkey").agg(
+    val m = QueryScope.materialize("m")(Tables.orders(s, d).groupBy("o_custkey").agg(
       // o_orderdate decodes as TIMESTAMP_NTZ; the cast is exact under the
       // UTC session timezone (Tables.events note)
       expr(s"CAST(($NowUs - unix_micros(CAST(max(o_orderdate) AS TIMESTAMP)))" +
         " div 86400000000 AS BIGINT)").as("recency_days"),
       count(lit(1)).as("frequency"),
       sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
-        .as("monetary_cents"))
-      .localCheckpoint(true) // feeds three rank passes + their fold collects
+        .as("monetary_cents"))) // feeds three rank passes + their fold collects
     // three two-phase global ranks (ASC recency; DESC frequency/monetary —
     // bucket on the NEGATED value, monotone under trunc div); each bucket
     // range is bounded: days by the calendar, frequency by max orders per
@@ -946,14 +944,14 @@ object AnalyticsOps {
     val ev = Tables.events(s, d)
     val fv = ev.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min(unix_micros(col("ts"))).as("fv_us"))
-    val fp = ev.filter(col("event_type") === "purchase")
+    // feeds the rank pass + its fold collect
+    val fp = QueryScope.materialize("fp")(ev.filter(col("event_type") === "purchase")
       .join(fv, "user_id")
       .filter(unix_micros(col("ts")) > col("fv_us"))
       .groupBy("user_id", "fv_us")
       .agg(min(unix_micros(col("ts"))).as("fp_us"))
       .select(col("user_id"),
-        expr("CAST((fp_us - fv_us) div 1000 AS BIGINT)").as("ttc_ms"))
-      .localCheckpoint(true) // feeds the rank pass + its fold collect
+        expr("CAST((fp_us - fv_us) div 1000 AS BIGINT)").as("ttc_ms")))
     val (ranked, n, _) = OrderStats.withGlobalRank(fp,
       expr("ttc_ms div 2147483648"),
       Seq(col("ttc_ms"), col("user_id")), "_rn")
@@ -1664,10 +1662,9 @@ object AnalyticsOps {
       |            ELSE 'C' END AS abc_class
       |FROM r CROSS JOIN tot
       |ORDER BY r.rnk""".stripMargin) { (s, d) =>
-    val pr = Tables.lineitem(s, d).groupBy("l_partkey")
+    val pr = QueryScope.materialize("pr")(Tables.lineitem(s, d).groupBy("l_partkey")
       .agg(sum(expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"))
-        .as("rev_cents"))
-      .localCheckpoint(true) // feeds the rank pass + its fold collect
+        .as("rev_cents"))) // feeds the rank pass + its fold collect
     val (r, _, Seq(tot)) = OrderStats.withGlobalRank(pr,
       expr("(-rev_cents) div 1048576"),
       Seq(col("rev_cents").desc, col("l_partkey")), "rnk",
@@ -2115,12 +2112,11 @@ object AnalyticsOps {
       |       CAST(st.max_c * st.n_keys * 1000000 // st.total AS BIGINT)
       |         AS skew_max_mean_micro
       |FROM st CROSS JOIN mk CROSS JOIN q""".stripMargin) { (s, d) =>
-    val kc = Tables.lineitem(s, d)
-      .groupBy(col("l_partkey").as("k")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val kc = QueryScope.materialize("kc")(Tables.lineitem(s, d)
+      .groupBy(col("l_partkey").as("k")).agg(count(lit(1)).as("c")))
     // count histogram: O(distinct count values) = O(sqrt(facts)) rows
-    val hist = kc.groupBy("c").agg(count(lit(1)).as("nk"))
-      .localCheckpoint(true) // feeds the scan pass + its fold collect
+    // feeds the scan pass + its fold collect
+    val hist = QueryScope.materialize("hist")(kc.groupBy("c").agg(count(lit(1)).as("nk")))
     val (h2, dCount, Seq(nKeys, total)) = OrderStats.withGlobalRank(hist,
       expr("c div 1024"), Seq(col("c")), "_rn",
       runningSums = Seq((col("nk"), "cumk"), (expr("c * nk"), "cumr")))

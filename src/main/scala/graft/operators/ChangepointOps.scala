@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B276 — CUSUM LEVEL-SHIFT DETECTION (Page, Biometrika 1954 — the
@@ -103,11 +104,10 @@ object ChangepointOps {
     val sp = daily.sparkSession
     import sp.implicits._
     import org.apache.spark.sql.expressions.Window
-    val st = daily.agg(
+    val st = QueryScope.materialize("st")(daily.agg(
         expr("sum(n) div count(*)").as("mu"),
         expr("(sum(n) div count(*)) div " + AllowanceDiv).as("k"),
-        expr(s"$ThresholdMul * (sum(n) div count(*))").as("h"))
-      .localCheckpoint(true)
+        expr(s"$ThresholdMul * (sum(n) div count(*))").as("h")))
     val legs = Seq("clean", "shift_down", "shift_up").toDF("leg")
     val dirs = Seq(1L, -1L).toDF("sign")
     val w = Window.partitionBy(col("leg"), col("sign"))
@@ -204,15 +204,14 @@ object ChangepointOps {
       .agg(expr("CAST(sum(floor(value * 100 + 0.5)) AS BIGINT)").as("cents"))
     val ord = Window.orderBy(col("d"))
     val prior = ord.rowsBetween(Window.unboundedPreceding, -1)
-    daily
+    QueryScope.materialize("forecast")(daily
       .withColumn("f_naive", lag(col("cents"), 1).over(ord))
       .withColumn("f_snaive", lag(col("cents"), SeasonDays.toInt).over(ord))
       .withColumn("psum", sum(col("cents")).over(prior))
       .withColumn("pcnt", count(lit(1)).over(prior))
       .withColumn("f_mean", expr("psum div pcnt"))
       .filter(col("f_snaive").isNotNull)
-      .select("d", "cents", "f_naive", "f_snaive", "f_mean")
-      .localCheckpoint(true)
+      .select("d", "cents", "f_naive", "f_snaive", "f_mean"))
   }
 
   private val b277 = entry(
@@ -243,14 +242,13 @@ object ChangepointOps {
        |       CAST(mae_cents AS BIGINT) AS mae_cents,
        |       CAST(wins AS BIGINT) AS wins
        |FROM models ORDER BY model""".stripMargin) { (s, d) =>
-    val e = forecastFrame(s, d)
+    val e = QueryScope.materialize("e")(forecastFrame(s, d)
       .select(col("d"),
         abs(col("cents") - col("f_naive")).as("e_naive"),
         abs(col("cents") - col("f_snaive")).as("e_snaive"),
         abs(col("cents") - col("f_mean")).as("e_mean"))
       .withColumn("e_min",
-        least(col("e_naive"), col("e_snaive"), col("e_mean")))
-      .localCheckpoint(true) // 23 rows feeding three rollups
+        least(col("e_naive"), col("e_snaive"), col("e_mean")))) // 23 rows feeding three rollups
     def model(name: String, err: String) = e.agg(
         count(lit(1)).as("n_evals"),
         sum(col(err)).as("sae_cents"),
@@ -377,10 +375,9 @@ object ChangepointOps {
     val px = ev.filter(col("event_type") === "purchase")
       .groupBy("user_id")
       .agg(sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).as("cents"))
-    val x = v.join(px, Seq("user_id"), "left")
+    val x = QueryScope.materialize("x")(v.join(px, Seq("user_id"), "left")
       .select(col("user_id"), col("variant"),
-        coalesce(col("cents"), lit(0L)).as("cents"))
-      .localCheckpoint(true) // one pass feeds obs + the R-rep explosion
+        coalesce(col("cents"), lit(0L)).as("cents"))) // one pass feeds obs + the R-rep explosion
     // greatest(count, 1): an empty variant would make DuckDB `// 0` raise
     // while Spark div yields NULL — identical failure surface instead
     // (ADVICE r17 #5; the rep-level sums are already HAVING-guarded)
@@ -747,11 +744,11 @@ object ChangepointOps {
       .groupBy(expr("CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01')" +
         " AS BIGINT)").as("d"))
       .agg(sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).as("v"))
-    val legs = daily.select(lit("clean").as("leg"), col("d"), col("v"))
-      .unionByName(daily.select(lit("outlier_plant").as("leg"), col("d"),
-        when(col("d") === TsPlantDay, col("v") * TsOutlierMul)
-          .otherwise(col("v")).as("v")))
-      .localCheckpoint(true) // feeds the pair expansion AND the OLS agg
+    val legs = QueryScope.materialize("legs")(
+      daily.select(lit("clean").as("leg"), col("d"), col("v"))
+        .unionByName(daily.select(lit("outlier_plant").as("leg"), col("d"),
+          when(col("d") === TsPlantDay, col("v") * TsOutlierMul)
+            .otherwise(col("v")).as("v")))) // feeds the pair expansion AND the OLS agg
     val pairs = legs.select(col("leg"), col("d").as("da"), col("v").as("va"))
       .join(legs.select(col("leg"), col("d").as("db"), col("v").as("vb")),
         Seq("leg"))
@@ -859,12 +856,12 @@ object ChangepointOps {
        |       cal.cal_bp
        |FROM bk JOIN cal ON cal.i = bk.b
        |ORDER BY bucket""".stripMargin) { (s, d) =>
-    val bk = Tables.orders(s, d)
+    // bounded rollup fans out to 4 joins below
+    val bk = QueryScope.materialize("bk")(Tables.orders(s, d)
       .groupBy("o_custkey")
       .agg(least(count(lit(1)), lit(IsoBucketCap)).as("b"),
         max(when(col("o_totalprice") > IsoWhale, 1L).otherwise(0L)).as("y"))
-      .groupBy("b").agg(count(lit(1)).as("n"), sum("y").as("pos"))
-      .localCheckpoint(true) // bounded rollup fans out to 4 joins below
+      .groupBy("b").agg(count(lit(1)).as("n"), sum("y").as("pos")))
     bk.join(isotonicCal(bk), col("b") === col("i"))
       .select(col("b").as("bucket"), col("n"), col("pos"),
         expr("CAST(pos * 10000 div n AS BIGINT)").as("raw_bp"),
@@ -944,10 +941,10 @@ object ChangepointOps {
     val sp = s
     import sp.implicits._
     val fc = forecastFrame(s, d)
-    val bounds = fc.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
-      .select(expr(s"d0 + (d1 - d0) * $ConformalCalNum" +
-        s" div $ConformalCalDen").as("t0"))
-      .localCheckpoint(true)
+    val bounds = QueryScope.materialize("bounds")(
+      fc.agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
+        .select(expr(s"d0 + (d1 - d0) * $ConformalCalNum" +
+          s" div $ConformalCalDen").as("t0")))
     val models = Seq("mean", "naive", "snaive").toDF("model")
     val resid = fc.crossJoin(broadcast(models))
       .select(col("model"), col("d"),

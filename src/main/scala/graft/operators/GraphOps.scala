@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B63 — connected components: the cluster-resolution step every dedup
@@ -48,10 +49,9 @@ object GraphOps {
     * @return (n, component) with component = min node id reachable from n.
     */
   def connectedComponents(edges: DataFrame, nodes: DataFrame, maxRounds: Int = 40): DataFrame = {
-    val und = edges.select(col("a").as("src"), col("b").as("dst"))
-      .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
-    var lbl = nodes.select(col("n"), col("n").as("lbl")).localCheckpoint(true)
+    val und = QueryScope.materialize("und")(edges.select(col("a").as("src"), col("b").as("dst"))
+      .union(edges.select(col("b").as("src"), col("a").as("dst"))))
+    var lbl = QueryScope.materialize("lbl0")(nodes.select(col("n"), col("n").as("lbl")))
     var rounds = 0
     var converged = false
     while (!converged) {
@@ -69,32 +69,19 @@ object GraphOps {
       // barrier per round
       val jumped = prop.as("x").join(prop.as("y"), col("x.lbl") === col("y.n"))
         .select(col("x.n").as("n"), col("x.prev").as("prev"), col("y.lbl").as("lbl"))
-      val next = jumped.localCheckpoint(true)
+      val next = QueryScope.materialize("next")(jumped)
       // convergence = no label moved this round. A changed-row count (not a
       // label-sum compare) stays exact for ids anywhere in the Long range —
       // hashed ids would overflow a sum — and an empty node set yields 0,
       // converging immediately instead of NPE-ing on a NULL aggregate.
       converged = next.filter(col("lbl") =!= col("prev")).count() == 0
-      releaseCheckpoint(lbl)
+      QueryScope.release(lbl)
       lbl = next
       rounds += 1
     }
-    releaseCheckpoint(und)
+    QueryScope.release(und)
     lbl.select(col("n"), col("lbl").as("component"))
   }
-
-  /** Free a localCheckpoint's storage blocks once the round that produced
-    * it is superseded — without this, executor storage holds up to
-    * maxRounds copies of the label relation and relies on GC-driven
-    * ContextCleaner to notice. Safe only because the frame is never read
-    * again (a truncated-lineage RDD cannot recompute). Best-effort: if the
-    * checkpointed plan shape ever changes, the match misses and cleanup
-    * falls back to the ContextCleaner path. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-    }
 
   /** Deterministic test topology over `documents`: the B42 dup-injection
     * pairs ((d, d+1000000) for d % 7 = 0) as edges, PLUS chain edges
@@ -316,7 +303,7 @@ object GraphOps {
       totE: Long, packedOk: Boolean)
 
   private def materializeChunked(adjIn: DataFrame): AdjInfo = {
-    val grouped = chunkAdj(adjIn).localCheckpoint(true)
+    val grouped = QueryScope.materialize("grouped")(chunkAdj(adjIn))
     // the packed spellings multiply node ids, so they only ever apply to
     // LONG ids — generic callers with e.g. string nodes (b166's word
     // graph) skip the id-domain scalars entirely
@@ -365,14 +352,14 @@ object GraphOps {
     * BroadcastHashJoin → HashAggregate all preserve hash(node)). Only
     * built in the broadcast regime (node count ≤ cap), so the persisted
     * relation is bounded; the past-cap fallback iterates the
-    * checkpointed relation with push rounds. Callers unpersist once
-    * their rounds have run. */
+    * checkpointed relation with push rounds. Persisted in the caller's
+    * [[QueryScope]], which releases it once the caller's rounds have
+    * run. */
   private def pullAdj(grouped: DataFrame, totE: Long): DataFrame = {
     val k = math.max(1L, math.min(
       grouped.sparkSession.sparkContext.defaultParallelism.toLong,
       (totE + PullCellsPerPartition - 1) / PullCellsPerPartition)).toInt
-    grouped.repartition(k, col("node"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    QueryScope.persist(grouped.repartition(k, col("node")))
   }
 
   /** Per-node argmax of (cnt DESC, label ASC) over (node, label, cnt)
@@ -416,7 +403,7 @@ object GraphOps {
     * shiftrightunsigned recovery (ADVICE r20); outside the domain the
     * keys stay two-column and the argmax a struct ordering. */
   private[graft] def labelPropagationAdj(adjIn: DataFrame, rounds: Int,
-      distinctSymmetric: Boolean = false): DataFrame = {
+      distinctSymmetric: Boolean = false): DataFrame = QueryScope("labelPropagation") {
     val info = materializeChunked(adjIn)
     val smallEnoughToBroadcast = info.nNodes <= LpaBroadcastMaxNodes
     val pull = smallEnoughToBroadcast && distinctSymmetric
@@ -432,45 +419,45 @@ object GraphOps {
     // dual-path replay and the b157 oracle at all three SFs.
     val fastFirst = distinctSymmetric && rounds >= 1
     var l =
-      (if (fastFirst)
-        adj.groupBy("node").agg(min(array_min(col("nbrs"))).as("label"))
-      else
-        adj.groupBy("node").agg(min(col("node")).as("label")))
-        .localCheckpoint(true)
+      QueryScope.materialize("l0")(
+        if (fastFirst)
+          adj.groupBy("node").agg(min(array_min(col("nbrs"))).as("label"))
+        else
+          adj.groupBy("node").agg(min(col("node")).as("label")))
     val remaining = if (fastFirst) rounds - 1 else rounds
     for (_ <- 1 to remaining) {
-      l = (if (pull) {
-        // pull round: zero exchanges (see scaladoc)
-        argmaxLabel(
-          adj.select(col("node"), explode(col("nbrs")).as("u"))
-            .join(broadcast(l.select(col("node").as("u"), col("label"))), "u")
-            .groupBy(col("node"), col("label"))
-            .agg(count(lit(1)).as("cnt")),
-          info.packedOk)
-      } else {
-        // push round: votes keyed on the receiving dst
-        val labelSide = if (smallEnoughToBroadcast) broadcast(l) else l
-        val exploded = adj.join(labelSide, "node")
-          .select(explode(col("nbrs")).as("dst"), col("label"))
-        if (info.packedOk)
-          exploded
-            .groupBy((col("dst") * Pack32 + col("label")).as("pk"))
-            .agg(count(lit(1)).as("cnt"))
-            .select(shiftrightunsigned(col("pk"), 32).as("node"),
-              pmod(col("pk"), lit(Pack32)).as("label"), col("cnt"))
-            .groupBy("node")
-            .agg(max(col("cnt") * Pack32 +
-              (lit(Pack32 - 1) - col("label"))).as("best"))
-            .select(col("node"),
-              (lit(Pack32 - 1) - pmod(col("best"), lit(Pack32))).as("label"))
-        else
+      l = QueryScope.materialize("l")(
+        if (pull) {
+          // pull round: zero exchanges (see scaladoc)
           argmaxLabel(
-            exploded.groupBy(col("dst").as("node"), col("label"))
+            adj.select(col("node"), explode(col("nbrs")).as("u"))
+              .join(broadcast(l.select(col("node").as("u"), col("label"))), "u")
+              .groupBy(col("node"), col("label"))
               .agg(count(lit(1)).as("cnt")),
-            packedOk = false)
-      }).localCheckpoint(true)
+            info.packedOk)
+        } else {
+          // push round: votes keyed on the receiving dst
+          val labelSide = if (smallEnoughToBroadcast) broadcast(l) else l
+          val exploded = adj.join(labelSide, "node")
+            .select(explode(col("nbrs")).as("dst"), col("label"))
+          if (info.packedOk)
+            exploded
+              .groupBy((col("dst") * Pack32 + col("label")).as("pk"))
+              .agg(count(lit(1)).as("cnt"))
+              .select(shiftrightunsigned(col("pk"), 32).as("node"),
+                pmod(col("pk"), lit(Pack32)).as("label"), col("cnt"))
+              .groupBy("node")
+              .agg(max(col("cnt") * Pack32 +
+                (lit(Pack32 - 1) - col("label"))).as("best"))
+              .select(col("node"),
+                (lit(Pack32 - 1) - pmod(col("best"), lit(Pack32))).as("label"))
+          else
+            argmaxLabel(
+              exploded.groupBy(col("dst").as("node"), col("label"))
+                .agg(count(lit(1)).as("cnt")),
+              packedOk = false)
+        })
     }
-    if (pull) adj.unpersist(false)
     l
   }
 
@@ -511,7 +498,7 @@ object GraphOps {
     * keep the push round: one node-keyed join + one dst-keyed
     * map-combinable partial-sum exchange, the canonical Pregel round. */
   private[graft] def pageRankAdj(adjIn: DataFrame,
-      symmetric: Boolean = false): DataFrame = {
+      symmetric: Boolean = false): DataFrame = QueryScope("pageRank") {
     val info = materializeChunked(adjIn)
     val nNodes = info.nNodes // O(1) driver scalar (b109 convention)
     val base = (15L * (PrScale / nNodes)) / 100L
@@ -523,15 +510,14 @@ object GraphOps {
       for (_ <- 1 to PrIters) {
         val share = broadcast(
           r.select(col("node").as("u"), expr("rank div od").as("share")))
-        r = adj.select(col("node"), col("od"), explode(col("nbrs")).as("u"))
-          .join(share, "u")
-          .groupBy(col("node"))
-          .agg(min(col("od")).as("od"), sum(col("share")).as("inflow"))
-          .select(col("node"), col("od"),
-            (lit(base) + expr("(85 * inflow) div 100")).as("rank"))
-          .localCheckpoint(true)
+        r = QueryScope.materialize("r")(
+          adj.select(col("node"), col("od"), explode(col("nbrs")).as("u"))
+            .join(share, "u")
+            .groupBy(col("node"))
+            .agg(min(col("od")).as("od"), sum(col("share")).as("inflow"))
+            .select(col("node"), col("od"),
+              (lit(base) + expr("(85 * inflow) div 100")).as("rank")))
       }
-      adj.unpersist(false)
       r.select(col("node"), col("rank"))
     } else {
       val adj = info.grouped
@@ -540,7 +526,7 @@ object GraphOps {
       var r = adj.filter(col("ci") === 0)
         .select(col("node"), lit(PrScale / nNodes).as("rank"))
       for (_ <- 1 to PrIters) {
-        r = adj.join(prRankSide(r), "node")
+        r = QueryScope.materialize("r")(adj.join(prRankSide(r), "node")
           // share BEFORE the explode: the generate then carries one long
           // per edge instead of re-materializing the nbrs array per row
           .select(expr("rank div od").as("share"), col("nbrs"))
@@ -548,8 +534,7 @@ object GraphOps {
           .groupBy("node")
           .agg(sum(col("share")).as("inflow"))
           .select(col("node"),
-            (lit(base) + expr("(85 * inflow) div 100")).as("rank"))
-          .localCheckpoint(true)
+            (lit(base) + expr("(85 * inflow) div 100")).as("rank")))
       }
       r
     }
@@ -577,8 +562,8 @@ object GraphOps {
       .groupBy("node").agg(count(lit(1)).as("deg"))
 
   private[graft] def triangleCounts(edgesIn: DataFrame): DataFrame = {
-    val edges = edgesIn.localCheckpoint(true)
-    triangleCountsOn(edges, degreesOf(edges).localCheckpoint(true))
+    val edges = QueryScope.materialize("edges")(edgesIn)
+    triangleCountsOn(edges, QueryScope.materialize("deg")(degreesOf(edges)))
   }
 
   /** The core pass over an already-MATERIALIZED edge list and its degree
@@ -604,10 +589,9 @@ object GraphOps {
     // replaces the e1⋈e2 self-join (its exchange + two sorts over the
     // oriented relation); per-row fanout is unchanged — C(outdeg, 2),
     // arboricity-bounded by the orientation
-    val adjO = oriented
+    val adjO = QueryScope.materialize("adjO")(oriented
       .groupBy(col("a"))
-      .agg(collect_list(struct(col("b"), col("rb"))).as("ns"))
-      .localCheckpoint(true)
+      .agg(collect_list(struct(col("b"), col("rb"))).as("ns")))
     val wedges = adjO
       .select(col("a"), explode(col("ns")).as("x"), col("ns"))
       .select(col("a"), col("x"), explode(col("ns")).as("y"))
@@ -764,11 +748,10 @@ object GraphOps {
     val all = old.withColumn("isNew", lit(false))
       .unionByName(batch.withColumn("isNew", lit(true)))
       .withColumn("k", col("src") * lit(1L << 32) + col("dst"))
-    val adj = all.select(col("src").as("u"), col("dst").as("v"),
+    val adj = QueryScope.materialize("adj")(all.select(col("src").as("u"), col("dst").as("v"),
         col("isNew"), col("k"))
       .unionByName(all.select(col("dst").as("u"), col("src").as("v"),
-        col("isNew"), col("k")))
-      .localCheckpoint(true) // two probes per fold
+        col("isNew"), col("k")))) // two probes per fold
     val e = batch.select(col("src").as("ea"), col("dst").as("eb"))
       .withColumn("ek", col("ea") * lit(1L << 32) + col("eb"))
     val tri = e
@@ -826,8 +809,8 @@ object GraphOps {
     // numerator and denominator share ONE materialized edge list and
     // ONE degree table (checkpointed — it feeds both the coefficient
     // denominator and the orientation ranks)
-    val edges = copurchaseEdges(s, d).localCheckpoint(true)
-    val deg = degreesOf(edges).localCheckpoint(true)
+    val edges = QueryScope.materialize("edges")(copurchaseEdges(s, d))
+    val deg = QueryScope.materialize("deg")(degreesOf(edges))
     deg
       .join(triangleCountsOn(edges, deg), Seq("node"), "left")
       .withColumn("n_triangles", coalesce(col("n_triangles"), lit(0L)))
@@ -857,11 +840,11 @@ object GraphOps {
       maxRounds: Int = MaxPeelRounds): DataFrame = {
     val spark = edgesIn.sparkSession
     import spark.implicits._
-    val edges = edgesIn.localCheckpoint(true)
-    val adj = edges.select(col("src").as("node"), col("dst").as("other"))
-      .unionByName(edges.select(col("dst").as("node"), col("src").as("other")))
-      .localCheckpoint(true)
-    var alive = adj.select("node").distinct().localCheckpoint(true)
+    val edges = QueryScope.materialize("edges")(edgesIn)
+    val adj = QueryScope.materialize("adj")(
+      edges.select(col("src").as("node"), col("dst").as("other"))
+        .unionByName(edges.select(col("dst").as("node"), col("src").as("other"))))
+    var alive = QueryScope.materialize("alive0")(adj.select("node").distinct())
     var dropped = Seq.empty[(Long, Int)].toDF("node", "dropped_round")
     var round = 0
     var converged = false
@@ -872,8 +855,7 @@ object GraphOps {
         .join(adj.join(alive.select(col("node").as("other")), "other"),
           Seq("node"), "left")
         .groupBy("node").agg(count(col("other")).as("d"))
-      val drop = deg.filter(col("d") < k).select("node")
-        .localCheckpoint(true)
+      val drop = QueryScope.materialize("drop")(deg.filter(col("d") < k).select("node"))
       if (drop.isEmpty) converged = true
       else {
         // only DROPPING rounds count against the budget: a cascade of
@@ -883,11 +865,9 @@ object GraphOps {
         if (round > maxRounds)
           throw new IllegalStateException(
             s"k-core peel did not converge in $maxRounds rounds")
-        dropped = dropped.unionByName(
-          drop.withColumn("dropped_round", lit(round)))
-          .localCheckpoint(true)
-        alive = alive.join(drop, Seq("node"), "left_anti")
-          .localCheckpoint(true)
+        dropped = QueryScope.materialize("dropped")(dropped.unionByName(
+          drop.withColumn("dropped_round", lit(round))))
+        alive = QueryScope.materialize("alive")(alive.join(drop, Seq("node"), "left_anti"))
       }
     }
     dropped.unionByName(alive.withColumn("dropped_round", lit(0)))
@@ -1016,23 +996,23 @@ object GraphOps {
          |ORDER BY side, node_id""".stripMargin)
       sb.toString
     }) { (s, d) =>
-    val edges = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-      .join(Tables.lineitem(s, d).select("l_orderkey", "l_partkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .distinct()
-      .localCheckpoint(true)
+    val edges = QueryScope.materialize("edges")(
+      Tables.orders(s, d).select("o_orderkey", "o_custkey")
+        .join(Tables.lineitem(s, d).select("l_orderkey", "l_partkey"),
+          col("l_orderkey") === col("o_orderkey"))
+        .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
+        .distinct())
     // materialize the half-round's join+agg ONCE — both consumers (the max
     // aggregate and the normalized projection) read the checkpointed rows,
     // instead of re-running the edge join per side of the crossJoin
     def normalized(raw: DataFrame, key: String, out: String): DataFrame = {
-      val scores = raw.localCheckpoint(true)
-      scores.crossJoin(broadcast(scores.agg(max(col("v")).as("m"))))
-        .select(col(key), expr(s"CAST(v * $HitsScale div m AS BIGINT)").as(out))
-        .localCheckpoint(true)
+      val scores = QueryScope.materialize("scores")(raw)
+      QueryScope.materialize("normalized")(
+        scores.crossJoin(broadcast(scores.agg(max(col("v")).as("m"))))
+          .select(col(key), expr(s"CAST(v * $HitsScale div m AS BIGINT)").as(out)))
     }
-    var h = edges.select(col("c")).distinct()
-      .withColumn("h", lit(HitsScale)).localCheckpoint(true)
+    var h = QueryScope.materialize("h0")(edges.select(col("c")).distinct()
+      .withColumn("h", lit(HitsScale)))
     var a = h.limit(0).select(col("c").as("p"), col("h").as("a"))
     for (_ <- 1 to HitsIters) {
       a = normalized(
@@ -1106,10 +1086,9 @@ object GraphOps {
     // explode
     val info = materializeChunked(copurchaseAdjacency(s, d))
     val adj = info.grouped
-    var dist = adj.filter(col("ci") === 0).select(col("node"))
+    var dist = QueryScope.materialize("dist0")(adj.filter(col("ci") === 0).select(col("node"))
       .filter(col("node") % BfsSeedMod === 0)
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
+      .withColumn("dist", lit(0L)))
     // DELTA-FRONTIER execution of the same semantics: only last round's
     // newly-labeled nodes expand (unweighted BFS labels each node at its
     // FIRST reach, so already-labeled nodes can never improve — min() over
@@ -1141,10 +1120,10 @@ object GraphOps {
         .select(col("d1"), explode(col("nbrs")).as("node"))
         .groupBy("node")
         .agg(min(col("d1")).as("dist"))
-      val fresh = reached.join(capped(dist.select(col("node").as("seen"))),
-          col("node") === col("seen"), "left_anti")
-        .localCheckpoint(true)
-      dist = dist.unionByName(fresh).localCheckpoint(true)
+      val fresh = QueryScope.materialize("fresh")(
+        reached.join(capped(dist.select(col("node").as("seen"))),
+            col("node") === col("seen"), "left_anti"))
+      dist = QueryScope.materialize("dist")(dist.unionByName(fresh))
       frontier = fresh
     }
     dist.select(col("node").as("part_id"), col("dist")).orderBy("part_id")
@@ -1219,8 +1198,8 @@ object GraphOps {
     require(nSeeds > 0, "seed set empty — PPR undefined")
     val restart = s"CASE WHEN node % $BfsSeedMod = 0" +
       s" THEN ${PrScale}L div ${nSeeds}L ELSE 0L END"
-    var rank = nodesOd.select(col("node"), col("od"),
-      expr(s"CAST($restart AS BIGINT)").as("rank")).localCheckpoint(true)
+    var rank = QueryScope.materialize("rank0")(nodesOd.select(col("node"), col("od"),
+      expr(s"CAST($restart AS BIGINT)").as("rank")))
     // Broadcast regime (node count ≤ the b157 cap): PULL rounds (r21,
     // the b119 shape) — the broadcast side is the share table projected
     // off the (node, od, rank) state, the inflow sum aggregates by the
@@ -1248,67 +1227,14 @@ object GraphOps {
             .select(expr("rank div od").as("share"), col("nbrs"))
             .select(col("share"), explode(col("nbrs")).as("inode"))
             .groupBy("inode").agg(sum("share").as("inflow"))
-      rank = nodesOd
+      rank = QueryScope.materialize("rank")(nodesOd
         .join(inflow, col("node") === col("inode"), "left")
         .select(col("node"), col("od"),
           expr(s"CAST((15 * ($restart)) div 100" +
-            " + (85 * coalesce(inflow, 0L)) div 100 AS BIGINT)").as("rank"))
-        .localCheckpoint(true)
+            " + (85 * coalesce(inflow, 0L)) div 100 AS BIGINT)").as("rank")))
     }
-    if (pprGraphSmall) adj.unpersist(false)
     rank.filter(col("rank") > 0).select(col("node"), col("rank"))
       .orderBy("node")
-  }
-
-  /** ONE round-body frame per iterative operator, over the materialized
-    * chunked co-purchase adjacency and a round-1 state — the plan-
-    * evidence hook behind the `plans/r21` `_round.txt` dumps (r20 VERDICT items
-    * 3/7: the committed query dumps show only the final round's
-    * ExistingRDD shape, so the round structure — grouped adjacency,
-    * broadcast lookup, exchange count — must be pinned by a dump of the
-    * loop body itself). Used by PlanDump's `graph_rounds` pseudo-name;
-    * not part of any declared query. */
-  private[graft] def roundFrames(s: SparkSession, d: String)
-      : Seq[(String, DataFrame)] = {
-    val info = materializeChunked(copurchaseAdjacency(s, d))
-    val adj = pullAdj(info.grouped, info.totE)
-    val l = adj.groupBy("node")
-      .agg(min(array_min(col("nbrs"))).as("label")).localCheckpoint(true)
-    val lpaRound = argmaxLabel(
-      adj.select(col("node"), explode(col("nbrs")).as("u"))
-        .join(broadcast(l.select(col("node").as("u"), col("label"))), "u")
-        .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt")),
-      info.packedOk)
-    val nodesOd = adj.filter(col("ci") === 0).select(col("node"), col("od"))
-    val r0 = nodesOd
-      .select(col("node"), col("od"),
-        lit(PrScale / math.max(info.nNodes, 1L)).as("rank"))
-      .localCheckpoint(true)
-    val prRound = adj.select(col("node"), col("od"),
-        explode(col("nbrs")).as("u"))
-      .join(broadcast(r0.select(col("node").as("u"),
-        expr("rank div od").as("share"))), "u")
-      .groupBy(col("node"))
-      .agg(min(col("od")).as("od"), sum(col("share")).as("inflow"))
-    val pprRound = nodesOd
-      .join(prRound.select(col("node").as("inode"), col("inflow")),
-        col("node") === col("inode"), "left")
-      .select(col("node"), col("od"),
-        coalesce(col("inflow"), lit(0L)).as("inflow"))
-    // b207 keeps the PUSH delta round (see the b207 A/B note): frontier
-    // joins map-side, explode carries frontier×degree only, the expand
-    // aggregate exchanges, and the seen set broadcasts into the anti
-    val dist0 = info.grouped.filter(col("ci") === 0).select(col("node"))
-      .filter(col("node") % BfsSeedMod === 0)
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    val bfsRound = info.grouped.join(broadcast(dist0), "node")
-      .select((col("dist") + 1L).as("d1"), col("nbrs"))
-      .select(col("d1"), explode(col("nbrs")).as("node"))
-      .groupBy("node").agg(min(col("d1")).as("dist"))
-      .join(broadcast(dist0.select(col("node").as("seen"))),
-        col("node") === col("seen"), "left_anti")
-    Seq("b157_round" -> lpaRound, "b119_round" -> prRound,
-      "b231_round" -> pprRound, "b207_round" -> bfsRound)
   }
 
   val entries: Seq[Entry] =

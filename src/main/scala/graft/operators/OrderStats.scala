@@ -51,9 +51,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * files) would split-brain the offsets against the rows and silently
   * produce wrong ranks. Callers must pass a deterministic plan — every
   * registry consumer does (pure column derivations over immutable
-  * parquet: b199/b213/b227/b239 localCheckpoint upstream; b250's score
+  * parquet: b199/b213/b227/b239 materialize upstream; b250's score
   * and b242's priorities are pure functions of the row). When in doubt,
-  * `df.localCheckpoint()` before calling; the helper does not force one
+  * `QueryScope.materialize` the input first; the helper does not force one
   * because for its common callers the input is a cheap scan-projection
   * and materializing it costs more than the second evaluation (the b94
   * negative A/B precedent).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** Round-5 dataset-maintenance + event-shaping operators: row-level
@@ -400,14 +401,13 @@ object PipelineOps {
     // join + its own funnel count) — materialize once so the three count
     // aggregations don't re-execute the whole chain per step
     def step(of: String): org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      prev => ev.filter(col("event_type") === of)
-        .join(prev, "user_id")
-        .filter(col("ts") > col("anchor"))
-        .groupBy("user_id").agg(min(col("ts")).as("anchor"))
-        .localCheckpoint(true)
-    val v = ev.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min(col("ts")).as("anchor"))
-      .localCheckpoint(true)
+      prev => QueryScope.materialize(of)(
+        ev.filter(col("event_type") === of)
+          .join(prev, "user_id")
+          .filter(col("ts") > col("anchor"))
+          .groupBy("user_id").agg(min(col("ts")).as("anchor")))
+    val v = QueryScope.materialize("v")(ev.filter(col("event_type") === "view")
+      .groupBy("user_id").agg(min(col("ts")).as("anchor")))
     val c = step("click")(v)
     val p = step("purchase")(c)
     funnelPresentation(Seq((1, "view", v), (2, "click", c), (3, "purchase", p)))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.llm.Winnowing
 import graft.sources.Tables
 
@@ -66,8 +67,8 @@ object ScaleOps {
        |FROM counts CROSS JOIN tot
        |WHERE cnt * users * 3 > 5 * total
        |ORDER BY cnt DESC, user_id""".stripMargin) { (s, d) =>
-    val counts = plantedEvents(s, d).groupBy("user_id").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+    val counts = QueryScope.materialize("counts")(
+      plantedEvents(s, d).groupBy("user_id").agg(count(lit(1)).as("cnt")))
     val tot = counts.agg(sum(col("cnt")).as("total"), count(lit(1)).as("users"))
     counts.crossJoin(broadcast(tot))
       .filter(col("cnt") * col("users") * 3 > lit(5) * col("total"))
@@ -457,8 +458,8 @@ object ScaleOps {
           s" % $PrioM) * $PrioKnuth % $PrioM + 1) AS BIGINT)"))
     // TakeOrdered for the K+1 head; the rank window then runs over the
     // selected rows only (bounded cardinality — the b125 exception)
-    val head = pri.orderBy(col("q").desc, col("doc_id")).limit(PrioK + 1)
-      .localCheckpoint(true)
+    val head = QueryScope.materialize("head")(
+      pri.orderBy(col("q").desc, col("doc_id")).limit(PrioK + 1))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("q").desc, col("doc_id"))
     val ranked = head.withColumn("rn", row_number().over(w))

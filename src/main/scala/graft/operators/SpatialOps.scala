@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 import graft.sources.Tables
 
 /** B200 — SPATIAL RADIUS SELF-JOIN via uniform grid blocking (the
@@ -69,7 +70,7 @@ object SpatialOps {
        |FROM p a JOIN p b ON a.user_id < b.user_id CROSS JOIN r
        |WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= r.r2
        |ORDER BY u1, u2""".stripMargin, bench = true) { (s, d) =>
-    val p = points(s, d).localCheckpoint(true)
+    val p = QueryScope.materialize("p")(points(s, d))
     // O(1) driver scalar (population count) sizes the radius and the
     // cell width w = ceil-isqrt(r²) ≥ r, exact in Long arithmetic
     val n = p.count()

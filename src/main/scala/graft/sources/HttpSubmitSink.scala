@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
 
 /** HTTP submit sink (SURVEY B5 — the A13 `this.submit(fc)` analog,
   * reference task.ts:149). Batch mode posts one FeatureCollection;
-  * streaming mode is meant for `foreachBatch(submitBatch(url))`.
+  * streaming delivery posts each micro-batch's partitions as JSON-lines
+  * chunks ([[submitJsonLinesChunked]], driven from `foreachBatch` by
+  * StreamReplay's B91 loop).
   *
   * Faithful A13/A14 semantics: the POST always runs, even when upstream
   * stages quarantined some centers (partial delivery), and the caller is
@@ -30,16 +32,9 @@ object HttpSubmitSink {
     post(graft.wildweb.WildWebPipeline.featureCollectionJson(features),
       "application/geo+json", url, batchId)
 
-  /** POST any DataFrame as JSON-lines (one object per row) — the
+  /** Per-PARTITION JSON-lines delivery (one object per row) — the
     * schema-agnostic delivery twin of [[submit]], and the body shape the
-    * B91 t2 loop re-reads and hash-matches. The collect IS the sink edge:
-    * one bounded micro-batch per POST, by the same contract that bounds
-    * the FeatureCollection. */
-  def submitJsonLines(df: DataFrame, url: String, batchId: Long = -1L): Int =
-    post(df.toJSON.collect().mkString("\n"), "application/x-ndjson", url, batchId)
-
-  /** Per-PARTITION JSON-lines delivery — the 100 TB form of
-    * [[submitJsonLines]]: each non-empty partition POSTs its own rows from
+    * B91 t2 loop re-reads and hash-matches. Each non-empty partition POSTs its own rows from
     * the executor that holds them, so no whole-batch driver collect exists
     * anywhere on the sink edge. Every POST carries X-Batch-Id plus
     * X-Chunk-Id = the partition id; a failed task is retried by Spark and
@@ -62,9 +57,13 @@ object HttpSubmitSink {
     chunks.value
   }
 
+  /** One client per JVM: JDK 17's HttpClient has no close(), and every
+    * instance keeps its selector thread until it is collected. */
+  private lazy val client =
+    HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
+
   private def post(body: String, contentType: String, url: String,
       batchId: Long, chunkId: Option[Int] = None): Int = {
-    val client = HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
     val builder = HttpRequest.newBuilder(URI.create(url))
       .header("Content-Type", contentType)
       .header("X-Batch-Id", batchId.toString)
@@ -76,8 +75,4 @@ object HttpSubmitSink {
       throw new RuntimeException(s"submit failed: HTTP ${resp.statusCode()}")
     resp.statusCode()
   }
-
-  /** foreachBatch adapter for streaming delivery (B54). */
-  def submitBatch(url: String): (DataFrame, Long) => Unit =
-    (df, batchId) => { submit(df, url, batchId); () }
 }

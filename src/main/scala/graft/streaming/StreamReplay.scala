@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.QueryScope
 
 /** Driver-visible streaming proofs (B51-B54): full chunked-file replays of
   * the events table through REAL streaming queries (file source,
@@ -253,14 +254,13 @@ object StreamReplay {
     try {
       val sessions = StreamingOps.sessionsCentsTws(StreamingOps.readStream(s, dir))
       s.catalog.dropTempView("b88_replay") // idempotent re-runs
-      StreamingOps.runToMemory(sessions, "b88_replay", "append")
+      QueryScope.materialize("replay")(StreamingOps.runToMemory(sessions, "b88_replay", "append")
         .filter(col("user_id") =!= flushUserId) // drop EXACTLY the sentinel's row
         .select(
           date_format(timestamp_micros(col("start_micros")),
             "yyyy-MM-dd HH:mm:ss.SSSSSS").as("session_start"),
           col("user_id"), col("n"), col("cents"))
-        .orderBy("user_id", "session_start")
-        .localCheckpoint(true) // materialize before the conf is restored
+        .orderBy("user_id", "session_start")) // materialize before the conf is restored
     } finally prev match {
       case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -423,7 +423,7 @@ object StreamReplay {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val advances = try {
-      StreamingOps.runToMemory(
+      QueryScope.materialize("replay")(StreamingOps.runToMemory(
         StreamingOps.readStream(s, chunkDir120)
           .select(col("user_id"), unix_micros(col("ts")).as("tsm"),
             col("event_type"))
@@ -432,8 +432,7 @@ object StreamReplay {
           .transformWithState(new FunnelProcessor(), TimeMode.None(),
             OutputMode.Append())
           .toDF("user_id", "step"),
-        "b120_replay", "append")
-        .localCheckpoint(true) // materialize before the conf is restored
+        "b120_replay", "append")) // materialize before the conf is restored
     } finally prev match {
       case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -466,7 +465,7 @@ object StreamReplay {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val attributed = try {
-      StreamingOps.runToMemory(
+      QueryScope.materialize("replay")(StreamingOps.runToMemory(
         StreamingOps.readStream(s, chunkDir121)
           .select(col("user_id"),
             // floor-division week bucket shared with b118 — matches
@@ -477,8 +476,7 @@ object StreamReplay {
           .transformWithState(new CohortProcessor(), TimeMode.None(),
             OutputMode.Append())
           .toDF("user_id", "cohort_week", "week"),
-        "b121_replay", "append")
-        .localCheckpoint(true) // materialize before the conf is restored
+        "b121_replay", "append")) // materialize before the conf is restored
     } finally prev match {
       case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -520,7 +518,7 @@ object StreamReplay {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val admitted = try {
-      StreamingOps.runToMemory(
+      QueryScope.materialize("replay")(StreamingOps.runToMemory(
         StreamingOps.readStream(s, chunkDir128, docs.schema)
           .as[(Long, String, Long, Long)]
           .groupByKey(r => (r._2, r._4))
@@ -528,8 +526,7 @@ object StreamReplay {
             new AdmissionProcessor(graft.llm.CorpusBudget.ShardBudget),
             TimeMode.None(), OutputMode.Append())
           .toDF("doc_id", "source", "n_tok", "start"),
-        "b128_replay", "append")
-        .localCheckpoint(true) // materialize before the conf is restored
+        "b128_replay", "append")) // materialize before the conf is restored
     } finally prev match {
       case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -704,9 +701,9 @@ object StreamReplay {
       // normalize tail's self-join (conflicting-reference resolution
       // fails on a shared MemoryPlan view) AND materializes before the
       // provider conf is restored
-      val emitted = StreamingOps.runToMemory(pairs, "b214_replay", "append")
-        .groupBy("prev_type", "next_type").agg(count(lit(1)).as("n"))
-        .localCheckpoint(true)
+      val emitted = QueryScope.materialize("emitted")(
+        StreamingOps.runToMemory(pairs, "b214_replay", "append")
+          .groupBy("prev_type", "next_type").agg(count(lit(1)).as("n")))
       graft.operators.PipelineOps.normalizeTransitions(emitted)
     } finally prev match {
       case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
@@ -742,8 +739,8 @@ object StreamReplay {
         StreamingOps.readStream(s, chunkDir224))
       s.catalog.dropTempView("b224_replay") // idempotent re-runs
       // checkpoint before the share tail's self-join (the b214 rule)
-      val emitted = StreamingOps.runToMemory(att, "b224_replay", "append")
-        .localCheckpoint(true)
+      val emitted = QueryScope.materialize("emitted")(
+        StreamingOps.runToMemory(att, "b224_replay", "append"))
       graft.operators.AnalyticsOps.channelShares(emitted)
     } finally prev match {
       case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
@@ -778,9 +775,8 @@ object StreamReplay {
       val flags = StreamingOps.zscoreTws(
         StreamingOps.readStream(s, chunkDir234))
       s.catalog.dropTempView("b234_replay") // idempotent re-runs
-      StreamingOps.runToMemory(flags, "b234_replay", "append")
-        .orderBy("user_id", "event_id")
-        .localCheckpoint(true) // materialize before the conf is restored
+      QueryScope.materialize("replay")(StreamingOps.runToMemory(flags, "b234_replay", "append")
+        .orderBy("user_id", "event_id")) // materialize before the conf is restored
     } finally prev match {
       case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -1033,8 +1029,8 @@ object StreamReplay {
       s.catalog.dropTempView("b259_replay") // idempotent re-runs
       val uw = StreamingOps.runToMemory(weekly, "b259_replay", "append")
         .filter(col("user_id") =!= -1L) // drop EXACTLY the sentinel's key
-      graft.operators.AnalyticsOps.growthFromWeekly(uw)
-        .localCheckpoint(true) // materialize before the conf is restored
+      QueryScope.materialize("replay")( // before the conf is restored
+        graft.operators.AnalyticsOps.growthFromWeekly(uw))
     } finally prev match {
       case Some(p) =>
         s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
@@ -1092,14 +1088,13 @@ object StreamReplay {
       s.catalog.dropTempView("b269_replay") // idempotent re-runs
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("start_us"))
-      StreamingOps.runToMemory(islands, "b269_replay", "append")
+      QueryScope.materialize("replay")(StreamingOps.runToMemory(islands, "b269_replay", "append")
         .filter(col("user_id") =!= -1L) // drop EXACTLY the sentinel's key
         .withColumn("island", row_number().over(w).cast("long"))
         .select(col("user_id"), col("island"), col("n_events"),
           col("start_us"), col("end_us"),
           expr("(end_us - start_us) div 1000").as("dur_ms"))
-        .orderBy("user_id", "island")
-        .localCheckpoint(true) // materialize before the conf is restored
+        .orderBy("user_id", "island")) // materialize before the conf is restored
     } finally prev match {
       case Some(p) =>
         s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
@@ -1140,7 +1135,7 @@ object StreamReplay {
         " ELSE text END").as("text"),
       expr("CASE WHEN doc_id % 10 = 0 THEN 2 * n_chars + 1" +
         " ELSE n_chars END").as("n_chars"))
-    val pa = graft.llm.QualityDrift.profile(a).localCheckpoint(true)
+    val pa = QueryScope.materialize("pa")(graft.llm.QualityDrift.profile(a))
     def streamedProfile(snap: org.apache.spark.sql.DataFrame, dir: String,
         view: String): org.apache.spark.sql.DataFrame = {
       StreamingOps.writeChunksDf(snap, dir, n = 6, sortCols = Seq("doc_id"))
@@ -1187,10 +1182,9 @@ object StreamReplay {
     import org.apache.spark.sql.types._
     val docs = graft.sources.Tables.documents(s, d)
     // the static model-verdict lookup, materialized before the replay
-    val ppl = graft.llm.Perplexity
+    val ppl = QueryScope.materialize("ppl")(graft.llm.Perplexity
       .perplexityReport(docs.select(col("doc_id"), col("text"), col("lang")))
-      .select(col("doc_id"), expr("CAST(bucket = 3 AS BIGINT)").as("f_ppl"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), expr("CAST(bucket = 3 AS BIGINT)").as("f_ppl")))
     StreamingOps.writeChunksDf(
       docs.select(col("doc_id"), col("text"), col("n_chars")),
       chunkDir263, n = 6, sortCols = Seq("doc_id"))
@@ -1401,8 +1395,8 @@ object StreamReplay {
       .select(col("doc_id"), col("text"))
     val rel = graft.llm.CleanPipeline.hygieneRelease(docs) // checkpoints internally (r21)
     val prev = rel.filter(col("doc_id") % 10 < CR.PublishedParts)
-    val prevCount = prev.agg(count(lit(1)).as("n_prev")).localCheckpoint(true)
-    val fpPrev = CR.fpOf(prev).localCheckpoint(true)
+    val prevCount = QueryScope.materialize("prevCount")(prev.agg(count(lit(1)).as("n_prev")))
+    val fpPrev = QueryScope.materialize("fpPrev")(CR.fpOf(prev))
     val parts = rel.withColumn("part",
         when(col("doc_id") % 10 < CR.PublishedParts, 0)
           .when(col("doc_id") % 10 === 8, 1).otherwise(2))

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.exec.QueryScope
 
 /** The reference's whole dataflow (A1-A14, reference task.ts:67-158)
   * re-expressed as one declarative Spark plan.
@@ -114,25 +115,26 @@ object WildWebPipeline {
           array(-col("lon_d"), col("lat_d")).as("coordinates")).as("geometry"))
   }
 
-  /** Full A1-A14 run over a landed directory. */
-  def run(spark: SparkSession, dir: String, config: WildWebConfig): Outcome = {
-    val envelopes = readEnvelopes(spark, dir).cache()
-    try {
-      // A14 — quarantine centers whose body failed schema decode (the
-      // reference catches per center and continues, task.ts:75,144-146)
-      val errors = envelopes.filter(col("envelope").isNull)
-        .select(col("center"), lit("envelope decode failed").as("error"))
-      // A4 — cardinality guard: != 1 element aborts the whole run silently.
-      // Driver-side count over one row per center — never data-scale.
-      val badCardinality = envelopes
-        .filter(col("envelope").isNotNull && size(col("envelope")) =!= 1)
-        .count()
-      if (badCardinality > 0) Aborted
-      else {
-        val feats = features(incidents(envelopes), config)
-        Completed(feats.localCheckpoint(true), errors.localCheckpoint(true))
-      }
-    } finally envelopes.unpersist()
+  /** Full A1-A14 run over a landed directory. The envelopes are persisted
+    * for the run and released when it returns or fails. */
+  def run(spark: SparkSession, dir: String, config: WildWebConfig): Outcome =
+      QueryScope("wildweb") {
+    val envelopes = QueryScope.persist(readEnvelopes(spark, dir))
+    // A14 — quarantine centers whose body failed schema decode (the
+    // reference catches per center and continues, task.ts:75,144-146)
+    val errors = envelopes.filter(col("envelope").isNull)
+      .select(col("center"), lit("envelope decode failed").as("error"))
+    // A4 — cardinality guard: != 1 element aborts the whole run silently.
+    // Driver-side count over one row per center — never data-scale.
+    val badCardinality = envelopes
+      .filter(col("envelope").isNotNull && size(col("envelope")) =!= 1)
+      .count()
+    if (badCardinality > 0) Aborted
+    else {
+      val feats = features(incidents(envelopes), config)
+      Completed(QueryScope.materialize("feats")(feats),
+        QueryScope.materialize("errors")(errors))
+    }
   }
 
   /** A12/A13 — assemble the FeatureCollection JSON (task.ts:70-73,142,149).

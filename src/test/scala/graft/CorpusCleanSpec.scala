@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.exec.QueryScope
 import graft.llm.{CleanPipeline, Decontaminate, SpanDedup, TextDedup}
 import graft.sources.Tables
 
@@ -10,6 +11,18 @@ import graft.sources.Tables
 class CorpusCleanSpec extends AnyFunSuite {
   private val spark = TestSession.spark
   private val sf = TestSession.sf0001
+
+  /** The physical operators of `leg`, one a line, as the shipping entry
+    * `entry` recorded it before its eager checkpoint. A persisted relation
+    * the leg reads stays one scan line: its own plan (the occurrence
+    * relation's size-earned repartition) belongs to no leg. */
+  private def legPlan(entry: String, leg: String): String = QueryScope("pin") {
+    SparkEntry.queries(entry)(spark, sf)
+    val plan = QueryScope.legs.collectFirst { case (`leg`, p) => p }
+      .getOrElse(fail(s"$entry recorded no $leg leg"))
+    spark.sessionState.executePlan(plan).sparkPlan
+      .collect { case op => op.simpleString(1000) }.mkString("\n")
+  }
 
   test("B92: every planted benchmark-leak doc is flagged contaminated") {
     val report = SparkEntry.queries("b92_text_decontaminate")(spark, sf)
@@ -45,14 +58,6 @@ class CorpusCleanSpec extends AnyFunSuite {
         s"copy ${r.getLong(0)}: removed ${r.getLong(2)} of ${r.getLong(1)} words")
       assert(r.getString(3) === "", s"copy ${r.getLong(0)} kept text")
     }
-  }
-
-  test("B93: materializeOcc is result-invisible (recompute path ≡ checkpointed path)") {
-    val docs = TextDedup.docsWithDups(spark, sf)
-    val a = SpanDedup.removeRepeatedSpans(docs).collect().map(_.toString).toSeq
-    val b = SpanDedup.removeRepeatedSpans(docs, materializeOcc = false)
-      .collect().map(_.toString).toSeq
-    assert(a === b, "occurrence materialization changed results")
   }
 
   test("B94 edge: 'originally empty' survives span removal; 'fully deleted' does not") {
@@ -123,12 +128,9 @@ class CorpusCleanSpec extends AnyFunSuite {
   }
 
   test("B93 plan: first-occurrence selection is a salted two-phase partial aggregate, not a window") {
-    // materializeOcc = false keeps the whole tree lazy so the plan pin
-    // sees the stats/dup stages (the default path materializes the
-    // per-doc covered relation eagerly); results are pinned equal above
-    val plan = SpanDedup.removeRepeatedSpans(
-      TextDedup.docsWithDups(spark, sf), materializeOcc = false)
-      .queryExecution.sparkPlan.toString
+    // the entry plan starts at the eager per-doc covered checkpoint; the
+    // stats/dup stages live in that leg's recorded plan
+    val plan = legPlan("b93_dedup_spans", "perDoc")
     assert(plan.contains("partial_min"),
       s"per-gram first-occurrence lost its map-side partial aggregate:\n$plan")
     assert(!plan.contains("Window"),
@@ -224,25 +226,15 @@ class CorpusCleanSpec extends AnyFunSuite {
 
   test("B244 plan: island coalescing windows are doc-partitioned, " +
     "never SinglePartition") {
-    // the lazy spelling exposes the island window (the default path
-    // materializes the per-doc interval relation eagerly)
-    val plan = SpanDedup.removeLongRepeats(
-      Tables.documents(spark, sf).select(col("doc_id"), col("text")),
-      materializeOcc = false).queryExecution.sparkPlan.toString
+    // the island window lives in the per-doc interval leg, which the
+    // shipping entry materializes eagerly
+    val plan = legPlan("b244_exact_substr_dedup", "perDoc")
     assert(plan.contains("Window"), plan.take(1500))
     assert(!plan.contains("Exchange SinglePartition"), plan.take(1500))
     // and the shipping entry's default materialized path, under AQE
     val shipped = SparkEntry.queries("b244_exact_substr_dedup")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!shipped.contains("Exchange SinglePartition"), shipped.take(1500))
-  }
-
-  test("B244: materializeOcc is result-invisible (recompute path ≡ persisted path)") {
-    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    val a = SpanDedup.removeLongRepeats(docs).collect().map(_.toString).toSeq
-    val b = SpanDedup.removeLongRepeats(docs, materializeOcc = false)
-      .collect().map(_.toString).toSeq
-    assert(a === b, "occurrence materialization changed b244 results")
   }
 
   test("a failing span-pass checkpoint leaves no relation persisted") {
@@ -262,11 +254,13 @@ class CorpusCleanSpec extends AnyFunSuite {
         "hygieneRelease" -> (() => CleanPipeline.hygieneRelease(docs)),
         "removeRepeatedSpans" -> (() => SpanDedup.removeRepeatedSpans(docs)),
         "removeLongRepeats" -> (() => SpanDedup.removeLongRepeats(docs)))) {
-      val (rdds, cached) = (sc.getPersistentRDDs.size, entries)
+      val (rdds, cached) = (sc.getPersistentRDDs.keySet, entries)
       val e = intercept[Exception](run())
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => String.valueOf(t.getMessage).contains("planted text failure")), e)
-      assert(sc.getPersistentRDDs.size === rdds, label)
+      // new ids, not the count: the ContextCleaner may drop earlier
+      // tests' checkpoints while this runs
+      assert((sc.getPersistentRDDs.keySet -- rdds).isEmpty, label)
       assert(entries === cached, label)
     }
   }

@@ -10,9 +10,10 @@ import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, SimpleFunctionR
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Natives
 
-/** One native-function table, one session factory: the table reaches
-  * every session through an entry or GraftExtensions, and `src/main`
-  * keeps no second way to build a session or register a native. */
+/** One native-function table, one session factory, one query scope: the
+  * table reaches every session through an entry or GraftExtensions, and
+  * `src/main` keeps no second way to build a session, register a native,
+  * or checkpoint, persist and run concurrent legs. */
 class NativesSpec extends AnyFunSuite {
   private val names = Natives.table.map(_._1)
 
@@ -50,18 +51,29 @@ class NativesSpec extends AnyFunSuite {
     assert(listed === once)
   }
 
+  private lazy val sources: Seq[Path] = Files.walk(Paths.get("src/main/scala"))
+    .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+  private def offenders(pattern: String, allowed: Set[String]): Seq[Path] =
+    sources.filter(f => !allowed(f.getFileName.toString) &&
+      pattern.r.findFirstIn(Files.readString(f)).isDefined)
+
   test("src/main builds sessions and registers natives in one place each") {
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 100, s"source scan found only ${files.size} files")
-    def offenders(pattern: String, allowed: Set[String]): Seq[Path] =
-      files.filter(f => !allowed(f.getFileName.toString) &&
-        pattern.r.findFirstIn(Files.readString(f)).isDefined)
+    assert(sources.size > 100, s"source scan found only ${sources.size} files")
     assert(offenders("""SparkSession\.builder""", Set("Sessions.scala")) === Seq.empty)
     assert(offenders("RegisterOnce", Set.empty) === Seq.empty)
     assert(offenders("createOrReplaceTempFunction",
       Set("Natives.scala", "ScaleOps.scala")) === Seq.empty)
     assert(offenders("""\w+(Expression|Codec|Fallback)\.register\(""", Set.empty) === Seq.empty)
+  }
+
+  test("src/main checkpoints, persists and runs concurrent legs only through QueryScope") {
+    assert(sources.size > 100, s"source scan found only ${sources.size} files")
+    val scope = Set("QueryScope.scala")
+    for (raw <- Seq("""localCheckpoint\(""", """(?<!QueryScope)\.persist\(""",
+        """\.cache\(\)""", """unpersist\(""", "newFixedThreadPool",
+        """scala\.concurrent\.(Future|\{)"""))
+      assert(offenders(raw, scope) === Seq.empty, raw)
+    assert(offenders("releaseCheckpoint|roundFrames|materializeOcc|graph_rounds|span_stages",
+      Set.empty) === Seq.empty)
   }
 }

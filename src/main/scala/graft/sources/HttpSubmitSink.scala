@@ -2,6 +2,7 @@ package graft.sources
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Duration
 
 import org.apache.spark.sql.DataFrame
@@ -27,7 +28,9 @@ import org.apache.spark.sql.functions._
 object HttpSubmitSink {
 
   /** POST a feature DataFrame (wildweb Feature schema) as one GeoJSON
-    * FeatureCollection. Returns the HTTP status. */
+    * FeatureCollection, sent as the one byte array
+    * [[graft.wildweb.WildWebPipeline.featureCollectionJson]] builds.
+    * Returns the HTTP status. */
   def submit(features: DataFrame, url: String, batchId: Long = -1L): Int =
     post(graft.wildweb.WildWebPipeline.featureCollectionJson(features),
       "application/geo+json", url, batchId)
@@ -49,7 +52,7 @@ object HttpSubmitSink {
     df.toJSON.foreachPartition { (rows: Iterator[String]) =>
       if (rows.hasNext) {
         val chunkId = org.apache.spark.TaskContext.getPartitionId()
-        post(rows.mkString("\n"), "application/x-ndjson", url, batchId,
+        post(rows.mkString("\n").getBytes(UTF_8), "application/x-ndjson", url, batchId,
           chunkId = Some(chunkId))
         chunks.add(1L)
       }
@@ -62,14 +65,16 @@ object HttpSubmitSink {
   private lazy val client =
     HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
 
-  private def post(body: String, contentType: String, url: String,
+  /** POSTs `body` as is; the response body is discarded, only the status
+    * is read. */
+  private def post(body: Array[Byte], contentType: String, url: String,
       batchId: Long, chunkId: Option[Int] = None): Int = {
     val builder = HttpRequest.newBuilder(URI.create(url))
       .header("Content-Type", contentType)
       .header("X-Batch-Id", batchId.toString)
     chunkId.foreach(c => builder.header("X-Chunk-Id", c.toString))
-    val req = builder.POST(HttpRequest.BodyPublishers.ofString(body)).build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+    val req = builder.POST(HttpRequest.BodyPublishers.ofByteArray(body)).build()
+    val resp = client.send(req, HttpResponse.BodyHandlers.discarding())
     // non-2xx → error, mirroring the fetch guard (task.ts:84-86)
     if (resp.statusCode() / 100 != 2)
       throw new RuntimeException(s"submit failed: HTTP ${resp.statusCode()}")

@@ -10,10 +10,10 @@ import java.time.Duration
   * reference deliberately serializes requests for an upstream rate limit
   * (CHANGELOG v1.2.0), and that contract must survive re-platforming, so
   * this runs driver-side with concurrency 1 (the center list is
-  * config-scale, dozens of entries — never data-scale). Bodies land as
-  * one JSON file per center in `outDir`, which the distributed pipeline
-  * ([[graft.wildweb.WildWebPipeline.readEnvelopes]]) then scans in
-  * parallel.
+  * config-scale, dozens of entries — never data-scale). Each body lands
+  * byte for byte as received, one JSON file per center in `outDir`, which
+  * the distributed pipeline ([[graft.wildweb.WildWebPipeline.readEnvelopes]])
+  * then scans in parallel.
   *
   * Error semantics are A14's: a non-2xx response or transport failure
   * quarantines that center and the fetch continues (task.ts:75,84-86,
@@ -21,16 +21,18 @@ import java.time.Duration
   */
 object WildWebFetcher {
 
-  /** transport: url → (status, body). Pluggable for tests; the default is
-    * a JDK HttpClient GET. */
-  def httpTransport(timeout: Duration = Duration.ofSeconds(30)): String => (Int, String) = {
-    val client = HttpClient.newBuilder().connectTimeout(timeout).build()
-    url => {
-      val resp = client.send(
-        HttpRequest.newBuilder(URI.create(url)).GET().build(),
-        HttpResponse.BodyHandlers.ofString())
-      (resp.statusCode(), resp.body())
-    }
+  /** One client per JVM: JDK 17's HttpClient has no close(), and every
+    * instance keeps its selector thread until it is collected. */
+  private lazy val client =
+    HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(30)).build()
+
+  /** transport: url → (status, body bytes). Pluggable for tests; the
+    * default is a JDK HttpClient GET. */
+  def httpTransport(): String => (Int, Array[Byte]) = url => {
+    val resp = client.send(
+      HttpRequest.newBuilder(URI.create(url)).GET().build(),
+      HttpResponse.BodyHandlers.ofByteArray())
+    (resp.statusCode(), resp.body())
   }
 
   /** Fetch every center in order; land bodies as `<outDir>/<center>.json`.
@@ -39,7 +41,7 @@ object WildWebFetcher {
       centers: Seq[String],
       urlFor: String => String,
       outDir: String,
-      transport: String => (Int, String)): (Seq[String], Seq[(String, String)]) = {
+      transport: String => (Int, Array[Byte])): (Seq[String], Seq[(String, String)]) = {
     Files.createDirectories(Paths.get(outDir))
     val results = centers.map { center => // sequential by construction
       try {
@@ -47,7 +49,7 @@ object WildWebFetcher {
         if (status / 100 != 2) // non-2xx → error (task.ts:84-86)
           Left(center -> s"HTTP $status")
         else {
-          Files.writeString(Paths.get(s"$outDir/$center.json"), body)
+          Files.write(Paths.get(s"$outDir/$center.json"), body)
           Right(center)
         }
       } catch {

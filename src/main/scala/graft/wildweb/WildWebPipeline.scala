@@ -1,9 +1,14 @@
 package graft.wildweb
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.exec.QueryScope
 
 /** The reference's whole dataflow (A1-A14, reference task.ts:67-158)
@@ -28,8 +33,10 @@ import graft.exec.QueryScope
   *
   * Scale posture: everything is one narrow pipeline (scan → filter → project)
   * with zero shuffles; at 100 TB the input directory is partitioned by
-  * center/day and the plan parallelizes per file split. Only the A4 guard
-  * runs a driver-side count, over one tiny row per center.
+  * center/day and the plan parallelizes per file split. An invocation is
+  * one Spark job for [[run]] and one collect for the submit body: the A4
+  * guard and the A14 quarantine are observed metrics of the features'
+  * own scan, one tiny value per center.
   */
 object WildWebPipeline {
 
@@ -115,43 +122,67 @@ object WildWebPipeline {
           array(-col("lon_d"), col("lat_d")).as("coordinates")).as("geometry"))
   }
 
-  /** Full A1-A14 run over a landed directory. The envelopes are persisted
-    * for the run and released when it returns or fails. */
+  /** Full A1-A14 run over a landed directory as one Spark job, the
+    * `feats` checkpoint. An observation at the envelope level, below every
+    * filter, records the A4 violations and the undecoded centers (A14) in
+    * the same pass; it is read once the checkpoint has returned, and the
+    * quarantine is built on the driver, sorted by center. */
   def run(spark: SparkSession, dir: String, config: WildWebConfig): Outcome =
       QueryScope("wildweb") {
-    val envelopes = QueryScope.persist(readEnvelopes(spark, dir))
-    // A14 — quarantine centers whose body failed schema decode (the
-    // reference catches per center and continues, task.ts:75,144-146)
-    val errors = envelopes.filter(col("envelope").isNull)
-      .select(col("center"), lit("envelope decode failed").as("error"))
-    // A4 — cardinality guard: != 1 element aborts the whole run silently.
-    // Driver-side count over one row per center — never data-scale.
-    val badCardinality = envelopes
-      .filter(col("envelope").isNotNull && size(col("envelope")) =!= 1)
-      .count()
-    if (badCardinality > 0) Aborted
+    val obs = Observation()
+    val envelopes = readEnvelopes(spark, dir).observe(obs,
+      // A4 — cardinality guard: a decoded envelope with != 1 elements
+      // aborts the whole run silently
+      count_if(col("envelope").isNotNull && size(col("envelope")) =!= 1).as("bad"),
+      // A14 — quarantine centers whose body failed schema decode (the
+      // reference catches per center and continues, task.ts:75,144-146)
+      collect_list(when(col("envelope").isNull, col("center"))).as("undecoded"))
+    // Required, not an optimization: under ANSI, getItem(0) on [] throws
+    val feats = QueryScope.materialize("feats")(features(
+      incidents(envelopes.filter(size(col("envelope")) === 1)), config))
+    val metrics = obs.get
+    if (metrics("bad").asInstanceOf[Long] > 0) Aborted
     else {
-      val feats = features(incidents(envelopes), config)
-      Completed(QueryScope.materialize("feats")(feats),
-        QueryScope.materialize("errors")(errors))
+      val undecoded = metrics("undecoded").asInstanceOf[scala.collection.Seq[String]]
+      Completed(feats, spark.createDataFrame(
+        undecoded.sorted.map(c => Row(c, "envelope decode failed")).asJava, errorSchema))
     }
   }
 
-  /** A12/A13 — assemble the FeatureCollection JSON (task.ts:70-73,142,149).
-    * Collects to the driver: this is the submit-sink edge (one HTTP POST in
-    * the reference), test-scale by definition. The 100 TB path writes
-    * feature JSON-lines with `df.write.json` instead and submits per batch
-    * via foreachBatch. */
-  def featureCollectionJson(features: DataFrame): String = {
-    val featJson = features
-      .orderBy("id")
-      // ignoreNullFields=false: JSON.stringify keeps explicit nulls — the
-      // reference emits "ic": null, not an absent field (task.ts:133)
-      .select(to_json(
+  private val errorSchema = StructType(Seq(
+    StructField("center", StringType, nullable = false),
+    StructField("error", StringType, nullable = false)))
+
+  /** Spark's `orderBy` order for strings (UTF8String.compareTo) over their
+    * UTF-8 bytes: unsigned bytes, a prefix first, null first. */
+  private val utf8Order: Ordering[Array[Byte]] =
+    Ordering.comparatorToOrdering(java.util.Arrays.compareUnsigned(_: Array[Byte], _: Array[Byte]))
+
+  /** A12/A13 — the FeatureCollection JSON as UTF-8 bytes, features in
+    * `orderBy("id")` order (task.ts:70-73,142,149). One collect of
+    * (id, feature JSON) as bytes, sorted on the driver and copied into one
+    * presized array. This is the submit-sink edge (one HTTP POST in the
+    * reference), test-scale by definition. The 100 TB path writes feature
+    * JSON-lines with `df.write.json` instead and submits per batch via
+    * foreachBatch. */
+  def featureCollectionJson(features: DataFrame): Array[Byte] = {
+    val feats = features
+      .select(col("id").cast("binary"), to_json(
         struct(col("id"), col("type"), col("properties"), col("geometry")),
-        java.util.Map.of("ignoreNullFields", "false"))).as[String](
-          features.sparkSession.implicits.newStringEncoder)
+        // ignoreNullFields=false: JSON.stringify keeps explicit nulls — the
+        // reference emits "ic": null, not an absent field (task.ts:133)
+        java.util.Map.of("ignoreNullFields", "false")).cast("binary"))
+      .as(Encoders.tuple(Encoders.BINARY, Encoders.BINARY))
       .collect()
-    featJson.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+      .sortBy(_._1)(utf8Order)
+    val head = """{"type":"FeatureCollection","features":[""".getBytes(UTF_8)
+    val body = ByteBuffer.allocate(
+      head.length + feats.iterator.map(_._2.length).sum + (feats.length - 1).max(0) + 2)
+    body.put(head)
+    for (((_, json), i) <- feats.iterator.zipWithIndex) {
+      if (i > 0) body.put(','.toByte)
+      body.put(json)
+    }
+    body.put(']'.toByte).put('}'.toByte).array()
   }
 }

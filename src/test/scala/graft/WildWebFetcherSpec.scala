@@ -13,13 +13,13 @@ class WildWebFetcherSpec extends AnyFunSuite {
   test("fetch is sequential, errors quarantine the center and continue") {
     val order = scala.collection.mutable.ArrayBuffer[String]()
     val inFlight = new AtomicInteger(0)
-    val ok = """[{"retrieved": "2026-01-15T12:00:00Z", "data": null}]"""
-    val transport: String => (Int, String) = { url =>
+    val ok = """[{"retrieved": "2026-01-15T12:00:00Z", "data": null}]""".getBytes("UTF-8")
+    val transport: String => (Int, Array[Byte]) = { url =>
       assert(inFlight.incrementAndGet() === 1, "concurrent fetch detected")
       try {
         order += url
         url match {
-          case u if u.contains("BAD-HTTP") => (500, "boom")
+          case u if u.contains("BAD-HTTP") => (500, "boom".getBytes("UTF-8"))
           case u if u.contains("BAD-NET")  => throw new java.io.IOException("reset")
           case _ => (200, ok)
         }
@@ -38,6 +38,27 @@ class WildWebFetcherSpec extends AnyFunSuite {
     val envs = graft.wildweb.WildWebPipeline.readEnvelopes(TestSession.spark, dir)
     assert(envs.count() === 3)
     assert(envs.filter(org.apache.spark.sql.functions.col("envelope").isNull).count() === 0)
+  }
+
+  test("the HTTP transport lands each body byte for byte") {
+    // 0xFF is not UTF-8: a decode and re-encode would replace it
+    val body = Array[Byte]('['.toByte, 0xFF.toByte, ']'.toByte)
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress(0), 0)
+    server.createContext("/centers", exchange => {
+      exchange.sendResponseHeaders(200, body.length)
+      exchange.getResponseBody.write(body)
+      exchange.close()
+    })
+    server.start()
+    try {
+      val dir = Files.createTempDirectory("graft_fetch_bytes")
+      val (landed, _) = WildWebFetcher.fetchAll(Seq("RAW-DC"),
+        c => s"http://localhost:${server.getAddress.getPort}/centers/$c", dir.toString,
+        WildWebFetcher.httpTransport())
+      assert(landed === Seq("RAW-DC"))
+      assert(Files.readAllBytes(dir.resolve("RAW-DC.json")).sameElements(body))
+    } finally server.stop(0)
   }
 
   test("end-to-end: fetch from a real local server, then pipeline + golden count") {

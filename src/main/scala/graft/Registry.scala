@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions}
 
 /** Central query registry: every operator from SURVEY.md §2B is one [[Entry]]
   * — a named Spark DataFrame query plus (when SQL-expressible) the equivalent
@@ -33,6 +33,16 @@ object Registry {
 
   def entryNoOracle(name: String, bench: Boolean = false)(q: Q): Entry =
     Entry(name, scoped(name, q), None, bench)
+
+  /** The plant-id collision guard: an entry that plants synthetic rows at
+    * `id + offset` fails at plan-build when a dataset's ids reach the
+    * offset, instead of aliasing a plant onto a real row. One `max` job;
+    * an empty source (max is NULL) passes. */
+  def requireIdsBelow(df: DataFrame, idCol: String, offset: Long, entry: String): Unit = {
+    val maxId = df.agg(functions.max(idCol).cast("long")).head.getAs[java.lang.Long](0)
+    for (m <- Option(maxId)) require(m < offset, s"$entry: max($idCol)=$m collides" +
+      s" with the plant-id offset $offset — raise the offset for this dataset")
+  }
 
   /** Installs the native functions before the query is built, so every
     * entry runs in any session, extension-less ones included, and builds

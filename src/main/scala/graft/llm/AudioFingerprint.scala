@@ -208,13 +208,7 @@ object AudioFingerprint {
     import s.implicits._
     val docs = Tables.documents(s, d).filter(col("doc_id") % 3 === 1)
       .select(col("doc_id").as("media_id"))
-    // plant-id collision guard (the b282/b284 ADVICE class); null-safe
-    // read — max() is NULL on an empty source (ADVICE r18)
-    val maxId = Option(docs.agg(max(col("media_id")).cast("long")).head
-      .getAs[java.lang.Long](0)).map(_.longValue).getOrElse(-1L)
-    require(maxId < AudioIdOffset,
-      s"b299: max(media_id)=$maxId collides with AudioIdOffset=" +
-        s"$AudioIdOffset — raise the offset for this dataset")
+    requireIdsBelow(docs, "media_id", AudioIdOffset, "b299")
     docs.as[Long].mapPartitions { ids =>
       ids.flatMap { id =>
         val payload = wavPayload(id)

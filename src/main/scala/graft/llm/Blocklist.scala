@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.WorkDirs
 import graft.sources.Tables
 
 /** B182 — DICTIONARY BLOCKLIST FILTER (the C4 "bad words" pass, Raffel
@@ -113,9 +114,6 @@ object Blocklist {
       .orderBy("doc_id")
   }
 
-  private lazy val chunkDir183: String =
-    java.nio.file.Files.createTempDirectory("graft_b183_admission").toString
-
   /** B183 — BLOCKLIST ADMISSION ON INGEST: the b182 chain run where
     * production actually runs it — at the door, on the arriving stream,
     * before anything lands in the lake (the b96/b176 one-implementation-
@@ -134,12 +132,12 @@ object Blocklist {
       blocklistOracleSql) { (s, d) =>
     import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    graft.streaming.StreamingOps.writeChunksDf(docs, chunkDir183, n = 6,
+    val dir = WorkDirs("b183_admission")
+    graft.streaming.StreamingOps.writeChunksDf(docs, dir, n = 6,
       sortCols = Seq("doc_id"))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = graft.streaming.StreamingOps.readStream(s, chunkDir183, schema)
-    s.catalog.dropTempView("b183_replay") // idempotent re-runs
+    val stream = graft.streaming.StreamingOps.readStream(s, dir, schema)
     graft.streaming.StreamingOps
       .runToMemory(auditReport(stream), "b183_replay", "complete")
       .orderBy("doc_id")

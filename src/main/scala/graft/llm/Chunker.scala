@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.WorkDirs
 import graft.sources.Tables
 
 /** CONTENT-DEFINED CHUNKING (SURVEY §2B round-7 row B103) — split every
@@ -237,9 +238,6 @@ object Chunker {
       .orderBy("doc_id", "chunk_no")
   }
 
-  private lazy val chunkDir191: String =
-    java.nio.file.Files.createTempDirectory("graft_b191_ingest").toString
-
   /** B191 — CHUNKING ON INGEST (the RAG indexing pipeline's front half:
     * documents arrive, chunks leave — a PURELY STATELESS streaming
     * transform, the simplest streaming shape in the engine and the one
@@ -257,12 +255,12 @@ object Chunker {
       slidingOracleSql) { (s, d) =>
     import org.apache.spark.sql.types._
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    graft.streaming.StreamingOps.writeChunksDf(docs, chunkDir191, n = 6,
+    val dir = WorkDirs("b191_ingest")
+    graft.streaming.StreamingOps.writeChunksDf(docs, dir, n = 6,
       sortCols = Seq("doc_id"))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = graft.streaming.StreamingOps.readStream(s, chunkDir191, schema)
-    s.catalog.dropTempView("b191_replay") // idempotent re-runs
+    val stream = graft.streaming.StreamingOps.readStream(s, dir, schema)
     graft.streaming.StreamingOps
       .runToMemory(slideChunks(stream), "b191_replay", "append")
       .orderBy("doc_id", "chunk_no")

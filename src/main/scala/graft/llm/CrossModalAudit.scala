@@ -85,12 +85,7 @@ object CrossModalAudit {
        |ORDER BY check_name""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"))
-    // plant-id collision guard (the b282/b284 ADVICE class); null-safe
-    // read — max() is NULL on an empty source (ADVICE r18)
-    val maxId = Option(docs.agg(max(col("doc_id")).cast("long")).head
-      .getAs[java.lang.Long](0)).map(_.longValue).getOrElse(-1L)
-    require(maxId < GhostOffset,
-      s"b303: max(doc_id)=$maxId collides with GhostOffset=$GhostOffset")
+    requireIdsBelow(docs, "doc_id", GhostOffset, "b303")
     val media = docs.select(
         col("doc_id").as("media_id"), col("doc_id"),
         when(col("doc_id") % 3 === 0, "image/png")

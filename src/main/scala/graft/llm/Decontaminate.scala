@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.WorkDirs
 import graft.sources.Tables
 
 /** Benchmark decontamination (SURVEY §2B round-6 row B92): flag training
@@ -141,9 +142,6 @@ object Decontaminate {
     overlapReport(corpus, benchmark)
   }
 
-  private lazy val chunkDir96: String =
-    java.nio.file.Files.createTempDirectory("graft_b96_chunks").toString
-
   /** B96 — the SAME [[overlapReport]] implementation run as a STREAM
     * (the b80 one-implementation-two-modes pattern): the planted corpus
     * replays in 6 doc_id-ordered chunks through a file source, the
@@ -158,7 +156,7 @@ object Decontaminate {
     * by construction. */
   private val b96 = entry("b96_stream_decontaminate", overlapOracleSql) { (s, d) =>
     import org.apache.spark.sql.types._
-    val dir = chunkDir96
+    val dir = WorkDirs("b96_chunks")
     val corpus = plantedCorpus(s, d)
       .filter(!(col("doc_id") % 40 === 0 && col("doc_id") < 3000000L))
     graft.streaming.StreamingOps.writeChunksDf(corpus, dir, n = 6,
@@ -169,7 +167,6 @@ object Decontaminate {
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
     val stream = graft.streaming.StreamingOps.readStream(s, dir, schema)
-    s.catalog.dropTempView("b96_replay") // idempotent re-runs
     graft.streaming.StreamingOps
       .runToMemory(overlapReport(stream, benchmark), "b96_replay", "complete")
       .orderBy("doc_id")

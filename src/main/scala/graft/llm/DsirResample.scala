@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Registry._
-import graft.exec.QueryScope
+import graft.exec.{QueryScope, WorkDirs}
 import graft.sources.Tables
 
 /** DSIR-style IMPORTANCE RESAMPLING (SURVEY §2B round-7 row B100) — the
@@ -148,9 +148,6 @@ object DsirResample {
     select(Tables.documents(s, d).select("doc_id", "text", "lang"), "de")
   }
 
-  private lazy val chunkDir104: String =
-    java.nio.file.Files.createTempDirectory("graft_b104_chunks").toString
-
   /** B104 — STREAMING DSIR scoring (the b96 one-implementation-two-modes
     * pattern for the selection surface): the weight table is trained on
     * the BATCH corpus and FROZEN (localCheckpoint — production trains
@@ -192,14 +189,13 @@ object DsirResample {
     val docs = Tables.documents(s, d).select("doc_id", "text", "lang")
     // frozen model: trained on the batch corpus, materialized once
     val wt = QueryScope.materialize("wt")(bucketWeights(featureBuckets(docs), "de"))
-    val dir = chunkDir104
+    val dir = WorkDirs("b104_chunks")
     graft.streaming.StreamingOps.writeChunksDf(docs, dir, n = 6,
       sortCols = Seq("doc_id"))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType)))
     val stream = graft.streaming.StreamingOps.readStream(s, dir, schema)
-    s.catalog.dropTempView("b104_replay") // idempotent re-runs
     graft.streaming.StreamingOps
       .runToMemory(scoreDocs(stream, wt), "b104_replay", "complete")
       .orderBy("doc_id")

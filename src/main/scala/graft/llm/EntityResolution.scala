@@ -100,12 +100,7 @@ object EntityResolution {
     * re-registrations. */
   private[graft] def registrations(s: SparkSession, d: String): DataFrame = {
     val c = Tables.customer(s, d)
-    // plant-id collision guard (the b282/b284 ADVICE class); null-safe
-    // read — max() is NULL on an empty source (ADVICE r18)
-    val maxId = Option(c.agg(max(col("c_custkey")).cast("long")).head
-      .getAs[java.lang.Long](0)).map(_.longValue).getOrElse(-1L)
-    require(maxId < ErIdOffset,
-      s"b292: max(c_custkey)=$maxId collides with ErIdOffset=$ErIdOffset")
+    requireIdsBelow(c, "c_custkey", ErIdOffset, "b292")
     val canonical = c.select(col("c_custkey").as("reg_id"),
       expr(recSpark).as("rec"))
     val dirty = c.filter(col("c_custkey") % DirtyMod === 0)

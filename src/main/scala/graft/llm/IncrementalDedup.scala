@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.WorkDirs
 import graft.sources.Tables
 
 /** B142 — INCREMENTAL DEDUPLICATION against corpus history: classify
@@ -183,9 +184,6 @@ object IncrementalDedup {
       dedupAgainstHistory(hist, batch)
   }
 
-  private lazy val chunkDir146: String =
-    java.nio.file.Files.createTempDirectory("graft_b146_chunks").toString
-
   /** B146 — STREAMED INCREMENTAL DEDUP: B142's true production shape —
     * arrivals STREAM against static history. The batch of arrivals
     * replays in 6 doc_id-ordered chunks; each micro-batch runs two
@@ -201,19 +199,18 @@ object IncrementalDedup {
     (s, d) =>
       import org.apache.spark.sql.types._
       val (hist, batch) = splitWithArrivals(s, d)
-      graft.streaming.StreamingOps.writeChunksDf(batch, chunkDir146, n = 6,
+      val dir = WorkDirs("b146_chunks")
+      graft.streaming.StreamingOps.writeChunksDf(batch, dir, n = 6,
         sortCols = Seq("doc_id"))
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
-      s.catalog.dropTempView("b146_meta") // idempotent re-runs
-      s.catalog.dropTempView("b146_pairs")
       val meta = graft.streaming.StreamingOps.runToMemory(
         arrivalMeta(hist,
-          graft.streaming.StreamingOps.readStream(s, chunkDir146, schema)),
+          graft.streaming.StreamingOps.readStream(s, dir, schema)),
         "b146_meta", "complete")
       val pairs = graft.streaming.StreamingOps.runToMemory(
         overlapPairs(hist,
-          graft.streaming.StreamingOps.readStream(s, chunkDir146, schema)),
+          graft.streaming.StreamingOps.readStream(s, dir, schema)),
         "b146_pairs", "complete")
       classify(meta, pairs, hist)
   }

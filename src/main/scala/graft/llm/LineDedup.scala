@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.WorkDirs
 import graft.sources.Tables
 
 /** B170 — CCNet-STYLE LINE-LEVEL DEDUP / BOILERPLATE REMOVAL (Wenzek et
@@ -164,9 +165,6 @@ object LineDedup {
       Tables.documents(s, d).select(col("doc_id"), col("text"))))
   }
 
-  private lazy val chunkDir176: String =
-    java.nio.file.Files.createTempDirectory("graft_b176_lines").toString
-
   /** B176 — the b170 pass run the way PRODUCTION runs CCNet: two passes.
     * Pass 1 (the per-line distinct-doc count relation) is computed once
     * over the corpus and becomes the STATIC side; pass 2 — removal and
@@ -189,14 +187,14 @@ object LineDedup {
     import org.apache.spark.sql.types._
     val corpus = linedCorpus(
       Tables.documents(s, d).select(col("doc_id"), col("text")))
-    graft.streaming.StreamingOps.writeChunksDf(corpus, chunkDir176, n = 6,
+    val dir = WorkDirs("b176_lines")
+    graft.streaming.StreamingOps.writeChunksDf(corpus, dir, n = 6,
       sortCols = Seq("doc_id"))
     // CCNet pass 1: the count relation, computed batch-side (static)
     val counts = lineDocCounts(keyedLines(corpus, hashedLineKey = false))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = graft.streaming.StreamingOps.readStream(s, chunkDir176, schema)
-    s.catalog.dropTempView("b176_replay") // idempotent re-runs
+    val stream = graft.streaming.StreamingOps.readStream(s, dir, schema)
     val rebuilt = graft.streaming.StreamingOps.runToMemory(
       rebuildKept(keyedLines(stream, hashedLineKey = false), counts, MinDocs),
       "b176_replay", "complete")

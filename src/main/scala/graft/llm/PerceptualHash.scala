@@ -145,15 +145,7 @@ object PerceptualHash {
     import s.implicits._
     val docs = Tables.documents(s, d).filter(col("doc_id") % 3 === 0)
       .select(col("doc_id").as("media_id"))
-    // plant-id collision guard (the b282/b284 ADVICE class): fail loudly
-    // at plan-build instead of aliasing a plant onto a real image. max()
-    // is NULL on an empty source — read via getAs (null = trivially safe)
-    // so an empty fixture passes cleanly instead of NPEing (ADVICE r18)
-    val maxId = Option(docs.agg(max(col("media_id")).cast("long")).head
-      .getAs[java.lang.Long](0)).map(_.longValue).getOrElse(-1L)
-    require(maxId < PerceptIdOffset,
-      s"b290: max(media_id)=$maxId collides with PerceptIdOffset=" +
-        s"$PerceptIdOffset — raise the offset for this dataset")
+    requireIdsBelow(docs, "media_id", PerceptIdOffset, "b290")
     docs.as[Long].mapPartitions { ids =>
       ids.flatMap { id =>
         val payload = Multimodal.ppmPayload(id)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
-import graft.exec.QueryScope
+import graft.exec.{QueryScope, WorkDirs}
 import graft.sources.Tables
 
 /** Product quantization (PQ) approximate nearest-neighbor search — SURVEY
@@ -382,11 +382,6 @@ object Pq {
       .orderBy("probe_id", "rn")
   }
 
-  /** One index dir per JVM (the StreamReplay chunk-dir rule): overwrite
-    * mode makes re-runs idempotent without accumulating index copies. */
-  private lazy val indexDir84c: String =
-    java.nio.file.Files.createTempDirectory("graft_b84c_ivfpq_index").toString
-
   /** B44 scale-path composition, ON-DISK — the driver-visible twin of the
     * PqSpec on-disk asserts: builds the cell-partitioned [[writeIvfPqIndex]]
     * layout, then searches it via [[searchIvfAdcFromIndex]], so a
@@ -395,8 +390,9 @@ object Pq {
     * (whose in-memory search is result-equal by PqSpec). */
   private val b84cIndex = entryNoOracle("b84c_similarity_ivfpq_index") { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    writeIvfPqIndex(emb, indexDir84c)
-    searchIvfAdcFromIndex(s, indexDir84c, emb.filter(col("vec_id") < 20),
+    val dir = WorkDirs("b84c_ivfpq_index")
+    writeIvfPqIndex(emb, dir)
+    searchIvfAdcFromIndex(s, dir, emb.filter(col("vec_id") < 20),
       k = 10, nProbe = 10)
       .orderBy("probe_id", "rn")
   }

@@ -476,15 +476,7 @@ object Quantize {
     bench = true) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(s, d)
-    // plant-id collision guard (ADVICE r17 #3): the offset is safe at the
-    // shipped SFs (vec_id <= 1999) but a larger dataset could alias a
-    // planted id onto a real vector, silently merging two vectors' rows
-    // into one d2 group — assert at plan-build so scale-up fails loudly
-    // instead of corrupting the audit (bounded driver scalar: one max)
-    val maxVecId = emb.agg(max(col("vec_id")).cast("long")).head.getLong(0)
-    require(maxVecId < CorruptIdOffset,
-      s"b284: max(vec_id)=$maxVecId collides with CorruptIdOffset=" +
-        s"$CorruptIdOffset — raise the offset for this dataset")
+    requireIdsBelow(emb, "vec_id", CorruptIdOffset, "b284")
     val legs = emb.select(lit("clean").as("leg"), col("vec_id"),
         col("label"), col("embedding"), lit(127L).as("scale"))
       .unionByName(emb.select(lit("planted").as("leg"), col("vec_id"),

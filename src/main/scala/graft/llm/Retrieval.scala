@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Registry._
-import graft.exec.QueryScope
+import graft.exec.{QueryScope, WorkDirs}
 import graft.sources.Tables
 
 /** FULL-TEXT RETRIEVAL over the documents corpus (SURVEY §2B rows
@@ -49,8 +49,7 @@ import graft.sources.Tables
   * capped at [[MaxPos]] < 4095) nor a block boundary (block_no is a pure
   * function of doc_id). The oracle recomputes the phrase from raw text,
   * so hash-green proves the blocked write → prune → intersect path
-  * lossless. The index lands in one per-JVM temp dir (the StreamReplay
-  * pattern), not a fresh dir per invocation.
+  * lossless. The index lands in a [[graft.exec.WorkDirs]] directory.
   *
   * Scale posture (100 TB): the query set is a broadcast literal; tf
   * aggregates only (doc, query-term) pairs — the corpus-wide explode is
@@ -309,12 +308,6 @@ object Retrieval {
       invertedIndexBlocked(Tables.documents(s, d).select("doc_id", "text")))
   }
 
-  /** Per-JVM landing dir for the b108b written index (the StreamReplay
-    * temp-dir pattern — one dir per JVM, overwritten per run, never an
-    * accumulating dir per invocation). */
-  private lazy val b108IndexDir: String = java.nio.file.Files
-    .createTempDirectory("graft_b108_index").toString + "/index"
-
   /** B108b — phrase query "table hash" SERVED FROM THE WRITTEN BLOCKED
     * INDEX: range-clustered sorted write, term-pruned probe read,
     * packed-postings adjacency intersect per block. Oracle recomputes
@@ -328,11 +321,12 @@ object Retrieval {
        |      WHERE t1.tok = 'table' AND t2.tok = 'hash')
        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches
        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
+    val index = WorkDirs("b108_index") + "/index"
     invertedIndexBlocked(Tables.documents(s, d).select("doc_id", "text"))
       .repartitionByRange(8, col("term"))
       .sortWithinPartitions("term", "block_no")
-      .write.mode("overwrite").parquet(b108IndexDir)
-    phraseFromIndex(s.read.parquet(b108IndexDir), "table", "hash")
+      .write.mode("overwrite").parquet(index)
+    phraseFromIndex(s.read.parquet(index), "table", "hash")
   }
 
   /** Adjacency from packed postings over the BLOCKED index: positions of
@@ -355,10 +349,6 @@ object Retrieval {
       .orderBy("doc_id")
   }
 
-  /** Per-JVM landing dir for the b109 OLD index (same pattern as b108b). */
-  private lazy val b109IndexDir: String = java.nio.file.Files
-    .createTempDirectory("graft_b109_index").toString + "/index"
-
   /** Block granularity for the b109 entry: small enough that every SF's
     * doc range spans several blocks, so the pass-through/touched split is
     * actually exercised (500 docs → blocks 0-3; 80%-split lands mid-block
@@ -375,19 +365,17 @@ object Retrieval {
     "b109_index_merge", indexRebuildSql) { (s, d) =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val split = docs.agg(max("doc_id")).head.getLong(0) * 4 / 5
+    val index = WorkDirs("b109_index") + "/index"
     invertedIndexBlocked(docs.filter(col("doc_id") < split), MergeDocsPerBlock)
       .repartitionByRange(8, col("term"))
       .sortWithinPartitions("term", "block_no")
-      .write.mode("overwrite").parquet(b109IndexDir)
+      .write.mode("overwrite").parquet(index)
     val delta =
       invertedIndexBlocked(docs.filter(col("doc_id") >= split), MergeDocsPerBlock)
-    presentIndexForHash(mergeIndex(s.read.parquet(b109IndexDir), delta))
+    presentIndexForHash(mergeIndex(s.read.parquet(index), delta))
   }
 
-  /** Per-JVM landing dir for the b111 index + sidecars (visible to
-    * RetrievalSpec's PushedFilters assert on the probe read). */
-  private[graft] lazy val b111IndexDir: String = java.nio.file.Files
-    .createTempDirectory("graft_b111_index").toString
+  private[graft] def b111IndexDir: String = WorkDirs("b111_index")
 
   /** Per-JVM BUILD memo for the index-serving entries (VERDICT r10 item 3):
     * artifacts under `dir` are (re)built only when the (sfDir, granularity)
@@ -466,11 +454,7 @@ object Retrieval {
     bm25Rank(s, tf, dfreq, dl, stats)
   }
 
-  /** Per-JVM landing dir for the b114 frozen artifacts + query replay +
-    * appended contributions (visible to RetrievalSpec's cross-batch
-    * asserts). */
-  private[graft] lazy val b114Dir: String = java.nio.file.Files
-    .createTempDirectory("graft_b114_serve").toString
+  private[graft] def b114Dir: String = WorkDirs("b114_serve")
 
   /** B114 — STREAMING QUERY-SIDE SERVING against a FROZEN index (the
     * closing cell of the retrieval arc: b112 streams the BUILD side, this
@@ -540,9 +524,7 @@ object Retrieval {
         .groupBy("query_id", "doc_id").agg(sum(col("c")).as("s")))
   }
 
-  /** Per-JVM landing dir for the b113 block-max index + sidecars. */
-  private[graft] lazy val b113IndexDir: String = java.nio.file.Files
-    .createTempDirectory("graft_b113_index").toString
+  private[graft] def b113IndexDir: String = WorkDirs("b113_index")
 
   /** b113 block granularity: small enough that the gate corpora span many
     * blocks (500 docs → 32 blocks), so the prune step has real choices. */
@@ -1214,10 +1196,6 @@ object Retrieval {
     proximityRank(side("term_a", 0).unionByName(side("term_b", 1)))
   }
 
-  /** Per-JVM landing dir for the b278 positional index. */
-  private lazy val b278IndexDir: String = java.nio.file.Files
-    .createTempDirectory("graft_b278_index").toString + "/index"
-
   /** B278 — PROXIMITY SERVED FROM THE WRITTEN POSITIONAL INDEX: B275's
     * ranking answered the way a search system answers it — from the
     * B108 blocked index's PACKED postings (doc_id·4096 + pos + 1), not a
@@ -1235,12 +1213,13 @@ object Retrieval {
   private val b278 = entry(
     "b278_proximity_from_index", proximityOracleSql) { (s, d) =>
     import s.implicits._
+    val index = WorkDirs("b278_index") + "/index"
     invertedIndexBlocked(Tables.documents(s, d).select("doc_id", "text"))
       .repartitionByRange(8, col("term"))
       .sortWithinPartitions("term", "block_no")
-      .write.mode("overwrite").parquet(b278IndexDir)
+      .write.mode("overwrite").parquet(index)
     val pairs = ProximityPairs.toDF("query_id", "term_a", "term_b")
-    val postings = s.read.parquet(b278IndexDir)
+    val postings = s.read.parquet(index)
       .filter(col("term").isin(
         ProximityPairs.flatMap(p => Seq(p._2, p._3)).distinct: _*))
       .select(col("term"),

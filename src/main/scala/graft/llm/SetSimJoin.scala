@@ -189,13 +189,7 @@ object SetSimJoin {
     * — the quote-inclusion signature planted at every SF. */
   private[graft] def containCorpus(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    // plant-id collision guard (ADVICE r17 #3): a dataset whose doc_ids
-    // reach the offset would alias a planted excerpt onto a real document
-    // — fail loudly at plan-build (bounded driver scalar: one max)
-    val maxDocId = docs.agg(max(col("doc_id")).cast("long")).head.getLong(0)
-    require(maxDocId < ExcerptIdOffset,
-      s"b282: max(doc_id)=$maxDocId collides with ExcerptIdOffset=" +
-        s"$ExcerptIdOffset — raise the offset for this dataset")
+    requireIdsBelow(docs, "doc_id", ExcerptIdOffset, "b282")
     docs.unionByName(docs.filter(col("doc_id") % 11 === 0)
       .select((col("doc_id") + ExcerptIdOffset).as("doc_id"),
         expr("array_join(slice(split(text, ' '), 1," +

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
-import graft.exec.QueryScope
+import graft.exec.{QueryScope, WorkDirs}
 import graft.sources.Tables
 
 /** Round-12 arc — TRAINING-RUN LOADING AND EVALUATION PLUMBING: the
@@ -326,9 +326,6 @@ object TrainLoad {
 
   // ---------------------------------------------------------------- B139
 
-  private lazy val chunkDir139: String =
-    java.nio.file.Files.createTempDirectory("graft_b139_chunks").toString
-
   /** B139 — STREAMED LM SCORING (the B104 frozen-model pattern): the KN
     * table trains once on the batch corpus and freezes
     * (localCheckpoint); documents replay in 6 doc_id-ordered chunks;
@@ -344,11 +341,11 @@ object TrainLoad {
        |FROM docscore ORDER BY doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val model = QueryScope.materialize("model")(NgramLm.knTable(docs).select("w1", "w2", "kn_fp"))
-    graft.streaming.StreamingOps.writeChunksDf(docs, chunkDir139, n = 6,
+    val dir = WorkDirs("b139_chunks")
+    graft.streaming.StreamingOps.writeChunksDf(docs, dir, n = 6,
       sortCols = Seq("doc_id"))
-    s.catalog.dropTempView("b139_replay") // idempotent re-runs
     val stream = graft.streaming.StreamingOps
-      .readStream(s, chunkDir139, docs.schema)
+      .readStream(s, dir, docs.schema)
     val scored = graft.streaming.StreamingOps.runToMemory(
       NgramLm.bigramPairs(stream)
         .join(broadcast(model), Seq("w1", "w2"))
@@ -481,9 +478,6 @@ object TrainLoad {
 
   // ---------------------------------------------------------------- B143
 
-  private lazy val chunkDir143: String =
-    java.nio.file.Files.createTempDirectory("graft_b143_chunks").toString
-
   /** B143 — STREAMED TOKENIZER FERTILITY: B136's report from a
     * complete-mode streamed fold of the per-doc stats (6-chunk replay,
     * the B133 convention), presented through the SHARED
@@ -495,12 +489,12 @@ object TrainLoad {
     (s, d) =>
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("text"))
-      graft.streaming.StreamingOps.writeChunksDf(docs, chunkDir143, n = 6,
+      val dir = WorkDirs("b143_chunks")
+      graft.streaming.StreamingOps.writeChunksDf(docs, dir, n = 6,
         sortCols = Seq("doc_id"))
-      s.catalog.dropTempView("b143_replay") // idempotent re-runs
       val agg = graft.streaming.StreamingOps.runToMemory(
         fertilityAgg(docTokStats(
-          graft.streaming.StreamingOps.readStream(s, chunkDir143, docs.schema))),
+          graft.streaming.StreamingOps.readStream(s, dir, docs.schema))),
         "b143_replay", "complete")
       fertilityFromAgg(agg)
   }

@@ -122,12 +122,7 @@ object VideoNearDup {
     val vids = Tables.documents(s, d).filter(col("doc_id") % 3 === 2)
       .select(col("doc_id").as("vid"),
         expr(Winnowing.polyFoldSpark("text")).as("h"))
-    // plant-id collision guard (the b282/b284 ADVICE class); null-safe
-    // read — max() is NULL on an empty source (ADVICE r18)
-    val maxId = Option(vids.agg(max(col("vid")).cast("long")).head
-      .getAs[java.lang.Long](0)).map(_.longValue).getOrElse(-1L)
-    require(maxId < VClipIdOffset,
-      s"b293: max(vid)=$maxId collides with VClipIdOffset=$VClipIdOffset")
+    requireIdsBelow(vids, "vid", VClipIdOffset, "b293")
     val legs = vids.select(col("vid"), col("h"), lit(0L).as("cut"))
       .unionByName(vids
         .filter(col("vid") % VClipMod === 0

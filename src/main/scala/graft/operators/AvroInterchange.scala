@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Registry._
+import graft.exec.WorkDirs
 import graft.sources.Tables
 
 /** B173 — AVRO SINK + RE-READ (VERDICT r13 what's-missing #3 / item 6):
@@ -113,18 +114,13 @@ object AvroInterchange {
     s.createDataFrame(rdd, schema)
   }
 
-  /** One temp sink dir per JVM (the b04/b65 convention), fresh per write
-    * because the Hadoop committer refuses an existing output dir. */
-  private val sinkCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-  private lazy val sinkRoot: String =
-    java.nio.file.Files.createTempDirectory("graft_b173_avro").toString
-
   private val b173 = entry(
     "b173_sink_avro",
     """SELECT p_partkey, p_name, p_brand, p_size, p_retailprice
       |FROM part WHERE p_size >= 40
       |ORDER BY p_partkey""".stripMargin) { (s, d) =>
-    val out = s"$sinkRoot/out${sinkCounter.incrementAndGet()}"
+    // fresh: the Hadoop committer refuses an existing output dir
+    val out = WorkDirs.fresh("b173_avro") + "/out"
     val src = Tables.part(s, d)
       .select("p_partkey", "p_name", "p_brand", "p_size", "p_retailprice")
       .filter(col("p_size") >= 40)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Registry._
+import graft.exec.WorkDirs
 import graft.functions.{TopKAgg, Udfs, WeightedMeanAgg}
 import graft.sources.Tables
 
@@ -13,10 +14,6 @@ import graft.sources.Tables
 object Extensions {
 
   private val csvPath = "/root/repo/fixtures/csv/dispatch_centers.csv"
-
-  /** One temp sink dir per JVM (see b04's comment). */
-  private[operators] lazy val b04SinkDir: String =
-    java.nio.file.Files.createTempDirectory("graft_b04_sink").toString + "/out"
 
   /** B3 — CSV scan with header + explicit schema (inference is forbidden at
     * scale: one extra full pass over 100 TB). */
@@ -46,11 +43,7 @@ object Extensions {
     """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
       |FROM lineitem WHERE l_quantity >= 49
       |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, d) =>
-    // unique per JVM (lazy) — a fixed path races against CONCURRENT
-    // processes (overwrite deletes part-files under another run's read),
-    // while per-invocation dirs would accumulate copies across the many
-    // sequential invocations inside one process
-    val out = Extensions.b04SinkDir
+    val out = WorkDirs("b04_sink") + "/out"
     Tables.lineitem(s, d)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
       .filter(col("l_quantity") >= 49)
@@ -59,10 +52,6 @@ object Extensions {
       .write.mode("overwrite").parquet(out)
     s.read.parquet(out).orderBy("l_orderkey", "l_linenumber")
   }
-
-  /** One temp sink dir per JVM (see b04's comment). */
-  private[operators] lazy val b04jSinkDir: String =
-    java.nio.file.Files.createTempDirectory("graft_b04j_sink").toString + "/out"
 
   /** B4 (JSON half) — JSON-lines sink + schema'd re-read: the t2 hash is
     * over the re-read rows against the source-table oracle, proving the
@@ -76,7 +65,7 @@ object Extensions {
       |       strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate_s
       |FROM orders WHERE o_totalprice >= 300000
       |ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-    val out = Extensions.b04jSinkDir
+    val out = WorkDirs("b04j_sink") + "/out"
     Tables.orders(s, d)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
       .filter(col("o_totalprice") >= 300000)
@@ -194,10 +183,6 @@ object Extensions {
       .orderBy("uuid", "pos")
   }
 
-  /** One temp sink dir per JVM (see b04's comment). */
-  private[operators] lazy val b65SinkDir: String =
-    java.nio.file.Files.createTempDirectory("graft_b65_sink").toString + "/out"
-
   /** B65 — ORC sink + re-read: the same lossless round-trip contract as
     * b04, through Spark's native ORC source. DuckDB cannot read ORC, so
     * the oracle runs over the ORIGINAL parquet table — which is the
@@ -211,7 +196,7 @@ object Extensions {
     """SELECT p_partkey, p_name, p_brand, p_size, p_retailprice
       |FROM part WHERE p_size >= 40
       |ORDER BY p_partkey""".stripMargin) { (s, d) =>
-    val out = Extensions.b65SinkDir
+    val out = WorkDirs("b65_sink") + "/out"
     Tables.part(s, d)
       .select("p_partkey", "p_name", "p_brand", "p_size", "p_retailprice")
       .filter(col("p_size") >= 40)
@@ -220,10 +205,6 @@ object Extensions {
       .write.mode("overwrite").orc(out)
     s.read.orc(out).orderBy("p_partkey")
   }
-
-  /** One temp dir pair per JVM (see b04's comment). */
-  private[operators] lazy val b74Dir: String =
-    java.nio.file.Files.createTempDirectory("graft_b74_evo").toString
 
   /** B74 — schema-evolution read: two parquet generations of the same
     * table — v1 written before a column existed, v2 with the added
@@ -244,7 +225,7 @@ object Extensions {
       |       CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus END AS o_orderstatus
       |FROM orders
       |ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-    val out = Extensions.b74Dir
+    val out = WorkDirs("b74_evo")
     val orders = Tables.orders(s, d)
     orders.filter(col("o_orderkey") % 2 === 0)
       .select("o_orderkey", "o_totalprice")

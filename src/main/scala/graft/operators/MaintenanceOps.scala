@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Registry._
+import graft.exec.WorkDirs
 import graft.sources.Tables
 
 /** Round-5 table-maintenance operators: file-level zone-map pruning (B81)
@@ -17,9 +18,7 @@ import graft.sources.Tables
   */
 object MaintenanceOps {
 
-  /** One temp layout dir per JVM (the b04/b61/b76 sink-dir rationale). */
-  private[graft] lazy val b81LayoutDir: String =
-    java.nio.file.Files.createTempDirectory("graft_b81_zonemap").toString + "/lineitem"
+  private[graft] def b81LayoutDir: String = WorkDirs("b81_zonemap") + "/lineitem"
 
   /** Per-file (min, max, rows) manifest over `key` — the zone map. One
     * distributed pass grouping on the hidden `_metadata.file_path` column;
@@ -91,10 +90,8 @@ object MaintenanceOps {
       .orderBy("l_linestatus")
   }
 
-  private[graft] lazy val b82SmallDir: String =
-    java.nio.file.Files.createTempDirectory("graft_b82_small").toString + "/events"
-  private[graft] lazy val b82CompactDir: String =
-    java.nio.file.Files.createTempDirectory("graft_b82_compact").toString + "/events"
+  private[graft] def b82SmallDir: String = WorkDirs("b82_small") + "/events"
+  private[graft] def b82CompactDir: String = WorkDirs("b82_compact") + "/events"
 
   /** Target rows per compacted file. At 100 TB this is derived from the
     * target file SIZE (e.g. 512 MB) / avg row width from table stats; a
@@ -421,9 +418,7 @@ object MaintenanceOps {
       .orderBy("column_name")
   }
 
-  /** One evolution dir per JVM (the b04/b61/b76 sink-dir rationale). */
-  private[graft] lazy val b252EvoDir: String =
-    java.nio.file.Files.createTempDirectory("graft_b252_evo").toString
+  private[graft] def b252EvoDir: String = WorkDirs("b252_evo")
 
   /** Epoch µs of 1997-01-01T00:00Z — the schema-change boundary. */
   private val EvoCutoffUs = 852076800000000L

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Registry._
-import graft.exec.QueryScope
+import graft.exec.{QueryScope, WorkDirs}
 import graft.llm.Winnowing
 import graft.sources.Tables
 
@@ -222,10 +222,6 @@ object ScaleOps {
       .filter(mightContain(col("l_orderkey")))
   }
 
-  /** One temp layout dir per JVM (the b04 sink-dir rationale). */
-  private[operators] lazy val b61LayoutDir: String =
-    java.nio.file.Files.createTempDirectory("graft_b61_layout").toString + "/lineitem"
-
   /** B61 — write-side data layout: hive-partition lineitem by ship month
     * and sort each file by orderkey, then answer a month-bounded query
     * from the re-read. The t2 hash is over the re-read result against the
@@ -249,7 +245,7 @@ object ScaleOps {
       |WHERE strftime(l_shipdate, '%Y-%m') IN ('1995-03', '1995-04')
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-    val out = ScaleOps.b61LayoutDir
+    val out = WorkDirs("b61_layout") + "/lineitem"
     Tables.lineitem(s, d)
       .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
       // local[32] writes a small table: one file per partition dir keeps
@@ -272,7 +268,7 @@ object ScaleOps {
     * month filter lands in the scan's PartitionFilters, not a post-scan
     * Filter — i.e. pruning actually happens. */
   def layoutScan(s: SparkSession): DataFrame =
-    s.read.parquet(b61LayoutDir)
+    s.read.parquet(WorkDirs("b61_layout") + "/lineitem")
       .filter(col("ship_month").isin("1995-03", "1995-04"))
 
   /** B62 — CDC snapshot merge (upsert): apply a change batch of
@@ -326,9 +322,7 @@ object ScaleOps {
       .orderBy("event_id", "user_id")
   }
 
-  /** One temp layout dir per JVM (the b04/b61 sink-dir rationale). */
-  private[graft] lazy val b76LayoutDir: String =
-    java.nio.file.Files.createTempDirectory("graft_b76_zorder").toString + "/lineitem"
+  private[graft] def b76LayoutDir: String = WorkDirs("b76_zorder") + "/lineitem"
 
   /** B76 — Z-order (Morton) clustered layout: bucketize (l_orderkey,
     * l_partkey) into 2^21 range buckets each, interleave with the native

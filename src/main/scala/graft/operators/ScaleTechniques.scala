@@ -57,12 +57,7 @@ object ScaleTechniques {
         java.nio.file.Paths.get(warehouse.stripPrefix("file:"))
       }
     val loc = warehousePath.resolve(table.toLowerCase(java.util.Locale.ROOT))
-    if (java.nio.file.Files.exists(loc)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(loc)
-      try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
+    graft.exec.WorkDirs.delete(loc)
     df.write.mode("overwrite")
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet")

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Registry._
-import graft.exec.QueryScope
+import graft.exec.{QueryScope, WorkDirs}
 
 /** Driver-visible streaming proofs (B51-B54): full chunked-file replays of
   * the events table through REAL streaming queries (file source,
@@ -22,35 +22,6 @@ import graft.exec.QueryScope
   *     the batch aggregation (shares b48's oracle).
   */
 object StreamReplay {
-
-  /** Recursively clear `path` and return it — the per-invocation reports
-    * dir reset (ADVICE r19): b291/b304/b305 read their report back via a
-    * rep_* glob, so a second run in the same JVM with FEWER micro-batches
-    * than a prior run would otherwise pick up the prior run's stale
-    * rep_N files. */
-  private def freshDir(path: String): String = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
-    path
-  }
-
-  /** One chunk dir per JVM (see b54's comment). */
-  private lazy val chunkDir: String =
-    java.nio.file.Files.createTempDirectory("graft_b54_chunks").toString
-
-  private lazy val chunkDir52: String =
-    java.nio.file.Files.createTempDirectory("graft_b52_chunks").toString
-
-  private lazy val chunkDir53: String =
-    java.nio.file.Files.createTempDirectory("graft_b53_chunks").toString
-
-  private lazy val chunkDir51: String =
-    java.nio.file.Files.createTempDirectory("graft_b51_chunks").toString
 
   /** B51 — watermark late-data drop, driver-visible. On-time events
     * (everything after the table's first two hours) replay in ts order;
@@ -73,7 +44,7 @@ object StreamReplay {
       |WHERE ts >= on_time_lo
       |  AND date_trunc('hour', ts) + INTERVAL 1 HOUR <= final_wm
       |GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin) { (s, d) =>
-    val dir = chunkDir51
+    val dir = WorkDirs("b51_chunks")
     val events = graft.sources.Tables.events(s, d)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     val minTs = events.agg(min(col("ts"))).collect().head
@@ -88,7 +59,6 @@ object StreamReplay {
     events.filter(col("ts") < cutoff).coalesce(1)
       .write.mode("overwrite").parquet(f"$dir/chunk_0008")
     val agg = StreamingOps.tumbling(StreamingOps.readStream(s, dir))
-    s.catalog.dropTempView("b51_replay") // idempotent re-runs
     StreamingOps.runToMemory(agg, "b51_replay", "append")
       .orderBy("ws", "event_type")
   }
@@ -103,13 +73,12 @@ object StreamReplay {
     """SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_s,
       |       user_id, event_type, round(value, 4) AS val
       |FROM events ORDER BY event_id""".stripMargin) { (s, d) =>
-    val dir = chunkDir52
+    val dir = WorkDirs("b52_chunks")
     val events = graft.sources.Tables.events(s, d)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     StreamingOps.writeChunksDf(
       events.unionByName(events.filter(col("event_id") % 10 === 0)), dir, n = 8)
     val deduped = StreamingOps.dedup(StreamingOps.readStream(s, dir))
-    s.catalog.dropTempView("b52_replay") // idempotent re-runs
     StreamingOps.runToMemory(deduped, "b52_replay", "append")
       .select(col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"),
@@ -127,13 +96,12 @@ object StreamReplay {
     """SELECT user_id, count(*) AS n_events,
       |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS balance_cents
       |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-    val dir = chunkDir53
+    val dir = WorkDirs("b53_chunks")
     StreamingOps.writeChunks(s, d, dir, n = 8)
     val withCents = StreamingOps.readStream(s, dir)
       .select(col("user_id"), col("event_id"),
         round(col("value") * 100).cast("long").as("cents"))
     val balances = StreamingOps.runningBalanceCents(withCents)
-    s.catalog.dropTempView("b53_replay") // idempotent re-runs
     val mem = StreamingOps.runToMemory(balances, "b53_replay", "append")
     val w = Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)
     mem.withColumn("rn", row_number().over(w))
@@ -147,23 +115,12 @@ object StreamReplay {
     """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS ws,
       |       event_type, count(*) AS n, round(sum(value), 4) AS total
       |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin) { (s, d) =>
-    // unique dir per JVM (lazy): a FIXED path races against any concurrent
-    // PROCESS running this query (the overwrite deletes parquet part-files
-    // out from under the other run's stream), while per-invocation dirs
-    // would accumulate full event-table copies across sequential runs
-    val dir = StreamReplay.chunkDir
+    val dir = WorkDirs("b54_chunks")
     StreamingOps.writeChunks(s, d, dir, n = 8)
     val agg = StreamingOps.tumbling(StreamingOps.readStream(s, dir))
-    s.catalog.dropTempView("b54_replay") // idempotent re-runs
     StreamingOps.runToMemory(agg, "b54_replay", "complete")
       .orderBy("ws", "event_type")
   }
-
-  private lazy val chunkDir72: String =
-    java.nio.file.Files.createTempDirectory("graft_b72_chunks").toString
-
-  private lazy val stateDir72: String =
-    java.nio.file.Files.createTempDirectory("graft_b72_state").toString
 
   /** B72 — streaming CDC apply: the change batch B62 merges in one shot
     * arrives here as a STREAM (8 key-ordered chunks, one per micro-batch),
@@ -184,11 +141,12 @@ object StreamReplay {
   private val b72 = entry(
     "b72_stream_cdc_apply", graft.operators.CdcSnapshots.mergedSql) { (s, d) =>
     import graft.operators.CdcSnapshots
-    val dir = chunkDir72
+    val stateDir = WorkDirs("b72_state")
+    val dir = WorkDirs("b72_chunks")
     val base = CdcSnapshots.base(s, d)
     StreamingOps.writeChunksDf(CdcSnapshots.changes(base), dir, n = 8,
       sortCols = Seq("k"))
-    base.coalesce(1).write.mode("overwrite").parquet(s"$stateDir72/v0")
+    base.coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v0")
     var cur = "v0"
     // schema DERIVED from the shared change derivation, never restated:
     // a renamed/retyped change column must fail loudly here, not degrade
@@ -197,15 +155,12 @@ object StreamReplay {
       schema = CdcSnapshots.changes(base).schema)
     StreamingOps.runForeachBatch(stream, "append") { (batch, id) =>
       val next = s"v${id + 1}"
-      CdcSnapshots.applyChanges(s.read.parquet(s"$stateDir72/$cur"), batch)
-        .coalesce(1).write.mode("overwrite").parquet(s"$stateDir72/$next")
+      CdcSnapshots.applyChanges(s.read.parquet(s"$stateDir/$cur"), batch)
+        .coalesce(1).write.mode("overwrite").parquet(s"$stateDir/$next")
       cur = next
     }
-    s.read.parquet(s"$stateDir72/$cur").orderBy("k")
+    s.read.parquet(s"$stateDir/$cur").orderBy("k")
   }
-
-  private lazy val chunkDir88: String =
-    java.nio.file.Files.createTempDirectory("graft_b88_chunks").toString
 
   /** B88 — transformWithState sessions with EVENT-TIME TIMERS,
     * driver-visible. [[StreamingOps.sessionsCentsTws]] replays the events
@@ -236,7 +191,7 @@ object StreamReplay {
       |       user_id, count(*) AS n, CAST(sum(cents) AS BIGINT) AS cents
       |FROM islands GROUP BY user_id, sess
       |ORDER BY user_id, session_start""".stripMargin) { (s, d) =>
-    val dir = chunkDir88
+    val dir = WorkDirs("b88_chunks")
     val ev = graft.sources.Tables.events(s, d)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
@@ -253,7 +208,6 @@ object StreamReplay {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val sessions = StreamingOps.sessionsCentsTws(StreamingOps.readStream(s, dir))
-      s.catalog.dropTempView("b88_replay") // idempotent re-runs
       QueryScope.materialize("replay")(StreamingOps.runToMemory(sessions, "b88_replay", "append")
         .filter(col("user_id") =!= flushUserId) // drop EXACTLY the sentinel's row
         .select(
@@ -266,9 +220,6 @@ object StreamReplay {
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
-
-  private lazy val chunkDir89: String =
-    java.nio.file.Files.createTempDirectory("graft_b89_chunks").toString
 
   /** B89 — JSON-lines streaming source, driver-visible: b54's tumbling
     * replay with the chunks serialized as JSON instead of parquet (the
@@ -283,19 +234,15 @@ object StreamReplay {
     """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS ws,
       |       event_type, count(*) AS n, round(sum(value), 4) AS total
       |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin) { (s, d) =>
-    val dir = chunkDir89
+    val dir = WorkDirs("b89_chunks")
     StreamingOps.writeChunksJson(
       graft.sources.Tables.events(s, d)
         .select("event_id", "ts", "user_id", "event_type", "value", "props"),
       dir, n = 8)
     val agg = StreamingOps.tumbling(StreamingOps.readStreamJson(s, dir))
-    s.catalog.dropTempView("b89_replay") // idempotent re-runs
     StreamingOps.runToMemory(agg, "b89_replay", "complete")
       .orderBy("ws", "event_type")
   }
-
-  private lazy val chunkDir91: String =
-    java.nio.file.Files.createTempDirectory("graft_b91_chunks").toString
 
   /** B91 — the HTTP submit sink INSIDE the t2 loop (previously B5 was
     * spec-only): b54's tumbling replay delivered per micro-batch through
@@ -315,9 +262,9 @@ object StreamReplay {
     """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS ws,
       |       event_type, count(*) AS n, round(sum(value), 4) AS total
       |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin) { (s, d) =>
-    val dir = chunkDir91
+    val dir = WorkDirs("b91_chunks")
     StreamingOps.writeChunks(s, d, dir, n = 8)
-    val landing = java.nio.file.Files.createTempDirectory("graft_b91_landing")
+    val landing = java.nio.file.Paths.get(WorkDirs.fresh("b91_landing"))
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress(0), 0)
     server.createContext("/submit", exchange => {
@@ -353,12 +300,6 @@ object StreamReplay {
     } finally server.stop(0)
   }
 
-  private lazy val chunkDir112: String =
-    java.nio.file.Files.createTempDirectory("graft_b112_chunks").toString
-
-  private lazy val stateDir112: String =
-    java.nio.file.Files.createTempDirectory("graft_b112_state").toString
-
   /** B112 — STREAMING index maintenance: b109's incremental merge driven
     * by a stream. The delta corpus (doc_id ≥ 80% split) arrives as 4
     * doc-ordered micro-batches; foreachBatch folds each into a versioned
@@ -378,26 +319,25 @@ object StreamReplay {
   private val b112 = entry(
     "b112_stream_index_merge", graft.llm.Retrieval.indexRebuildSql) { (s, d) =>
     import graft.llm.Retrieval
+    val stateDir = WorkDirs("b112_state")
     val docs = graft.sources.Tables.documents(s, d).select("doc_id", "text")
     val split = docs.agg(max("doc_id")).head.getLong(0) * 4 / 5
+    val dir = WorkDirs("b112_chunks")
     StreamingOps.writeChunksDf(docs.filter(col("doc_id") >= split),
-      chunkDir112, n = 4, sortCols = Seq("doc_id"))
+      dir, n = 4, sortCols = Seq("doc_id"))
     Retrieval.invertedIndexBlocked(docs.filter(col("doc_id") < split))
-      .coalesce(1).write.mode("overwrite").parquet(s"$stateDir112/v0")
+      .coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v0")
     var cur = "v0"
-    val stream = StreamingOps.readStream(s, chunkDir112, schema = docs.schema)
+    val stream = StreamingOps.readStream(s, dir, schema = docs.schema)
     StreamingOps.runForeachBatch(stream, "append") { (batch, id) =>
       val next = s"v${id + 1}"
-      Retrieval.mergeIndex(s.read.parquet(s"$stateDir112/$cur"),
+      Retrieval.mergeIndex(s.read.parquet(s"$stateDir/$cur"),
           Retrieval.invertedIndexBlocked(batch))
-        .coalesce(1).write.mode("overwrite").parquet(s"$stateDir112/$next")
+        .coalesce(1).write.mode("overwrite").parquet(s"$stateDir/$next")
       cur = next
     }
-    Retrieval.presentIndexForHash(s.read.parquet(s"$stateDir112/$cur"))
+    Retrieval.presentIndexForHash(s.read.parquet(s"$stateDir/$cur"))
   }
-
-  private lazy val chunkDir120: String =
-    java.nio.file.Files.createTempDirectory("graft_b120_chunks").toString
 
   /** B120 — STREAMING FUNNEL: B117's view→click→purchase funnel as a
     * per-user [[FunnelProcessor]] state machine over the chunked event
@@ -416,15 +356,14 @@ object StreamReplay {
     "b120_stream_funnel", graft.operators.PipelineOps.funnelOracleSql) { (s, d) =>
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    StreamingOps.writeChunks(s, d, chunkDir120, n = 6)
-    s.catalog.dropTempView("b120_replay") // idempotent re-runs
+    StreamingOps.writeChunks(s, d, WorkDirs("b120_chunks"), n = 6)
     // transformWithState requires the RocksDB state store (the b88 wrap)
     val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val advances = try {
       QueryScope.materialize("replay")(StreamingOps.runToMemory(
-        StreamingOps.readStream(s, chunkDir120)
+        StreamingOps.readStream(s, WorkDirs("b120_chunks"))
           .select(col("user_id"), unix_micros(col("ts")).as("tsm"),
             col("event_type"))
           .as[(Long, Long, String)]
@@ -441,9 +380,6 @@ object StreamReplay {
       advances.groupBy("user_id").agg(max(col("step")).as("mx")))
   }
 
-  private lazy val chunkDir121: String =
-    java.nio.file.Files.createTempDirectory("graft_b121_chunks").toString
-
   /** B121 — STREAMING COHORT ATTRIBUTION: B118's retention triangle from
     * a per-user [[CohortProcessor]] over the time-ordered replay. The
     * processor attributes each user to their first-touch week and emits
@@ -459,14 +395,13 @@ object StreamReplay {
     "b121_stream_cohort", graft.operators.PipelineOps.cohortOracleSql) { (s, d) =>
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    StreamingOps.writeChunks(s, d, chunkDir121, n = 6)
-    s.catalog.dropTempView("b121_replay") // idempotent re-runs
+    StreamingOps.writeChunks(s, d, WorkDirs("b121_chunks"), n = 6)
     val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val attributed = try {
       QueryScope.materialize("replay")(StreamingOps.runToMemory(
-        StreamingOps.readStream(s, chunkDir121)
+        StreamingOps.readStream(s, WorkDirs("b121_chunks"))
           .select(col("user_id"),
             // floor-division week bucket shared with b118 — matches
             // DuckDB's `//` on pre-anchor (negative) timestamps too
@@ -485,9 +420,6 @@ object StreamReplay {
       .agg(count(lit(1)).as("n_users"))
       .orderBy("cohort_week", "week")
   }
-
-  private lazy val chunkDir128: String =
-    java.nio.file.Files.createTempDirectory("graft_b128_chunks").toString
 
   /** B128 — STREAMING BUDGET ADMISSION: the arrival-order dual of B124's
     * priority-order token cap. Documents replay in doc_id order (6
@@ -511,15 +443,14 @@ object StreamReplay {
       col("doc_id"), col("source"),
       size(split(col("text"), " ")).cast("long").as("n_tok"),
       expr(s"$pri % ${graft.llm.CorpusBudget.ShardCount}").as("shard"))
-    StreamingOps.writeChunksDf(docs, chunkDir128, n = 6,
+    StreamingOps.writeChunksDf(docs, WorkDirs("b128_chunks"), n = 6,
       sortCols = Seq("doc_id"))
-    s.catalog.dropTempView("b128_replay") // idempotent re-runs
     val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val admitted = try {
       QueryScope.materialize("replay")(StreamingOps.runToMemory(
-        StreamingOps.readStream(s, chunkDir128, docs.schema)
+        StreamingOps.readStream(s, WorkDirs("b128_chunks"), docs.schema)
           .as[(Long, String, Long, Long)]
           .groupByKey(r => (r._2, r._4))
           .transformWithState(
@@ -542,9 +473,6 @@ object StreamReplay {
     admitted.orderBy("doc_id")
   }
 
-  private lazy val chunkDir133: String =
-    java.nio.file.Files.createTempDirectory("graft_b133_chunks").toString
-
   /** B133 — STREAMING VOCABULARY COVERAGE: B125's Zipf spectrum from a
     * complete-mode streamed term-count fold (the b54/b104 replay
     * convention — chunked arrival, AvailableNow, the final complete-mode
@@ -562,23 +490,16 @@ object StreamReplay {
     graft.llm.CorpusBudget.vocabCoverageOracleSql) { (s, d) =>
     val docs = graft.sources.Tables.documents(s, d)
       .select(col("doc_id"), col("text"))
-    StreamingOps.writeChunksDf(docs, chunkDir133, n = 6,
+    StreamingOps.writeChunksDf(docs, WorkDirs("b133_chunks"), n = 6,
       sortCols = Seq("doc_id"))
-    s.catalog.dropTempView("b133_replay") // idempotent re-runs
     val freq = StreamingOps.runToMemory(
-      StreamingOps.readStream(s, chunkDir133, docs.schema)
+      StreamingOps.readStream(s, WorkDirs("b133_chunks"), docs.schema)
         .select(explode(split(col("text"), " ")).as("term"))
         .filter(col("term") =!= "")
         .groupBy("term").agg(count(lit(1)).as("f")),
       "b133_replay", "complete")
     graft.llm.CorpusBudget.coverageFromFreq(freq)
   }
-
-  private lazy val chunkDir148: String =
-    java.nio.file.Files.createTempDirectory("graft_b148_chunks").toString
-
-  private lazy val stateDir148: String =
-    java.nio.file.Files.createTempDirectory("graft_b148_state").toString
 
   /** B148 — STREAMING TRIANGLE MAINTENANCE: per-node triangle counts
     * kept current as edges ARRIVE (6 chunked micro-batches over the
@@ -602,29 +523,24 @@ object StreamReplay {
     "b148_stream_triangles",
     graft.operators.GraphOps.triangleOracleSql) { (s, d) =>
     val edges = graft.operators.GraphOps.copurchaseEdges(s, d)
-    StreamingOps.writeChunksDf(edges, chunkDir148, n = 6,
+    val dir = WorkDirs("b148_chunks")
+    StreamingOps.writeChunksDf(edges, dir, n = 6,
       sortCols = Seq("src", "dst"))
     // v0 = empty edge state; deltas accumulate per batch. The delta sink
-    // is append-mode across batches, so it must be CLEARED per
-    // invocation — a same-JVM re-run would otherwise sum both runs'
-    // deltas (the idempotent-re-run rule the dropTempView twins follow)
-    val deltaDir = s"$stateDir148/deltas"
-    val dp = java.nio.file.Paths.get(deltaDir)
-    if (java.nio.file.Files.exists(dp)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dp).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
-    edges.limit(0).write.mode("overwrite").parquet(s"$stateDir148/v0")
+    // is append-mode across batches, so it starts fresh per invocation
+    // — a same-JVM re-run would otherwise sum both runs' deltas
+    val stateDir = WorkDirs("b148_state")
+    val deltaDir = WorkDirs.fresh("b148_state/deltas")
+    edges.limit(0).write.mode("overwrite").parquet(s"$stateDir/v0")
     var cur = "v0"
-    val stream = StreamingOps.readStream(s, chunkDir148, edges.schema)
+    val stream = StreamingOps.readStream(s, dir, edges.schema)
     StreamingOps.runForeachBatch(stream, "append") { (batch, id) =>
-      val old = s.read.parquet(s"$stateDir148/$cur")
+      val old = s.read.parquet(s"$stateDir/$cur")
       graft.operators.GraphOps.triangleDelta(old, batch)
         .write.mode("append").parquet(deltaDir)
       val next = s"v${id + 1}"
       old.unionByName(batch).write.mode("overwrite")
-        .parquet(s"$stateDir148/$next")
+        .parquet(s"$stateDir/$next")
       cur = next
     }
     s.read.parquet(deltaDir)
@@ -632,9 +548,6 @@ object StreamReplay {
       .select(col("node").as("part_id"), col("n_triangles"))
       .orderBy("part_id")
   }
-
-  private lazy val chunkDir161: String =
-    java.nio.file.Files.createTempDirectory("graft_b161_chunks").toString
 
   /** B161 — STREAMING COLLOCATION MINING: B158's PMI-lift table from a
     * complete-mode streamed (w1, w2) count fold (the b133/b143 twin
@@ -654,19 +567,15 @@ object StreamReplay {
     graft.llm.NgramLm.collocOracleSql, bench = true) { (s, d) =>
     val docs = graft.sources.Tables.documents(s, d)
       .select(col("doc_id"), col("text"))
-    StreamingOps.writeChunksDf(docs, chunkDir161, n = 6,
+    StreamingOps.writeChunksDf(docs, WorkDirs("b161_chunks"), n = 6,
       sortCols = Seq("doc_id"))
-    s.catalog.dropTempView("b161_replay") // idempotent re-runs
     val bg = StreamingOps.runToMemory(
       graft.llm.NgramLm.bigramPairs(
-        StreamingOps.readStream(s, chunkDir161, docs.schema))
+        StreamingOps.readStream(s, WorkDirs("b161_chunks"), docs.schema))
         .groupBy("w1", "w2").agg(count(lit(1)).as("c")),
       "b161_replay", "complete")
     graft.llm.NgramLm.liftFromBigrams(bg)
   }
-
-  private lazy val chunkDir214: String =
-    java.nio.file.Files.createTempDirectory("graft_b214_chunks").toString
 
   /** B214 — STREAMED TRANSITION-MATRIX MAINTENANCE: B195's first-order
     * Markov table kept current at the ingest door. The stateful fold
@@ -689,14 +598,13 @@ object StreamReplay {
     graft.operators.PipelineOps.transitionOracleSql) { (s, d) =>
     val ev = graft.sources.Tables.events(s, d)
       .select("user_id", "ts", "event_id", "event_type")
-    StreamingOps.writeChunksDf(ev, chunkDir214, n = 8)
+    StreamingOps.writeChunksDf(ev, WorkDirs("b214_chunks"), n = 8)
     val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val pairs = StreamingOps.transitionPairsTws(
-        StreamingOps.readStream(s, chunkDir214))
-      s.catalog.dropTempView("b214_replay") // idempotent re-runs
+        StreamingOps.readStream(s, WorkDirs("b214_chunks")))
       // checkpoint the matrix: dedups the memory-sink scan under the
       // normalize tail's self-join (conflicting-reference resolution
       // fails on a shared MemoryPlan view) AND materializes before the
@@ -710,9 +618,6 @@ object StreamReplay {
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
-
-  private lazy val chunkDir224: String =
-    java.nio.file.Files.createTempDirectory("graft_b224_chunks").toString
 
   /** B224 — STREAMED LAST-TOUCH ATTRIBUTION: B215's revenue allocator at
     * the ingest door (the b214 convention applied to the attribution
@@ -730,14 +635,13 @@ object StreamReplay {
     graft.operators.AnalyticsOps.attributionOracleSql) { (s, d) =>
     val ev = graft.sources.Tables.events(s, d)
       .select("user_id", "ts", "event_id", "event_type", "value")
-    StreamingOps.writeChunksDf(ev, chunkDir224, n = 8)
+    StreamingOps.writeChunksDf(ev, WorkDirs("b224_chunks"), n = 8)
     val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val att = StreamingOps.attributionTws(
-        StreamingOps.readStream(s, chunkDir224))
-      s.catalog.dropTempView("b224_replay") // idempotent re-runs
+        StreamingOps.readStream(s, WorkDirs("b224_chunks")))
       // checkpoint before the share tail's self-join (the b214 rule)
       val emitted = QueryScope.materialize("emitted")(
         StreamingOps.runToMemory(att, "b224_replay", "append"))
@@ -747,9 +651,6 @@ object StreamReplay {
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
-
-  private lazy val chunkDir234: String =
-    java.nio.file.Files.createTempDirectory("graft_b234_chunks").toString
 
   /** B234 — STREAMED ROLLING Z-SCORE MONITOR: B228's integer anomaly
     * flags at the ingest door (the b214/b224 convention; the archetypal
@@ -767,14 +668,13 @@ object StreamReplay {
     graft.operators.AnalyticsOps.zscoreOracleSql) { (s, d) =>
     val ev = graft.sources.Tables.events(s, d)
       .select("user_id", "ts", "event_id", "value")
-    StreamingOps.writeChunksDf(ev, chunkDir234, n = 8)
+    StreamingOps.writeChunksDf(ev, WorkDirs("b234_chunks"), n = 8)
     val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val flags = StreamingOps.zscoreTws(
-        StreamingOps.readStream(s, chunkDir234))
-      s.catalog.dropTempView("b234_replay") // idempotent re-runs
+        StreamingOps.readStream(s, WorkDirs("b234_chunks")))
       QueryScope.materialize("replay")(StreamingOps.runToMemory(flags, "b234_replay", "append")
         .orderBy("user_id", "event_id")) // materialize before the conf is restored
     } finally prev match {
@@ -782,12 +682,6 @@ object StreamReplay {
       case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
-
-  private lazy val chunkDir241: String =
-    java.nio.file.Files.createTempDirectory("graft_b241_chunks").toString
-
-  private lazy val stateDir241: String =
-    java.nio.file.Files.createTempDirectory("graft_b241_state").toString
 
   /** B241 — STREAMED SCD TYPE-2 MAINTENANCE: B210's versioned dimension
     * kept current as the CDC log arrives (the b72 versioned-snapshot
@@ -808,17 +702,19 @@ object StreamReplay {
   private val b241 = entry(
     "b241_stream_scd2_apply",
     graft.operators.ScaleOps.scd2OracleSql) { (s, d) =>
+    val stateDir = WorkDirs("b241_state")
     val base = graft.operators.CdcSnapshots.base(s, d)
     val theLog = graft.operators.CdcSnapshots.log(base)
-    StreamingOps.writeChunksDf(theLog, chunkDir241, n = 4,
+    val dir = WorkDirs("b241_chunks")
+    StreamingOps.writeChunksDf(theLog, dir, n = 4,
       sortCols = Seq("seq", "k"))
     base.select(col("k"), lit(0L).as("valid_from"),
         lit(null).cast("long").as("valid_to"), col("status"), col("cents"))
-      .write.mode("overwrite").parquet(s"$stateDir241/v0")
+      .write.mode("overwrite").parquet(s"$stateDir/v0")
     var cur = "v0"
-    val stream = StreamingOps.readStream(s, chunkDir241, theLog.schema)
+    val stream = StreamingOps.readStream(s, dir, theLog.schema)
     StreamingOps.runForeachBatch(stream, "append") { (batch, id) =>
-      var state = s.read.parquet(s"$stateDir241/$cur")
+      var state = s.read.parquet(s"$stateDir/$cur")
       // distinct seqs in this batch, ascending — ≤ #versions values
       val seqs = batch.select("seq").distinct().collect()
         .map(_.getLong(0)).sorted
@@ -839,21 +735,15 @@ object StreamReplay {
         state = closed.unionByName(opened)
       }
       val next = s"v${id + 1}"
-      state.write.mode("overwrite").parquet(s"$stateDir241/$next")
+      state.write.mode("overwrite").parquet(s"$stateDir/$next")
       cur = next
     }
-    s.read.parquet(s"$stateDir241/$cur")
+    s.read.parquet(s"$stateDir/$cur")
       .select(col("k"), col("valid_from"), col("valid_to"), col("status"),
         col("cents"),
         when(col("valid_to").isNull, 1L).otherwise(0L).as("is_current"))
       .orderBy("k", "valid_from")
   }
-
-  private lazy val chunkDir246: String =
-    java.nio.file.Files.createTempDirectory("graft_b246_chunks").toString
-
-  private lazy val stateDir246: String =
-    java.nio.file.Files.createTempDirectory("graft_b246_state").toString
 
   /** B246 — STREAMED INTERVAL COALESCING: B203's temporal-union islands
     * maintained incrementally as events arrive (streaming sessionization
@@ -953,11 +843,8 @@ object StreamReplay {
         (unix_micros(col("ts")) +
           expr("CAST(floor(value * 100 + 0.5) AS BIGINT) * 1000000L"))
           .as("end_us"))
-    runIntervalMerge(s, ev, chunkDir246, stateDir246, nChunks = 6)
+    runIntervalMerge(s, ev, WorkDirs("b246_chunks"), WorkDirs("b246_state"), nChunks = 6)
   }
-
-  private lazy val chunkDir248: String =
-    java.nio.file.Files.createTempDirectory("graft_b248_chunks").toString
 
   /** B248 — STREAMED GROWTH ACCOUNTING: B216's SaaS revenue bridge kept
     * current as purchases arrive. The stream maintains the per-(user,
@@ -979,19 +866,16 @@ object StreamReplay {
     graft.operators.AnalyticsOps.growthOracleSql) { (s, d) =>
     val ev = graft.sources.Tables.events(s, d)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
-    StreamingOps.writeChunksDf(ev, chunkDir248, n = 6)
-    val weekly = StreamingOps.readStream(s, chunkDir248, ev.schema)
+    val dir = WorkDirs("b248_chunks")
+    StreamingOps.writeChunksDf(ev, dir, n = 6)
+    val weekly = StreamingOps.readStream(s, dir, ev.schema)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"),
         expr(graft.operators.PipelineOps.weekFloorExpr).as("week"))
       .agg(sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).as("cents"))
-    s.catalog.dropTempView("b248_replay") // idempotent re-runs
     val uw = StreamingOps.runToMemory(weekly, "b248_replay", "complete")
     graft.operators.AnalyticsOps.growthFromWeekly(uw)
   }
-
-  private lazy val chunkDir259: String =
-    java.nio.file.Files.createTempDirectory("graft_b259_chunks").toString
 
   /** B259 — WATERMARK-CLOSED GROWTH ACCOUNTING: b248's per-(user, week)
     * fold re-spelled with the b88 event-time-timer pattern
@@ -1019,14 +903,13 @@ object StreamReplay {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     require(ev.agg(min(col("user_id"))).head().getLong(0) > -1L,
       "fixture contains user_id <= -1 — flush sentinel key collides")
-    StreamingOps.writeChunksDf(ev.unionByName(flush), chunkDir259, n = 6)
+    StreamingOps.writeChunksDf(ev.unionByName(flush), WorkDirs("b259_chunks"), n = 6)
     val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val weekly = StreamingOps.weeklyCentsTws(
-        StreamingOps.readStream(s, chunkDir259))
-      s.catalog.dropTempView("b259_replay") // idempotent re-runs
+        StreamingOps.readStream(s, WorkDirs("b259_chunks")))
       val uw = StreamingOps.runToMemory(weekly, "b259_replay", "append")
         .filter(col("user_id") =!= -1L) // drop EXACTLY the sentinel's key
       QueryScope.materialize("replay")( // before the conf is restored
@@ -1038,9 +921,6 @@ object StreamReplay {
         s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
-
-  private lazy val chunkDir269: String =
-    java.nio.file.Files.createTempDirectory("graft_b269_chunks").toString
 
   /** B269 — WATERMARK-CLOSED INTERVAL ISLANDS: b246's incremental
     * interval coalescing re-spelled with event-time timers
@@ -1077,15 +957,14 @@ object StreamReplay {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     require(ev.agg(min(col("user_id"))).head().getLong(0) > -1L,
       "fixture contains user_id <= -1 — flush sentinel key collides")
-    StreamingOps.writeChunksDf(ev.unionByName(flush), chunkDir269, n = 6,
+    StreamingOps.writeChunksDf(ev.unionByName(flush), WorkDirs("b269_chunks"), n = 6,
       sortCols = Seq("ts", "event_id"))
     val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val islands = StreamingOps.intervalIslandsTws(
-        StreamingOps.readStream(s, chunkDir269))
-      s.catalog.dropTempView("b269_replay") // idempotent re-runs
+        StreamingOps.readStream(s, WorkDirs("b269_chunks")))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("start_us"))
       QueryScope.materialize("replay")(StreamingOps.runToMemory(islands, "b269_replay", "append")
@@ -1102,11 +981,6 @@ object StreamReplay {
         s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
-
-  private lazy val chunkDir274c: String =
-    java.nio.file.Files.createTempDirectory("graft_b274_clean").toString
-  private lazy val chunkDir274p: String =
-    java.nio.file.Files.createTempDirectory("graft_b274_plant").toString
 
   /** B274 — STREAMED QUALITY-DRIFT MONITOR: B264's model-ops monitor run
     * where production runs it — against TODAY'S INGEST STREAM, with
@@ -1136,10 +1010,10 @@ object StreamReplay {
       expr("CASE WHEN doc_id % 10 = 0 THEN 2 * n_chars + 1" +
         " ELSE n_chars END").as("n_chars"))
     val pa = QueryScope.materialize("pa")(graft.llm.QualityDrift.profile(a))
-    def streamedProfile(snap: org.apache.spark.sql.DataFrame, dir: String,
+    def streamedProfile(snap: org.apache.spark.sql.DataFrame,
         view: String): org.apache.spark.sql.DataFrame = {
+      val dir = WorkDirs(view)
       StreamingOps.writeChunksDf(snap, dir, n = 6, sortCols = Seq("doc_id"))
-      s.catalog.dropTempView(view) // idempotent re-runs
       val sums = StreamingOps.runToMemory(
         graft.llm.QualityDrift.profileAgg(
           StreamingOps.readStream(s, dir, snap.schema)),
@@ -1147,16 +1021,13 @@ object StreamReplay {
       graft.llm.QualityDrift.profileFinish(sums)
     }
     graft.llm.QualityDrift
-      .driftRows(pa, streamedProfile(bClean, chunkDir274c, "b274_clean"),
+      .driftRows(pa, streamedProfile(bClean, "b274_clean"),
         "clean")
       .unionByName(graft.llm.QualityDrift
-        .driftRows(pa, streamedProfile(bPlant, chunkDir274p, "b274_plant"),
+        .driftRows(pa, streamedProfile(bPlant, "b274_plant"),
           "planted"))
       .orderBy("leg", "signal")
   }
-
-  private lazy val chunkDir263: String =
-    java.nio.file.Files.createTempDirectory("graft_b263_chunks").toString
 
   /** B263 — ENSEMBLE ADMISSION ON INGEST: the B256 five-signal keep
     * decision run where production runs quality filtering — at the door,
@@ -1187,11 +1058,11 @@ object StreamReplay {
       .select(col("doc_id"), expr("CAST(bucket = 3 AS BIGINT)").as("f_ppl")))
     StreamingOps.writeChunksDf(
       docs.select(col("doc_id"), col("text"), col("n_chars")),
-      chunkDir263, n = 6, sortCols = Seq("doc_id"))
+      WorkDirs("b263_chunks"), n = 6, sortCols = Seq("doc_id"))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("n_chars", LongType)))
-    val stream = StreamingOps.readStream(s, chunkDir263, schema)
+    val stream = StreamingOps.readStream(s, WorkDirs("b263_chunks"), schema)
     import s.implicits._
     val dict = graft.llm.Blocklist.Terms.toDF("term", "sev")
     val flagged = graft.llm.QualityEnsemble.withFusedFlags(stream)
@@ -1213,14 +1084,10 @@ object StreamReplay {
       .withColumn("f_block",
         expr("CAST(n_severe > 0 OR n_mild * 10000 div n_tok >= " +
           s"${graft.llm.Blocklist.ThrBp} AS BIGINT)"))
-    s.catalog.dropTempView("b263_replay") // idempotent re-runs
     graft.llm.QualityEnsemble.attributionTail(
       StreamingOps.runToMemory(admitted, "b263_replay", "complete"))
       .orderBy("doc_id")
   }
-
-  private lazy val chunkDir283: String =
-    java.nio.file.Files.createTempDirectory("graft_b283_chunks").toString
 
   /** B283 — STREAMED CUSUM MONITOR: b276's changepoint detector run
     * where a volume monitor runs it — the daily event counts CLOSE on
@@ -1248,18 +1115,12 @@ object StreamReplay {
     import s.implicits._
     val flush = Seq((9000005L, flushTs, -1L, "view", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    StreamingOps.writeChunksDf(ev.unionByName(flush), chunkDir283, n = 6)
+    StreamingOps.writeChunksDf(ev.unionByName(flush), WorkDirs("b283_chunks"), n = 6)
     val daily = StreamingOps.dailyCountsAppend(
-      StreamingOps.readStream(s, chunkDir283))
-    s.catalog.dropTempView("b283_replay") // idempotent re-runs
+      StreamingOps.readStream(s, WorkDirs("b283_chunks")))
     graft.operators.ChangepointOps.cusumFromDaily(
       StreamingOps.runToMemory(daily, "b283_replay", "append"))
   }
-
-  private lazy val chunkDir291: String =
-    java.nio.file.Files.createTempDirectory("graft_b291_chunks").toString
-  private lazy val stateDir291: String =
-    java.nio.file.Files.createTempDirectory("graft_b291_state").toString
 
   /** B291 — STREAMED RELEASE GATE (VERDICT r17 item 4): b270's four gate
     * legs run PER MICRO-BATCH over a b72-style maintained snapshot — the
@@ -1391,6 +1252,7 @@ object StreamReplay {
     }) { (s, d) =>
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val CR = graft.llm.CorpusRelease
+    val (chunkDir, stateDir) = (WorkDirs("b291_chunks"), WorkDirs("b291_state"))
     val docs = graft.sources.Tables.documents(s, d)
       .select(col("doc_id"), col("text"))
     val rel = graft.llm.CleanPipeline.hygieneRelease(docs) // checkpoints internally (r21)
@@ -1407,30 +1269,25 @@ object StreamReplay {
     for (k <- 0 to 3)
       parts.filter(col("part") === k).select("doc_id", "text")
         .coalesce(1).write.mode("overwrite")
-        .parquet(f"$chunkDir291/chunk_$k%04d")
-    val stream = StreamingOps.readStream(s, chunkDir291,
+        .parquet(f"$chunkDir/chunk_$k%04d")
+    val stream = StreamingOps.readStream(s, chunkDir,
       schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType))))
-    val repDir = freshDir(s"$stateDir291/reports")
+    val repDir = WorkDirs.fresh("b291_state/reports")
     StreamingOps.runForeachBatch(stream, "append") { (batch, id) =>
       // the b72 versioned-snapshot apply: snapshot_id = snapshot_{id-1}
       // UNION this ingest batch, persisted so the gate reads a stable
       // relation (and v0..vN retain replay/rollback)
       val next =
         if (id == 0) batch.toDF()
-        else s.read.parquet(s"$stateDir291/v${id - 1}").unionByName(batch)
-      next.coalesce(1).write.mode("overwrite").parquet(s"$stateDir291/v$id")
-      val snapshot = s.read.parquet(s"$stateDir291/v$id")
+        else s.read.parquet(s"$stateDir/v${id - 1}").unionByName(batch)
+      next.coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v$id")
+      val snapshot = s.read.parquet(s"$stateDir/v$id")
       CR.gateReport(snapshot, fpPrev, prevCount, s"batch_$id")
         .coalesce(1).write.mode("overwrite").parquet(s"$repDir/rep_$id")
     }
     s.read.parquet(s"$repDir/rep_*").orderBy("candidate", "check_id")
   }
-
-  private lazy val chunkDir295: String =
-    java.nio.file.Files.createTempDirectory("graft_b295_chunks").toString
-  private lazy val stateDir295: String =
-    java.nio.file.Files.createTempDirectory("graft_b295_state").toString
 
   /** B295 — INCREMENTAL PERCEPTUAL INDEX (streamed twin of b290, the
     * b142/b146 incremental-dedup pattern applied to the perceptual
@@ -1460,8 +1317,9 @@ object StreamReplay {
     * and reports the verified pairs it completes. */
   private def incrementalNearDupIndex(s: org.apache.spark.sql.SparkSession,
       bits: org.apache.spark.sql.DataFrame, idOffset: Long,
-      chunkDir: String, stateDir: String): org.apache.spark.sql.DataFrame = {
+      key: String): org.apache.spark.sql.DataFrame = {
     val PH = graft.llm.PerceptualHash
+    val (chunkDir, stateDir) = (WorkDirs(s"${key}_chunks"), WorkDirs(s"${key}_state"))
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     // four arrival groups; any split works — correctness is split-free
     // (the oracle has no arrival notion), so media_id % 4 is just a
@@ -1479,7 +1337,7 @@ object StreamReplay {
       .agg(sum(expr(
         "bit * shiftleft(CAST(1 AS BIGINT), CAST(block_idx % 16 AS INT))"))
         .as("band_val"))
-    val repDir = freshDir(s"$stateDir/reports")
+    val repDir = WorkDirs.fresh(s"${key}_state/reports")
     StreamingOps.runForeachBatch(stream, "append") { (batch, id) =>
       val allPath = s"$stateDir/all_$id"
       val all =
@@ -1520,13 +1378,8 @@ object StreamReplay {
     "b295_stream_perceptual_index",
     graft.llm.PerceptualHash.neardupOracleSql) { (s, d) =>
     incrementalNearDupIndex(s, graft.llm.PerceptualHash.bitRows(s, d),
-      graft.llm.PerceptualHash.PerceptIdOffset, chunkDir295, stateDir295)
+      graft.llm.PerceptualHash.PerceptIdOffset, "b295")
   }
-
-  private lazy val chunkDir304: String =
-    java.nio.file.Files.createTempDirectory("graft_b304_chunks").toString
-  private lazy val stateDir304: String =
-    java.nio.file.Files.createTempDirectory("graft_b304_state").toString
 
   /** B304 — INCREMENTAL AUDIO INDEX: B295's maintained near-dup index fed
     * by B299's WAV-parsed audio fingerprints — the same versioned index,
@@ -1539,13 +1392,8 @@ object StreamReplay {
     "b304_stream_audio_index",
     graft.llm.AudioFingerprint.audioNeardupOracleSql) { (s, d) =>
     incrementalNearDupIndex(s, graft.llm.AudioFingerprint.bitRows(s, d),
-      graft.llm.AudioFingerprint.AudioIdOffset, chunkDir304, stateDir304)
+      graft.llm.AudioFingerprint.AudioIdOffset, "b304")
   }
-
-  private lazy val chunkDir305: String =
-    java.nio.file.Files.createTempDirectory("graft_b305_chunks").toString
-  private lazy val stateDir305: String =
-    java.nio.file.Files.createTempDirectory("graft_b305_state").toString
 
   /** B305 — BOILERPLATE EXTRACTION AT THE INGEST DOOR (streamed twin of
     * b300, the b263 admission convention): documents arrive in
@@ -1565,15 +1413,16 @@ object StreamReplay {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val docs = graft.sources.Tables.documents(s, d)
       .select(col("doc_id"), col("text"))
+    val chunkDir = WorkDirs("b305_chunks")
     for (k <- 0 to 3)
       docs.filter(pmod(col("doc_id"), lit(4L)) === k)
         .coalesce(1).write.mode("overwrite")
-        .parquet(f"$chunkDir305/chunk_$k%04d")
-    val stream = StreamingOps.readStream(s, chunkDir305,
+        .parquet(f"$chunkDir/chunk_$k%04d")
+    val stream = StreamingOps.readStream(s, chunkDir,
       schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType))))
     val leak = graft.llm.Boilerplate.leakOf(s, d)
-    val repDir = freshDir(s"$stateDir305/reports")
+    val repDir = WorkDirs.fresh("b305_state/reports")
     StreamingOps.runForeachBatch(stream, "append") { (batch, id) =>
       graft.llm.Boilerplate.extractionReport(
           graft.llm.Boilerplate.htmlFor(batch.toDF(), leak))

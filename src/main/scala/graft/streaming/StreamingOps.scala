@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import graft.exec.WorkDirs
 
 /** Structured Streaming operators (SURVEY B48-B54) over a file-chunked
   * replay of the events table. Every aggregation has a batch twin
@@ -52,9 +53,9 @@ object StreamingOps {
     // chunk count varies with row count (ceil(rows/n) per chunk), so a
     // same-JVM re-run against a smaller dataset would leave stale
     // chunk_NNNN dirs that the readStream chunk_* glob replays — clear
-    // them first (the idempotent-re-run discipline the b148 delta sink
-    // follows)
-    clearChunks(dir)
+    // them first
+    Option(new java.io.File(dir).listFiles()).foreach(
+      _.filter(_.getName.startsWith("chunk_")).foreach(f => WorkDirs.delete(f.toPath)))
     val spark = events.sparkSession
     val ordered = events.orderBy(sortCols.map(col): _*)
     val rows = ordered.collect()
@@ -63,19 +64,6 @@ object StreamingOps {
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(chunk.toSeq, 1), ordered.schema)
       write(df.coalesce(1), f"$dir/chunk_$i%04d")
-    }
-  }
-
-  /** Recursively delete any pre-existing chunk_* entries under `dir`. */
-  private def clearChunks(dir: String): Unit = {
-    val root = new java.io.File(dir)
-    if (root.isDirectory) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      Option(root.listFiles()).foreach(
-        _.filter(_.getName.startsWith("chunk_")).foreach(rm))
     }
   }
 
@@ -455,13 +443,16 @@ object StreamingOps {
   }
 
   /** Run a streaming DataFrame to completion against the memory sink
-    * (Trigger.AvailableNow — B54) and return the materialized result. */
+    * (Trigger.AvailableNow — B54) and return the materialized result.
+    * The sink's view `name` replaces any existing view of that name, so
+    * an entry re-run in the same session starts from an empty sink. */
   def runToMemory(df: DataFrame, name: String, mode: String): DataFrame =
     runToMemoryQ(df, name, mode)._1
 
   /** [[runToMemory]] variant that also returns the finished query handle
     * (for progress/state-metrics assertions). */
   def runToMemoryQ(df: DataFrame, name: String, mode: String): (DataFrame, StreamingQuery) = {
+    df.sparkSession.catalog.dropTempView(name)
     val q = df.writeStream
       .format("memory")
       .queryName(name)

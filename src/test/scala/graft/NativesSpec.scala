@@ -10,10 +10,11 @@ import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, SimpleFunctionR
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Natives
 
-/** One native-function table, one session factory, one query scope: the
-  * table reaches every session through an entry or GraftExtensions, and
-  * `src/main` keeps no second way to build a session, register a native,
-  * or checkpoint, persist and run concurrent legs. */
+/** One native-function table, one session factory, one query scope, one
+  * scratch-dir owner: the table reaches every session through an entry or
+  * GraftExtensions, and `src/main` keeps no second way to build a session,
+  * register a native, checkpoint, persist, run concurrent legs, make or
+  * delete a scratch dir, or drop a memory-sink view. */
 class NativesSpec extends AnyFunSuite {
   private val names = Natives.table.map(_._1)
 
@@ -75,5 +76,13 @@ class NativesSpec extends AnyFunSuite {
       assert(offenders(raw, scope) === Seq.empty, raw)
     assert(offenders("releaseCheckpoint|roundFrames|materializeOcc|graph_rounds|span_stages",
       Set.empty) === Seq.empty)
+  }
+
+  test("src/main makes scratch dirs and drops memory-sink views in one place each") {
+    assert(sources.size > 100, s"source scan found only ${sources.size} files")
+    assert(offenders("createTempDirectory", Set("WorkDirs.scala")) === Seq.empty)
+    assert(offenders("""Files\.walk|Files\.delete|deleteIfExists|\.delete\(\)""",
+      Set("WorkDirs.scala")) === Seq.empty)
+    assert(offenders("dropTempView", Set("StreamingOps.scala", "Tables.scala")) === Seq.empty)
   }
 }

@@ -41,7 +41,9 @@ object Natives {
     "encode_postings" -> unary("encode_postings")(EncodePostingsExpression(_)),
     "decode_postings" -> unary("decode_postings")(DecodePostingsExpression(_)),
     "dot_i64" -> binary("dot_i64")(DotI64Expression(_, _)),
-    "sqdist_i64" -> binary("sqdist_i64")(SqDistI64Expression(_, _)))
+    "sqdist_i64" -> binary("sqdist_i64")(SqDistI64Expression(_, _)),
+    "wildweb_envelope" -> unary("wildweb_envelope")(WildWebEnvelopeExpression(_)),
+    "json_bytes" -> unary("json_bytes")(JsonBytesExpression(_)))
 
   /** Registers every table name the session's function registry lacks.
     * Registering only absent names keeps repeated calls free of

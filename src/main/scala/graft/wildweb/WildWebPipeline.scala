@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.exec.QueryScope
+import graft.functions.Natives
 
 /** The reference's whole dataflow (A1-A14, reference task.ts:67-158)
   * re-expressed as one declarative Spark plan.
@@ -37,6 +38,13 @@ import graft.exec.QueryScope
   * one Spark job for [[run]] and one collect for the submit body: the A4
   * guard and the A14 quarantine are observed metrics of the features'
   * own scan, one tiny value per center.
+  *
+  * Both JSON edges are byte-level kernels from [[graft.functions.Natives]]:
+  * `wildweb_envelope` decodes a landed body from its UTF-8 bytes and
+  * `json_bytes` writes each Feature's JSON straight from the row. The
+  * decoder's fast path takes only a strict, well-formed subset of JSON;
+  * every other body falls back to Spark's own `from_json`, so both edges
+  * give exactly what `from_json` and `to_json` give.
   */
 object WildWebPipeline {
 
@@ -59,15 +67,21 @@ object WildWebPipeline {
   final case class Completed(features: DataFrame, errors: DataFrame) extends Outcome
 
   /** A2/A3 — read one JSON envelope file per center and decode it against
-    * the declared schema. Corrupt/mismatched bodies yield a null envelope
-    * (PERMISSIVE) and are quarantined by [[run]], mirroring the per-center
-    * try/catch (A14) rather than failing the job. */
-  def readEnvelopes(spark: SparkSession, dir: String): DataFrame =
+    * the declared schema with the `wildweb_envelope` kernel: its byte-level
+    * fast path parses a well-formed body straight from UTF-8, and any other
+    * body goes to Spark's `from_json`, so the result is exactly
+    * `from_json(value, WildWebSchemas.envelope)`. Corrupt/mismatched bodies
+    * yield a null envelope (PERMISSIVE) and are quarantined by [[run]],
+    * mirroring the per-center try/catch (A14) rather than failing the job.
+    * Installs the natives first: a plain session carries no extensions. */
+  def readEnvelopes(spark: SparkSession, dir: String): DataFrame = {
+    Natives.install(spark)
     spark.read.option("wholetext", "true").text(dir)
       .select(
         regexp_extract(col("_metadata.file_path"), "([^/]+)\\.json$", 1).as("center"),
         col("value"))
-      .withColumn("envelope", from_json(col("value"), WildWebSchemas.envelope))
+      .withColumn("envelope", call_function("wildweb_envelope", col("value")))
+  }
 
   /** A5/A6 — explode envelopes into one row per incident. `explode` on a
     * null `data` array emits zero rows, which is exactly the null-collection
@@ -90,9 +104,9 @@ object WildWebPipeline {
     d.isNotNull && d =!= 0.0 && !isnan(d)
   }
 
-  /** A7-A11 — the per-incident transform chain, ending in GeoJSON Feature
-    * structs (schema [[WildWebSchemas.feature]] + a `center` column). */
-  def features(incidents: DataFrame, config: WildWebConfig): DataFrame = {
+  /** A7-A9 — the kept incidents: `(center, fire, lon_d, lat_d)` with
+    * `fire.date` normalized and both coordinates parsed. */
+  def kept(incidents: DataFrame, config: WildWebConfig): DataFrame = {
     val cutoffTs = lit(Timestamp.from(config.cutoff))
     incidents
       // A7 — keep iff date >= now - range (strictly-older dropped, task.ts:113).
@@ -106,24 +120,35 @@ object WildWebPipeline {
       // (task.ts:120-124; '' / ' ' / 'abc' → null via try_cast, 0/'0' → zero
       // — all dropped; ANSI cast would throw on 'abc' instead)
       .filter(coordValid(col("fire.longitude")) && coordValid(col("fire.latitude")))
-      .withColumn("lon_d", col("fire.longitude").try_cast("double"))
-      .withColumn("lat_d", col("fire.latitude").try_cast("double"))
-      // A10 (unconditional negation, task.ts:138) + A11 (feature projection)
-      .select(
-        col("center"),
-        concat(lit("wildweb-"), col("fire.uuid")).as("id"),
-        lit("Feature").as("type"),
-        struct(
-          col("fire.name").as("callsign"),
-          col("fire.date").as("start"),
-          col("fire").as("metadata")).as("properties"),
-        struct(
-          lit("Point").as("type"),
-          array(-col("lon_d"), col("lat_d")).as("coordinates")).as("geometry"))
+      .select(col("center"), col("fire"),
+        col("fire.longitude").try_cast("double").as("lon_d"),
+        col("fire.latitude").try_cast("double").as("lat_d"))
   }
 
+  /** A10 (unconditional negation, task.ts:138) + A11 (feature projection)
+    * over [[kept]] rows: GeoJSON Feature structs (schema
+    * [[WildWebSchemas.feature]] + a `center` column). */
+  def features(kept: DataFrame): DataFrame =
+    kept.select(
+      col("center"),
+      concat(lit("wildweb-"), col("fire.uuid")).as("id"),
+      lit("Feature").as("type"),
+      struct(
+        col("fire.name").as("callsign"),
+        col("fire.date").as("start"),
+        col("fire").as("metadata")).as("properties"),
+      struct(
+        lit("Point").as("type"),
+        array(-col("lon_d"), col("lat_d")).as("coordinates")).as("geometry"))
+
+  /** A7-A11 — the per-incident transform chain, ending in GeoJSON Feature
+    * structs. */
+  def features(incidents: DataFrame, config: WildWebConfig): DataFrame =
+    features(kept(incidents, config))
+
   /** Full A1-A14 run over a landed directory as one Spark job, the
-    * `feats` checkpoint. An observation at the envelope level, below every
+    * `feats` checkpoint of the [[kept]] rows; the features are their A10/A11
+    * projection. An observation at the envelope level, below every
     * filter, records the A4 violations and the undecoded centers (A14) in
     * the same pass; it is read once the checkpoint has returned, and the
     * quarantine is built on the driver, sorted by center. */
@@ -138,13 +163,13 @@ object WildWebPipeline {
       // reference catches per center and continues, task.ts:75,144-146)
       collect_list(when(col("envelope").isNull, col("center"))).as("undecoded"))
     // Required, not an optimization: under ANSI, getItem(0) on [] throws
-    val feats = QueryScope.materialize("feats")(features(
+    val feats = QueryScope.materialize("feats")(kept(
       incidents(envelopes.filter(size(col("envelope")) === 1)), config))
     val metrics = obs.get
     if (metrics("bad").asInstanceOf[Long] > 0) Aborted
     else {
       val undecoded = metrics("undecoded").asInstanceOf[scala.collection.Seq[String]]
-      Completed(feats, spark.createDataFrame(
+      Completed(features(feats), spark.createDataFrame(
         undecoded.sorted.map(c => Row(c, "envelope decode failed")).asJava, errorSchema))
     }
   }
@@ -161,17 +186,19 @@ object WildWebPipeline {
   /** A12/A13 — the FeatureCollection JSON as UTF-8 bytes, features in
     * `orderBy("id")` order (task.ts:70-73,142,149). One collect of
     * (id, feature JSON) as bytes, sorted on the driver and copied into one
-    * presized array. This is the submit-sink edge (one HTTP POST in the
-    * reference), test-scale by definition. The 100 TB path writes feature
-    * JSON-lines with `df.write.json` instead and submits per batch via
-    * foreachBatch. */
+    * presized array. Each feature is written by the `json_bytes` kernel
+    * straight from the row: the bytes of `to_json(feature,
+    * ignoreNullFields=false)` — JSON.stringify keeps explicit nulls, the
+    * reference emits "ic": null, not an absent field (task.ts:133) —
+    * without `to_json`'s String round trip. This is the submit-sink edge
+    * (one HTTP POST in the reference), test-scale by definition. The
+    * 100 TB path writes feature JSON-lines with `df.write.json` instead
+    * and submits per batch via foreachBatch. */
   def featureCollectionJson(features: DataFrame): Array[Byte] = {
+    Natives.install(features.sparkSession)
     val feats = features
-      .select(col("id").cast("binary"), to_json(
-        struct(col("id"), col("type"), col("properties"), col("geometry")),
-        // ignoreNullFields=false: JSON.stringify keeps explicit nulls — the
-        // reference emits "ic": null, not an absent field (task.ts:133)
-        java.util.Map.of("ignoreNullFields", "false")).cast("binary"))
+      .select(col("id").cast("binary"), call_function("json_bytes",
+        struct(col("id"), col("type"), col("properties"), col("geometry"))))
       .as(Encoders.tuple(Encoders.BINARY, Encoders.BINARY))
       .collect()
       .sortBy(_._1)(utf8Order)

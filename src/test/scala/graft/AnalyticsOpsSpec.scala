@@ -62,7 +62,7 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     import graft.streaming.{CohortProcessor, StreamingOps}
     val schema = StructType(Seq(
       StructField("user_id", LongType), StructField("week", LongType)))
-    val dir = Files.createTempDirectory(s"graft_cohort_$tag").toString
+    val dir = TestDirs(s"graft_cohort_$tag").toString
     import spark.implicits._
     val df = rows.toDF("user_id", "week")
     StreamingOps.writeChunksDf(df, dir, n = 3, sortCols = Seq("week", "user_id"))

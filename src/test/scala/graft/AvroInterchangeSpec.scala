@@ -25,7 +25,7 @@ class AvroInterchangeSpec extends AnyFunSuite {
       Row(5L, "delta", Int.MaxValue, Double.MinPositiveValue))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 3), schema)
-    val out = java.nio.file.Files.createTempDirectory("avro_spec").toString + "/rt"
+    val out = TestDirs("avro_spec").toString + "/rt"
     AvroInterchange.writeAvro(df, out)
     val back = AvroInterchange.readAvro(spark, out, schema)
       .collect().sortBy(_.getLong(0))

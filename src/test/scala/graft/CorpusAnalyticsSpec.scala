@@ -251,7 +251,7 @@ class CorpusAnalyticsSpec extends AnyFunSuite {
     // τ has no rank-(K+1) row on a tiny corpus; the LEFT-joined fallback
     // must keep every doc with its own weight as the estimate instead of
     // annihilating the sample through an inner cross join
-    val tiny = java.nio.file.Files.createTempDirectory("b167tiny").toString
+    val tiny = TestDirs("b167tiny").toString
     Tables.documents(spark, sf).orderBy("doc_id").limit(30)
       .coalesce(1).write.mode("overwrite").parquet(s"$tiny/documents.parquet")
     val rows = SparkEntry.queries("b167_priority_sample")(spark, tiny)

@@ -52,7 +52,7 @@ class IvfSpec extends AnyFunSuite {
   test("cell-partitioned layout: pruned on-disk search equals in-memory, prunes dirs") {
     val e = Tables.embeddings(spark, sf)
     val k = Ivf.defaultNumCells(e.count())
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_layout").toString
+    val dir = TestDirs("graft_ivf_layout").toString
     Ivf.writeCellPartitioned(e, k, dir)
     val fromDisk = Ivf.searchFromLayout(spark, dir,
       e.filter(col("vec_id") < 20), k = 10, nProbe = 5)

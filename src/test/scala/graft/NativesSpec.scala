@@ -18,10 +18,12 @@ import graft.functions.Natives
 class NativesSpec extends AnyFunSuite {
   private val names = Natives.table.map(_._1)
 
-  test("the table lists 24 distinct names, none a Spark built-in") {
-    assert(names.size === 24 && names.distinct.size === 24)
+  test("the table lists 26 distinct names, none a Spark built-in") {
+    assert(names.size === 26 && names.distinct.size === 26)
     val builtin = FunctionRegistry.builtin.listFunction().map(_.funcName).toSet
     assert(names.filter(builtin).isEmpty)
+    // the WildWeb JSON kernels are in the table, under names Spark does not define
+    assert(Seq("wildweb_envelope", "json_bytes").forall(n => names.contains(n) && !builtin(n)))
   }
 
   test("GraftExtensions injects exactly the table's names") {
@@ -34,7 +36,7 @@ class NativesSpec extends AnyFunSuite {
     assert(reg.listFunction().map(_.funcName).sorted === names.sorted)
   }
 
-  test("on a session without the natives, one entry installs all 24;" +
+  test("on a session without the natives, one entry installs all 26;" +
     " a second install changes nothing") {
     // a fresh session with every native dropped: the registry of a
     // session built without GraftExtensions
@@ -84,5 +86,14 @@ class NativesSpec extends AnyFunSuite {
     assert(offenders("""Files\.walk|Files\.delete|deleteIfExists|\.delete\(\)""",
       Set("WorkDirs.scala")) === Seq.empty)
     assert(offenders("dropTempView", Set("StreamingOps.scala", "Tables.scala")) === Seq.empty)
+  }
+
+  test("specs make temp dirs only through TestDirs") {
+    val specs = Files.walk(Paths.get("src/test/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(specs.size > 50, s"source scan found only ${specs.size} spec files")
+    val owners = Set("TestDirs.scala", "NativesSpec.scala")
+    assert(specs.filter(f => !owners(f.getFileName.toString) &&
+      Files.readString(f).contains("createTemp")) === Seq.empty)
   }
 }

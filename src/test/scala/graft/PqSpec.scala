@@ -134,7 +134,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("on-disk IVFADC index is result-equal to in-memory and prunes cells at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx").toString
+    val dir = TestDirs("graft_ivfpq_idx").toString
     Pq.writeIvfPqIndex(emb, dir)
     val fromIndex = Pq.searchIvfAdcFromIndex(spark, dir,
       emb.filter(col("vec_id") < 20), k = 10, nProbe = 10)

@@ -196,8 +196,7 @@ class RetrievalSpec extends AnyFunSuite {
   // ---- B108b written-index phrase serving --------------------------------
 
   private lazy val writtenIndexPath: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_retrieval_spec").toString + "/index"
+    val dir = TestDirs("graft_retrieval_spec").toString + "/index"
     Retrieval.invertedIndexBlocked(docsDf, docsPerBlock = 4L)
       .repartitionByRange(4, col("term"))
       .sortWithinPartitions("term", "block_no")

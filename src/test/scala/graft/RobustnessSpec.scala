@@ -12,7 +12,7 @@ class RobustnessSpec extends AnyFunSuite {
   private val spark = TestSession.spark
 
   test("JSON decode tolerates unknown extra fields (schema evolution)") {
-    val dir = Files.createTempDirectory("graft_evo").toString
+    val dir = TestDirs("graft_evo").toString
     // an envelope with fields the schema doesn't declare — upstream adding
     // fields must not break ingestion (from_json keeps declared fields)
     Files.writeString(java.nio.file.Paths.get(s"$dir/center_new.json"),
@@ -34,7 +34,7 @@ class RobustnessSpec extends AnyFunSuite {
   }
 
   test("corrupt file in a scan directory fails loudly; opt-in skip reads the rest") {
-    val dir = Files.createTempDirectory("graft_corrupt").toString
+    val dir = TestDirs("graft_corrupt").toString
     import spark.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .coalesce(1).write.mode("overwrite").parquet(dir)
@@ -72,7 +72,7 @@ class RobustnessSpec extends AnyFunSuite {
   }
 
   test("B4 scale path: partitioned parquet write prunes partitions on read") {
-    val out = Files.createTempDirectory("graft_part").toString + "/docs"
+    val out = TestDirs("graft_part").toString + "/docs"
     Tables.documents(spark, TestSession.sf0001)
       .write.mode("overwrite").partitionBy("lang").parquet(out)
     // directory layout is the partition key
@@ -93,7 +93,7 @@ class RobustnessSpec extends AnyFunSuite {
     // time — only DPP (runtime subquery into the scan's partition filters)
     // can prune here, and at 100 TB that is the difference between reading
     // one partition directory and all of them
-    val out = Files.createTempDirectory("graft_dpp").toString + "/cust"
+    val out = TestDirs("graft_dpp").toString + "/cust"
     Tables.customer(spark, TestSession.sf0001)
       .write.mode("overwrite").partitionBy("c_nationkey").parquet(out)
     spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")

@@ -17,7 +17,7 @@ class StreamingSpec extends AnyFunSuite {
   private val sf = TestSession.sf0001
 
   private lazy val chunkDir: String = {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = TestDirs("graft_stream").toString
     StreamingOps.writeChunks(spark, sf, dir, n = 6)
     dir
   }
@@ -60,7 +60,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("B52: dropDuplicatesWithinWatermark removes replayed duplicates") {
     // duplicate chunk 0 as a later arrival (same event_ids, within horizon)
-    val dir = Files.createTempDirectory("graft_dups").toString
+    val dir = TestDirs("graft_dups").toString
     val src = spark.read.parquet(s"$chunkDir/chunk_0000")
     src.write.parquet(s"$dir/chunk_0000")
     src.write.parquet(s"$dir/chunk_0001") // exact duplicates
@@ -99,7 +99,7 @@ class StreamingSpec extends AnyFunSuite {
     // watermark so every real purchase resolves; the sentinel ids are
     // filtered from the comparison (the sentinel purchase itself is the
     // one row legitimately still buffered at stop).
-    val dir = Files.createTempDirectory("graft_outer").toString
+    val dir = TestDirs("graft_outer").toString
     val ev = graft.sources.Tables.events(spark, sf)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
@@ -138,7 +138,7 @@ class StreamingSpec extends AnyFunSuite {
       // flush sentinel (its own user) advances the watermark past every
       // real session's end so the FINAL session per user — reachable only
       // through timer expiry — actually emits before the replay stops
-      val dir = Files.createTempDirectory("graft_sess_tws").toString
+      val dir = TestDirs("graft_sess_tws").toString
       val ev = graft.sources.Tables.events(spark, sf)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
       val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
@@ -204,7 +204,7 @@ class StreamingSpec extends AnyFunSuite {
     val df = rows.map { case (u, ms, id, t) =>
       (id, new Timestamp(ms), u, t)
     }.toDF("event_id", "ts", "user_id", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("graft_b214_spec").toString
+    val dir = TestDirs("graft_b214_spec").toString
     StreamingOps.writeChunksDf(df, dir, n = 3)
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -240,7 +240,7 @@ class StreamingSpec extends AnyFunSuite {
     val df = rows.map { case (u, ms, id, t, v) =>
       (id, new Timestamp(ms), u, t, v)
     }.toDF("event_id", "ts", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft_b224_spec").toString
+    val dir = TestDirs("graft_b224_spec").toString
     StreamingOps.writeChunksDf(df, dir, n = 3)
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -272,7 +272,7 @@ class StreamingSpec extends AnyFunSuite {
     val df = rows.map { case (u, ms, id, v) =>
       (id, new Timestamp(ms), u, v)
     }.toDF("event_id", "ts", "user_id", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft_b234_spec").toString
+    val dir = TestDirs("graft_b234_spec").toString
     StreamingOps.writeChunksDf(df, dir, n = 3)
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -327,8 +327,8 @@ class StreamingSpec extends AnyFunSuite {
     // from the SAME checkpoint after new chunks land and must process
     // ONLY those — the file-source offsets live in the checkpoint, which
     // is what makes a crashed job resumable without duplicates at scale
-    val srcDir = Files.createTempDirectory("graft_ckpt_src").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
+    val srcDir = TestDirs("graft_ckpt_src").toString
+    val ckpt = TestDirs("graft_ckpt").toString
     val seen = scala.collection.mutable.ArrayBuffer[Long]()
     def drain(): Unit = {
       val q = StreamingOps.readStream(spark, srcDir)
@@ -355,7 +355,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("B51: late data behind the watermark is dropped (append mode)") {
-    val dir = Files.createTempDirectory("graft_late").toString
+    val dir = TestDirs("graft_late").toString
     def chunk(name: String, rows: Seq[(Long, String, Long, String, Double, String)]): Unit = {
       import spark.implicits._
       rows.toDF("event_id", "ts_s", "user_id", "event_type", "value", "props")
@@ -469,8 +469,8 @@ class StreamingSpec extends AnyFunSuite {
       (1L, 3L, 3000L, 4000L), (2L, 4L, 6000L, 7000L),
       (2L, 6L, 6500L, 8000L), (1L, 5L, 9000L, 12000L))
     val ev = rows.toDF("user_id", "event_id", "ts_us", "end_us")
-    val cd = java.nio.file.Files.createTempDirectory("graft_b246_spec_c").toString
-    val sd = java.nio.file.Files.createTempDirectory("graft_b246_spec_s").toString
+    val cd = TestDirs("graft_b246_spec_c").toString
+    val sd = TestDirs("graft_b246_spec_s").toString
     val got = graft.streaming.StreamReplay.runIntervalMerge(spark, ev, cd, sd, nChunks = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
@@ -510,7 +510,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val dir = Files.createTempDirectory("graft_week_close").toString
+      val dir = TestDirs("graft_week_close").toString
       val ev = graft.sources.Tables.events(spark, sf)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
       val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
@@ -558,7 +558,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val dir = Files.createTempDirectory("graft_island_close").toString
+      val dir = TestDirs("graft_island_close").toString
       val ev = graft.sources.Tables.events(spark, sf)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
       val maxTs = ev.agg(max("ts")).head().getTimestamp(0)
@@ -605,7 +605,7 @@ class StreamingSpec extends AnyFunSuite {
   test("B283: watermark-closed day counts equal the batch rollup, the" +
     " CUSUM twin equals the batch detector row-for-row, and state is" +
     " bounded to the sentinel's open window") {
-    val dir = Files.createTempDirectory("graft_cusum_stream").toString
+    val dir = TestDirs("graft_cusum_stream").toString
     val ev = graft.sources.Tables.events(spark, sf)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     val maxTs = ev.agg(max("ts")).head().getTimestamp(0)

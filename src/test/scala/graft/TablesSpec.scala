@@ -41,7 +41,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("events loader adapts to an int64-ns generation and values match the µs read") {
-    val tmp = Files.createTempDirectory("graft-events-ns").toString
+    val tmp = TestDirs("graft-events-ns").toString
     // Re-encode the current events table as raw int64 nanoseconds, the
     // pre-2026-08-13 physical layout (ns parquet timestamps read via the
     // legacy conf are indistinguishable from a plain int64 column to the
@@ -58,7 +58,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("registerAll survives a poisoned table; other views still work") {
-    val tmp = Files.createTempDirectory("graft-poison").toString
+    val tmp = TestDirs("graft-poison").toString
     for (n <- Tables.names) {
       Files.copy(Paths.get(s"$sf/$n.parquet"), Paths.get(s"$tmp/$n.parquet"),
         StandardCopyOption.REPLACE_EXISTING)

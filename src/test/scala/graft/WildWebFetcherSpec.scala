@@ -25,7 +25,7 @@ class WildWebFetcherSpec extends AnyFunSuite {
         }
       } finally inFlight.decrementAndGet()
     }
-    val dir = Files.createTempDirectory("graft_fetch").toString
+    val dir = TestDirs("graft_fetch").toString
     val centers = Seq("AZ-PDC", "BAD-HTTP", "CO-PBC", "BAD-NET", "NM-ABC")
     val (landed, errors) = WildWebFetcher.fetchAll(
       centers, c => s"https://example.test/centers/$c/incidents", dir, transport)
@@ -52,7 +52,7 @@ class WildWebFetcherSpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val dir = Files.createTempDirectory("graft_fetch_bytes")
+      val dir = TestDirs("graft_fetch_bytes")
       val (landed, _) = WildWebFetcher.fetchAll(Seq("RAW-DC"),
         c => s"http://localhost:${server.getAddress.getPort}/centers/$c", dir.toString,
         WildWebFetcher.httpTransport())
@@ -74,7 +74,7 @@ class WildWebFetcherSpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val dir = Files.createTempDirectory("graft_fetch_e2e").toString
+      val dir = TestDirs("graft_fetch_e2e").toString
       val (landed, errors) = WildWebFetcher.fetchAll(
         Seq("TEST-DC"),
         c => s"http://localhost:${server.getAddress.getPort}/centers/$c/incidents",

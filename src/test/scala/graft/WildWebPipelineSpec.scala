@@ -70,7 +70,7 @@ class WildWebPipelineSpec extends AnyFunSuite {
   }
 
   test("A14: corrupt center is quarantined, others still produce features") {
-    val dir = java.nio.file.Files.createTempDirectory("wildweb_corrupt")
+    val dir = TestDirs("wildweb_corrupt")
     try {
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$okDir/center_ok.json"),
@@ -100,7 +100,7 @@ class WildWebPipelineSpec extends AnyFunSuite {
     // row-level damage control instead of center-level collateral (at
     // scale one poisoned row must not sink a shard). This fixture pins
     // the divergence so it stays an audited decision, not an accident.
-    val dir = java.nio.file.Files.createTempDirectory("wildweb_baddate")
+    val dir = TestDirs("wildweb_baddate")
     try {
       java.nio.file.Files.writeString(dir.resolve("center_baddate.json"),
         """[{"retrieved": "2026-01-15T12:00:00Z", "data": [
@@ -126,7 +126,7 @@ class WildWebPipelineSpec extends AnyFunSuite {
   /** Runs `body` over a temporary landed directory of `<center>.json`
     * files with the given contents. */
   private def landed[T](centers: (String, String)*)(body: String => T): T = {
-    val dir = Files.createTempDirectory("wildweb_landed")
+    val dir = TestDirs("wildweb_landed")
     try {
       for ((c, text) <- centers) Files.writeString(dir.resolve(s"$c.json"), text)
       body(dir.toString)

@@ -13,7 +13,8 @@ import graft.functions.Natives
   *
   * gets every native of [[graft.functions.Natives]]'s table in SQL with
   * full whole-stage codegen (other sessions get the same table from
-  * [[graft.functions.Natives.install]], which every registry entry runs),
+  * [[graft.functions.Natives.install]], which every registry entry runs;
+  * a new native is one row of that table plus one static kernel method),
   * plus the three graft optimizer rules: [[graft.plans.RangeJoinBucketing]],
   * which rewrites naive band/interval theta joins (O(n·m) nested-loop
   * plans) into bucketed equi joins, [[graft.plans.CosineLshRewrite]] and

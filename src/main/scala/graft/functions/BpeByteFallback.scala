@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** BYTE-FALLBACK BPE (B172; VERDICT r13 item 5 / what's-missing #4 — the
@@ -38,46 +35,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale posture: both directions are pure map-side scalars inside
   * whole-stage codegen (the [[BpeEncodeExpression]] posture verbatim);
   * the byte table adds O(256) to the baked-in model, nothing shuffles. */
-case class BpeEncodeBytesExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "bpe_encode_bf"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    BpeByteFallback.encode(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeByteFallback.encode($c)")
-  override protected def withNewChildInternal(newChild: Expression): BpeEncodeBytesExpression =
-    copy(child = newChild)
-}
-
-case class BpeDecodeBytesExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "bpe_decode_bf"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    BpeByteFallback.decode(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeByteFallback.decode($c)")
-  override protected def withNewChildInternal(newChild: Expression): BpeDecodeBytesExpression =
-    copy(child = newChild)
-}
-
 object BpeByteFallback {
 
   /** Byte id b encodes as ByteBase + b (b in 0..255). Far above the
@@ -178,5 +135,4 @@ object BpeByteFallback {
     flushRun()
     UTF8String.fromString(sb.toString)
   }
-
 }

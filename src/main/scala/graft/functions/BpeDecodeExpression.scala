@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Inverse of [[BpeEncodeExpression]] for B151 (VERDICT r11 item 4 / r12
@@ -21,33 +18,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale posture: pure map-side scalar inside whole-stage codegen — the
   * id→token table is an O(vocab) array baked into the class, no shuffle,
   * no broadcast, O(tokens) per row. */
-case class BpeDecodeExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "bpe_decode"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    BpeDecodeExpression.decode(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.BpeDecodeExpression.decode($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeDecodeExpression =
-    copy(child = newChild)
-}
-
 object BpeDecodeExpression {
 
   /** id → token surface string; index 0 is the OOV sentinel (""). Built
@@ -74,17 +44,5 @@ object BpeDecodeExpression {
       }
     }
     UTF8String.fromString(sb.toString)
-  }
-
-  def build(children: Seq[Expression]): BpeDecodeExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "bpe_decode",
-          "expectedNum" -> "1",
-          "actualNum" -> children.size.toString,
-          "docroot" -> "NA"))
-    BpeDecodeExpression(children.head)
   }
 }

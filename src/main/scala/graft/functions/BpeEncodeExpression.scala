@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native deterministic BPE tokenizer for B122 (Sennrich et al., ACL'16 —
@@ -33,33 +30,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * (bounded, per executor) exploits natural-language Zipf: a handful of
   * distinct words dominate any shard, so the per-word merge loop runs
   * once per distinct word, not once per occurrence. */
-case class BpeEncodeExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "bpe_encode"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    BpeEncodeExpression.encode(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.BpeEncodeExpression.encode($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): BpeEncodeExpression =
-    copy(child = newChild)
-}
-
 object BpeEncodeExpression {
 
   /** The frozen merge table, rank order, from the checked-in resource. */
@@ -121,18 +91,6 @@ object BpeEncodeExpression {
   def encode(s: UTF8String): UTF8String = {
     val words = s.toString.split(" ", -1).filter(_.nonEmpty)
     UTF8String.fromString(words.map(encodeWord).mkString(" "))
-  }
-
-  def build(children: Seq[Expression]): BpeEncodeExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "bpe_encode",
-          "expectedNum" -> "1",
-          "actualNum" -> children.size.toString,
-          "docroot" -> "NA"))
-    BpeEncodeExpression(children.head)
   }
 
   /** Installs every native ([[Natives.install]]); kept because

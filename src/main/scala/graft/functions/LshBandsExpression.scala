@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native banded-LSH bucket keys over a MinHash signature (SURVEY §2C
   * tier (b); completes the b43 hot path after `shingle_hashes` →
@@ -19,33 +17,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * without materializing 16 slice arrays or running an interpreted
   * lambda per band per row.
   */
-case class LshBandsExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lsh_bands"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<long>, got ${other.catalogString}")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    LshBandsExpression.bands(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.LshBandsExpression.bands($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): LshBandsExpression =
-    copy(child = newChild)
-}
-
 object LshBandsExpression {
   val Bands = 16
   val RowsPerBand = 4
@@ -69,16 +40,6 @@ object LshBandsExpression {
       b += 1
     }
     new GenericArrayData(out)
-  }
-
-  def build(children: Seq[Expression]): LshBandsExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "lsh_bands", "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    LshBandsExpression(children.head)
   }
 
   /** Installs every native ([[Natives.install]]); kept because

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{XxHash64Function, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{IntegerType, StringType}
 
 /** Native fused MinHash signature (SURVEY §2C tier (b); the
   * b43_dedup_minhash hot loop).
@@ -25,53 +24,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * plan at 100 TB: the per-(doc, shingle) explode rows, the 64-column
   * partial-agg buffers, and the signature shuffle — the signature
   * becomes a map-side projection of the document row.
+  *
+  * It takes the shingle STRINGS ([[sigs]], which hashes them first — the
+  * standalone spelling) or pre-hashed shingle LONGS ([[sigsFromHashes]],
+  * the [[ShingleHashesExpression]] pipeline, where xxhash64 already ran
+  * inside the fused shingler).
+  *
+  * Null on empty input too (not just null input): a shingle-less doc has
+  * NO MinHash signature — the declarative groupBy-min spelling emits no
+  * row for it. A non-null sentinel here (64 × Long.MaxValue) would make
+  * every empty doc band-collide in every LSH band and flood candidate
+  * generation, and the function is registered session-wide, so unguarded
+  * SQL use must stay safe without the call sites' size(...) > 0 gates.
   */
-case class MinHashSigExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sigs"
-
-  /** Accepts the shingle STRINGS (hashes them first — the standalone
-    * spelling) or pre-hashed shingle LONGS (the [[ShingleHashesExpression]]
-    * pipeline, where xxhash64 already ran inside the fused shingler). */
-  private def fromHashes: Boolean = child.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) | ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<string> or array<long>, got ${other.catalogString}")
-    }
-
-  /** Null on empty input too (not just null input): a shingle-less doc has
-    * NO MinHash signature — the declarative groupBy-min spelling emits no
-    * row for it. A non-null sentinel here (64 × Long.MaxValue) would make
-    * every empty doc band-collide in every LSH band and flood candidate
-    * generation, and the function is registered session-wide, so unguarded
-    * SQL use must stay safe without the call sites' size(...) > 0 gates. */
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    if (fromHashes) MinHashSigExpression.sigsFromHashes(input.asInstanceOf[ArrayData])
-    else MinHashSigExpression.sigs(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (fromHashes) "sigsFromHashes" else "sigs"
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.MinHashSigExpression.$fn($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpression =
-    copy(child = newChild)
-}
-
 object MinHashSigExpression {
   val NumHashes = 64
   private val MaskA = 0x3FFFFFFFFFFFFFFFL
@@ -81,8 +46,7 @@ object MinHashSigExpression {
 
   /** One fused pass: shingle bytes → (a, b) → 64 running minima. Shared
     * by eval, the generated code, and the spec's JVM oracle. Null for an
-    * empty input — min over nothing is undefined (see [[MinHashSigExpression
-    * .nullable]]). */
+    * empty input — min over nothing is undefined. */
   def sigs(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return null
@@ -118,16 +82,6 @@ object MinHashSigExpression {
       v += b
       i += 1
     }
-  }
-
-  def build(children: Seq[Expression]): MinHashSigExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "minhash_sigs", "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    MinHashSigExpression(children.head)
   }
 
   /** Installs every native ([[Natives.install]]); kept because

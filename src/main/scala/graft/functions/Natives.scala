@@ -1,15 +1,70 @@
 package graft.functions
 
+import java.lang.invoke.MethodType
+import java.lang.reflect.{Method, Modifier}
+
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.types._
 
-/** The engine's native SQL functions: one table of (name, builder) for
-  * every session-independent codegen expression, and the two ways a
-  * session gets them — [[graft.GraftExtensions]] injects the table when a
-  * session is built with the extension, and [[install]] adds it to any
-  * other session. [[graft.Registry]] entries call [[install]] before they
-  * build their query, so every entry runs in any session.
+/** A static kernel method of a kernel object for one list of input
+  * types. The kernel object loads, and the method is looked up (its
+  * parameters must be the inputs' Java classes), when a call first needs
+  * it, so installing the table loads no kernel. */
+final class Kernel(module: => AnyRef, methodName: String, val inputs: Seq[DataType]) {
+  /** The class whose static forwarder generated code calls. */
+  lazy val owner: String = module.getClass.getName.stripSuffix("$")
+  lazy val method: Method = {
+    val m = Class.forName(owner, true, module.getClass.getClassLoader)
+      .getMethod(methodName, inputs.map(CodeGenerator.javaClass): _*)
+    require(Modifier.isStatic(m.getModifiers), s"$owner.$methodName is not static")
+    m
+  }
+
+  /** Same types, an array's element nullability aside. */
+  def accepts(types: Seq[DataType]): Boolean = types.size == inputs.size &&
+    inputs.zip(types).forall {
+      case (ArrayType(want, _), ArrayType(got, _)) => want == got
+      case (want, got) => want == got
+    }
+}
+
+/** One row of [[Natives.rows]]: the SQL name, the result type, whether a
+  * kernel can return null (the call is also null when any input is), and
+  * the kernels the input types choose from. A kernel returns the result
+  * type's Java class, boxed when the result is a primitive that can be
+  * null; [[kernelFor]] checks that before it hands a kernel out. */
+final class Native(val name: String, val dataType: DataType, val nullResult: Boolean,
+    val kernels: Seq[Kernel]) {
+  require(kernels.map(_.inputs.size).distinct.size == 1, s"$name: kernels differ in arity")
+
+  private lazy val returns: Class[_] = {
+    val c = CodeGenerator.javaClass(dataType)
+    if (nullResult) MethodType.methodType(c).wrap().returnType() else c
+  }
+
+  def kernelFor(types: Seq[DataType]): Option[Kernel] = kernels.find(_.accepts(types)).map { k =>
+    require(k.method.getReturnType == returns,
+      s"$name: ${k.owner}.${k.method.getName} must return ${returns.getName}")
+    k
+  }
+}
+
+/** The engine's native SQL functions: one table of (name, builder), and
+  * the two ways a session gets it — [[graft.GraftExtensions]] injects the
+  * table when a session is built with the extension, and [[install]] adds
+  * it to any other session. [[graft.Registry]] entries call [[install]]
+  * before they build their query, so every entry runs in any session.
+  *
+  * A new native is one row of [[rows]] plus one static kernel method on
+  * its kernel object: [[NativeExpression]] derives the type check,
+  * nullability, interpreted eval and generated code from the row. Only
+  * the two WildWeb JSON kernels keep an expression class of their own
+  * (`wildweb_envelope` falls back to Spark's `from_json`, `json_bytes`
+  * builds a writer for its input's schema), and [[arity]] checks their
+  * calls too.
   *
   * Only pure builders belong here: each closes over nothing but the
   * call's children. Data-dependent registrations (ScaleOps's
@@ -17,33 +72,57 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * bytes) call `createOrReplaceTempFunction` themselves.
   */
 object Natives {
-  val table: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "feature_id" -> unary("feature_id")(FeatureIdExpression(_)),
-    "dot_f64" -> DotProductExpression.build _,
-    "sign_lsh_bands" -> SignLshBandsExpression.build _,
-    "z_order2" -> ZOrderExpression.build _,
-    "trigram_hashes" -> TrigramHashExpression.build _,
-    "minhash_sigs" -> MinHashSigExpression.build _,
-    "shingle_hashes" -> ShingleHashesExpression.build _,
-    "lsh_bands" -> LshBandsExpression.build _,
-    "poly_fold" -> PolyFoldExpression.build _,
-    "quality_score" -> QualityScoreExpression.build _,
-    "repetition_stats" -> RepetitionStatsExpression.build _,
-    "random_project" -> RandomProjectExpression.build _,
-    "bpe_encode" -> BpeEncodeExpression.build _,
-    "bpe_decode" -> BpeDecodeExpression.build _,
-    "unigram_encode" -> UnigramEncodeExpression.build _,
-    "wordpiece_encode" -> WordPieceEncodeExpression.build _,
-    "bpe_encode_bf" -> unary("bpe_encode_bf")(BpeEncodeBytesExpression(_)),
-    "bpe_decode_bf" -> unary("bpe_decode_bf")(BpeDecodeBytesExpression(_)),
-    "unigram_encode_bf" -> unary("unigram_encode_bf")(UnigramEncodeBytesExpression(_)),
-    "unigram_decode_bf" -> unary("unigram_decode_bf")(UnigramDecodeBytesExpression(_)),
-    "encode_postings" -> unary("encode_postings")(EncodePostingsExpression(_)),
-    "decode_postings" -> unary("decode_postings")(DecodePostingsExpression(_)),
-    "dot_i64" -> binary("dot_i64")(DotI64Expression(_, _)),
-    "sqdist_i64" -> binary("sqdist_i64")(SqDistI64Expression(_, _)),
-    "wildweb_envelope" -> unary("wildweb_envelope")(WildWebEnvelopeExpression(_)),
-    "json_bytes" -> unary("json_bytes")(JsonBytesExpression(_)))
+  private val longs = ArrayType(LongType, containsNull = false)
+  private val f64s = ArrayType(DoubleType)
+  private val i64s = ArrayType(LongType)
+
+  private def native(name: String, dataType: DataType, nullResult: Boolean = false)(
+      kernels: Kernel*): Native = new Native(name, dataType, nullResult, kernels)
+  private def kernel(module: => AnyRef, method: String, inputs: DataType*): Kernel =
+    new Kernel(module, method, inputs)
+
+  val rows: Seq[Native] = Seq(
+    native("feature_id", StringType)(kernel(FeatureIdExpression, "id", StringType)),
+    native("dot_f64", DoubleType, nullResult = true)(
+      kernel(DotProductExpression, "dot", f64s, f64s)),
+    native("sign_lsh_bands", longs, nullResult = true)(
+      kernel(SignLshBandsExpression, "bandsOfFloats", ArrayType(FloatType)),
+      kernel(SignLshBandsExpression, "bandsOfDoubles", f64s)),
+    native("z_order2", LongType)(kernel(ZOrderExpression, "interleave", LongType, LongType)),
+    native("trigram_hashes", ArrayType(IntegerType, containsNull = false))(
+      kernel(TrigramHashExpression, "hashes", StringType)),
+    native("minhash_sigs", longs, nullResult = true)(
+      kernel(MinHashSigExpression, "sigs", ArrayType(StringType)),
+      kernel(MinHashSigExpression, "sigsFromHashes", i64s)),
+    native("shingle_hashes", longs)(kernel(ShingleHashesExpression, "hashes", StringType)),
+    native("lsh_bands", longs)(kernel(LshBandsExpression, "bands", i64s)),
+    native("poly_fold", LongType)(kernel(PolyFoldExpression, "fold", StringType)),
+    native("quality_score", LongType)(kernel(QualityScoreExpression, "score", StringType)),
+    native("repetition_stats", longs)(kernel(RepetitionStatsExpression, "stats", StringType)),
+    native("random_project", longs)(
+      kernel(RandomProjectExpression, "project", ArrayType(FloatType))),
+    native("bpe_encode", StringType)(kernel(BpeEncodeExpression, "encode", StringType)),
+    native("bpe_decode", StringType)(kernel(BpeDecodeExpression, "decode", StringType)),
+    native("unigram_encode", StringType)(kernel(UnigramEncodeExpression, "encode", StringType)),
+    native("wordpiece_encode", StringType)(
+      kernel(WordPieceEncodeExpression, "encode", StringType)),
+    native("bpe_encode_bf", StringType)(kernel(BpeByteFallback, "encode", StringType)),
+    native("bpe_decode_bf", StringType)(kernel(BpeByteFallback, "decode", StringType)),
+    native("unigram_encode_bf", StringType)(kernel(UnigramByteFallback, "encode", StringType)),
+    native("unigram_decode_bf", StringType)(kernel(UnigramByteFallback, "decode", StringType)),
+    native("encode_postings", BinaryType)(kernel(PostingCodec, "encode", i64s)),
+    native("decode_postings", longs)(kernel(PostingCodec, "decode", BinaryType)),
+    native("dot_i64", LongType, nullResult = true)(kernel(LongVecKernels, "dot", i64s, i64s)),
+    native("sqdist_i64", LongType, nullResult = true)(
+      kernel(LongVecKernels, "sqdist", i64s, i64s)))
+
+  val byName: Map[String, Native] = rows.map(r => r.name -> r).toMap
+
+  val table: Seq[(String, Seq[Expression] => Expression)] = rows.map { r =>
+    r.name -> arity(r.name, r.kernels.head.inputs.size)(NativeExpression(r.name, _))
+  } ++ Seq(
+    "wildweb_envelope" -> arity("wildweb_envelope", 1)(c => WildWebEnvelopeExpression(c.head)),
+    "json_bytes" -> arity("json_bytes", 1)(c => JsonBytesExpression(c.head)))
 
   /** Registers every table name the session's function registry lacks.
     * Registering only absent names keeps repeated calls free of
@@ -55,21 +134,17 @@ object Natives {
       reg.createOrReplaceTempFunction(name, builder, "built-in")
   }
 
-  private def arity(name: String, expected: Int, children: Seq[Expression]): Unit =
+  /** The one arity check: `mk` behind it sees exactly `expected`
+    * children, and any other count is an analysis error, not a dropped
+    * argument or an index error. */
+  private def arity(name: String, expected: Int)(mk: Seq[Expression] => Expression)
+      : Seq[Expression] => Expression = { children =>
     if (children.size != expected)
       throw new AnalysisException(
         errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
         messageParameters = Map(
           "functionName" -> name, "expectedNum" -> expected.toString,
           "actualNum" -> children.size.toString, "docroot" -> "NA"))
-
-  private def unary(name: String)(mk: Expression => Expression)
-      : Seq[Expression] => Expression = { children =>
-    arity(name, 1, children); mk(children.head)
-  }
-
-  private def binary(name: String)(mk: (Expression, Expression) => Expression)
-      : Seq[Expression] => Expression = { children =>
-    arity(name, 2, children); mk(children(0), children(1))
+    mk(children)
   }
 }

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native form of the oracle-replicable 40-bit polynomial fold
@@ -15,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * plus one UTF8String per CHARACTER and runs two interpreted lambdas
   * per character — b100 evaluates it over every feature occurrence of
   * the corpus (millions of short strings), where it dominated the
-  * bench. This Expression is one codepoint loop, codegen-inlined into
+  * bench. This is one codepoint loop, codegen-inlined into
   * the surrounding projection.
   *
   * Equality with the SQL forms is exact: `ascii(substring(s, j, 1))`
@@ -24,31 +21,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * first supplementary-plane character, and NOT bytes, which would
   * diverge on the first non-ASCII one (the Winnowing.polyFoldString
   * contract, spec-pinned in PolyFoldSpec alongside the HOF twin). */
-case class PolyFoldExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "poly_fold"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    PolyFoldExpression.fold(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.PolyFoldExpression.fold($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PolyFoldExpression =
-    copy(child = newChild)
-}
-
 object PolyFoldExpression {
   private val Mask = (1L << 40) - 1
 
@@ -65,15 +37,5 @@ object PolyFoldExpression {
       i += Character.charCount(cp)
     }
     h
-  }
-
-  def build(children: Seq[Expression]): PolyFoldExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "poly_fold", "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    PolyFoldExpression(children.head)
   }
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
 
 /** DELTA + VARINT POSTING-LIST CODEC (B179 — the storage layout every
   * production inverted index uses: Manning/Raghavan/Schütze IIR §5.3
@@ -31,46 +28,6 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
   * already-aggregated posting arrays — the codec adds no shuffle; at
   * 100 TB the win is the shuffle/storage BYTES of the index itself
   * (measured ~5-8× on Zipf postings vs raw 8-byte ids). */
-case class EncodePostingsExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "encode_postings"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<bigint>, got ${other.catalogString}")
-    }
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    PostingCodec.encode(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PostingCodec.encode($c)")
-  override protected def withNewChildInternal(newChild: Expression): EncodePostingsExpression =
-    copy(child = newChild)
-}
-
-case class DecodePostingsExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "decode_postings"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires binary, got ${other.catalogString}")
-    }
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    PostingCodec.decode(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PostingCodec.decode($c)")
-  override protected def withNewChildInternal(newChild: Expression): DecodePostingsExpression =
-    copy(child = newChild)
-}
-
 object PostingCodec {
 
   /** LEB128 byte count of v ≥ 0 — the analytic law the oracle replays. */
@@ -128,5 +85,4 @@ object PostingCodec {
     require(!inValue, "truncated varint: continuation bit set on final byte")
     new GenericArrayData(out.toArray)
   }
-
 }

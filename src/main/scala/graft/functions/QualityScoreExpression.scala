@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** B243 — LEARNED QUALITY-CLASSIFIER INFERENCE (the fasttext-inference
@@ -29,31 +26,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * HOF spelling runs interpreted lambdas per token); the DuckDB oracle
   * replays the identical hash→dot→threshold arithmetic in pure SQL, and
   * QualityClassifierSpec replays it a third way in plain JVM Scala. */
-case class QualityScoreExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "quality_score"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    QualityScoreExpression.score(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.QualityScoreExpression.score($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): QualityScoreExpression =
-    copy(child = newChild)
-}
-
 object QualityScoreExpression {
 
   /** Feature buckets (2¹²) — small enough that the frozen weight function
@@ -86,15 +58,5 @@ object QualityScoreExpression {
       i += 1
     }
     sum
-  }
-
-  def build(children: Seq[Expression]): QualityScoreExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "quality_score", "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    QualityScoreExpression(children.head)
   }
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** B247 — SPARSE RANDOM PROJECTION (Achlioptas '01 "Database-friendly
   * random projections"; the JL-lemma transform every embedding pipeline
@@ -26,31 +23,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * exchanges before the presentation explode/sort — the B243 posture);
   * the DuckDB oracle replays the identical arithmetic with unnest +
   * GROUP BY, its sf-scale crutch. */
-case class RandomProjectExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "random_project"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<float>, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    RandomProjectExpression.project(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.RandomProjectExpression.project($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RandomProjectExpression =
-    copy(child = newChild)
-}
-
 object RandomProjectExpression {
 
   /** Output dimensionality (64 → 16 on the fixture: 4× compression). */
@@ -96,15 +68,5 @@ object RandomProjectExpression {
       j += 1
     }
     new GenericArrayData(y)
-  }
-
-  def build(children: Seq[Expression]): RandomProjectExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "random_project", "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    RandomProjectExpression(children.head)
   }
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** B245 — WITHIN-DOC REPETITION STATISTICS (the Gopher repetition rules,
@@ -30,31 +27,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * same counts with per-doc unnest + GROUP BY (its sf-scale crutch, not
   * the plan). One token walk builds all three gram maps and the coverage
   * mask; memory is O(doc grams), bounded by the longest document. */
-case class RepetitionStatsExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "repetition_stats"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    RepetitionStatsExpression.stats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.RepetitionStatsExpression.stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RepetitionStatsExpression =
-    copy(child = newChild)
-}
-
 object RepetitionStatsExpression {
 
   /** One pass over the token list: gram-count maps for k = 2..4 plus the
@@ -98,15 +70,5 @@ object RepetitionStatsExpression {
     }
     new GenericArrayData(
       Array(n.toLong, maxCount(2), maxCount(3), maxCount(4), cov2))
-  }
-
-  def build(children: Seq[Expression]): RepetitionStatsExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "repetition_stats", "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    RepetitionStatsExpression(children.head)
   }
 }

@@ -2,10 +2,8 @@ package graft.functions
 
 import java.util.Arrays
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -33,33 +31,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * document (the trigram_hashes lesson); downstream, the per-doc cache
   * holds 8-byte longs instead of shingle text.
   */
-case class ShingleHashesExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_hashes"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashesExpression.hashes(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.ShingleHashesExpression.hashes($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashesExpression =
-    copy(child = newChild)
-}
-
 object ShingleHashesExpression {
 
   /** One fused pass: boundary scan → per-window byte hash → sort+dedup.
@@ -102,16 +73,6 @@ object ShingleHashesExpression {
       j += 1
     }
     new GenericArrayData(Arrays.copyOf(out, uniq))
-  }
-
-  def build(children: Seq[Expression]): ShingleHashesExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "shingle_hashes", "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    ShingleHashesExpression(children.head)
   }
 
   /** Installs every native ([[Natives.install]]); kept because

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Banded random-hyperplane (sign-LSH) bucket keys for one embedding
   * vector: 16 deterministic pseudo-random hyperplane projections → a
@@ -25,35 +22,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * anyway). The empty case matters because every empty vector projects
   * to 0 on every plane: a non-null result would give all empty vectors
   * ONE shared signature that collides in every band and floods candidate
-  * generation (the minhash_sigs empty-input rule, r5 ADVICE).
-  * CodegenFallback: evaluated once per input row (not per candidate
-  * pair), off the join's hot loop.
+  * generation (the minhash_sigs empty-input rule, r5 ADVICE). It runs
+  * once per input row (not per candidate pair), off the join's hot loop.
   */
-case class SignLshBandsExpression(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+object SignLshBandsExpression {
+  val NumPlanes = 16
+  val Bands = 4
+  val BitsPerBand: Int = NumPlanes / Bands
 
-  import SignLshBandsExpression._
+  def bandsOfFloats(arr: ArrayData): ArrayData = bands(arr, isFloat = true)
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "sign_lsh_bands"
-  override def nullable: Boolean = true
+  def bandsOfDoubles(arr: ArrayData): ArrayData = bands(arr, isFloat = false)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<float> or array<double>, got ${other.catalogString}")
-    }
-
-  private val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  private def bands(arr: ArrayData, isFloat: Boolean): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return null
     var bits = 0
@@ -77,26 +58,6 @@ case class SignLshBandsExpression(child: Expression)
       b += 1
     }
     new GenericArrayData(buckets)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SignLshBandsExpression =
-    copy(child = newChild)
-}
-
-object SignLshBandsExpression {
-  val NumPlanes = 16
-  val Bands = 4
-  val BitsPerBand: Int = NumPlanes / Bands
-
-  /** Arity-checked builder (see [[DotProductExpression.build]]). */
-  def build(children: Seq[Expression]): SignLshBandsExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "sign_lsh_bands", "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    SignLshBandsExpression(children.head)
   }
 
   /** Installs every native ([[Natives.install]]); kept because

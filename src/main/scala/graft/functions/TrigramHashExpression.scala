@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codepoint-trigram hashes for language identification (SURVEY §2C
@@ -29,33 +26,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * on `length(text) >= 3` anyway; `explode_outer` of the empty array keeps
   * row-identity semantics).
   */
-case class TrigramHashExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "trigram_hashes"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TrigramHashExpression.hashes(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TrigramHashExpression.hashes($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TrigramHashExpression =
-    copy(child = newChild)
-}
-
 object TrigramHashExpression {
 
   /** One fused pass: codepoints → rolling-window polynomial. Shared by
@@ -71,16 +41,6 @@ object TrigramHashExpression {
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  def build(children: Seq[Expression]): TrigramHashExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "trigram_hashes", "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    TrigramHashExpression(children.head)
   }
 
   /** Installs every native ([[Natives.install]]); kept because

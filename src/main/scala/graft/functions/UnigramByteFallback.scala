@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** BYTE-FALLBACK UNIGRAM TOKENIZER (B177 — completing VERDICT r13 item 5,
@@ -43,46 +40,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-stage codegen (the [[UnigramEncodeExpression]] posture
   * verbatim); the byte candidates add O(1) work per DP position and
   * nothing to the baked-in model; nothing shuffles. */
-case class UnigramEncodeBytesExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "unigram_encode_bf"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    UnigramByteFallback.encode(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.UnigramByteFallback.encode($c)")
-  override protected def withNewChildInternal(newChild: Expression): UnigramEncodeBytesExpression =
-    copy(child = newChild)
-}
-
-case class UnigramDecodeBytesExpression(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "unigram_decode_bf"
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(input: Any): Any =
-    UnigramByteFallback.decode(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.UnigramByteFallback.decode($c)")
-  override protected def withNewChildInternal(newChild: Expression): UnigramDecodeBytesExpression =
-    copy(child = newChild)
-}
-
 object UnigramByteFallback {
 
   /** Byte id b encodes as ByteBase + b (b in 0..255) — the same byte id
@@ -214,5 +171,4 @@ object UnigramByteFallback {
     flushRun()
     UTF8String.fromString(sb.toString)
   }
-
 }

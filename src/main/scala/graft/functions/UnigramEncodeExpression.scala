@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native deterministic UNIGRAM-LM tokenizer for B152 (Kudo, ACL'18 —
@@ -35,33 +32,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * shuffle, no model broadcast beyond the vocab baked into the class;
   * the word→ids memo (bounded, per executor) exploits Zipf exactly as
   * [[BpeEncodeExpression]] does. */
-case class UnigramEncodeExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "unigram_encode"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    UnigramEncodeExpression.encode(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.UnigramEncodeExpression.encode($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): UnigramEncodeExpression =
-    copy(child = newChild)
-}
-
 object UnigramEncodeExpression {
 
   /** (piece, cost) in file order; 1-based index = token id. */
@@ -150,18 +120,6 @@ object UnigramEncodeExpression {
   def encode(s: UTF8String): UTF8String = {
     val words = s.toString.split(" ", -1).filter(_.nonEmpty)
     UTF8String.fromString(words.map(encodeWord).mkString(" "))
-  }
-
-  def build(children: Seq[Expression]): UnigramEncodeExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "unigram_encode",
-          "expectedNum" -> "1",
-          "actualNum" -> children.size.toString,
-          "docroot" -> "NA"))
-    UnigramEncodeExpression(children.head)
   }
 
   /** Installs every native ([[Natives.install]]); kept because

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native deterministic GREEDY LONGEST-MATCH-FIRST tokenizer for B155 —
@@ -23,33 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale posture: identical to the sibling tokenizers — pure map-side
   * scalar inside whole-stage codegen, Zipf-memoized per executor, no
   * shuffle at any corpus size. */
-case class WordPieceEncodeExpression(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "wordpiece_encode"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.catalogString}")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    WordPieceEncodeExpression.encode(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.WordPieceEncodeExpression.encode($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordPieceEncodeExpression =
-    copy(child = newChild)
-}
-
 object WordPieceEncodeExpression {
 
   private val memoCap = 65536
@@ -97,17 +67,5 @@ object WordPieceEncodeExpression {
   def encode(s: UTF8String): UTF8String = {
     val words = s.toString.split(" ", -1).filter(_.nonEmpty)
     UTF8String.fromString(words.map(encodeWord).mkString(" "))
-  }
-
-  def build(children: Seq[Expression]): WordPieceEncodeExpression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> "wordpiece_encode",
-          "expectedNum" -> "1",
-          "actualNum" -> children.size.toString,
-          "docroot" -> "NA"))
-    WordPieceEncodeExpression(children.head)
   }
 }

@@ -132,7 +132,7 @@ object Extensions {
       .orderBy("event_type", "rank")
   }
 
-  /** B39 — scalar UDF (haversine) + the native codegen FeatureIdExpression,
+  /** B39 — scalar UDF (haversine) + the native codegen `feature_id`,
     * both over deterministic synthetic coordinates. The oracle replicates
     * the haversine formula verbatim (identical double op sequence). */
   private val b39 = entry(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
-import graft.functions.SignLshBandsExpression
+import graft.functions.{NativeExpression, SignLshBandsExpression}
 
 /** Optimizer rule: rescue the naive all-pairs similarity formulation
   * (SURVEY §4B item 1, the deferred half of [[RangeJoinBucketing]]'s
@@ -17,11 +17,11 @@ import graft.functions.SignLshBandsExpression
   * plan shape at 100 TB. This rule rewrites it into the banded sign-LSH
   * candidate+verify pipeline ([[graft.llm.Similarity]]'s shape, here as a
   * plan transform): both sides are extended with the 4 band-bucket keys of
-  * [[SignLshBandsExpression]] and pos-exploded, the join becomes a hash
-  * equi join on (band, bucket), and the ORIGINAL cosine predicate is kept
-  * as a residual — plus a "first agreeing band" guard (band k matches only
-  * if no band < k agrees), so every qualifying pair survives exactly once
-  * and inner-join multiplicity is preserved.
+  * `sign_lsh_bands` ([[SignLshBandsExpression]]) and pos-exploded, the
+  * join becomes a hash equi join on (band, bucket), and the ORIGINAL
+  * cosine predicate is kept as a residual — plus a "first agreeing band"
+  * guard (band k matches only if no band < k agrees), so every qualifying
+  * pair survives exactly once and inner-join multiplicity is preserved.
   *
   * SEMANTICS NOTE — this is a candidate-generating rewrite: precision is
   * exact (the residual re-checks the real predicate) but recall is that of
@@ -92,9 +92,9 @@ object CosineLshRewrite extends Rule[LogicalPlan] with PredicateHelper {
   private def vectorsOf(score: Expression, assumeUnit: Boolean)
       : Option[(Expression, Expression, Option[(Expression, Expression)])] =
     score match {
-      case Divide(graft.functions.DotProductExpression(a, b), Multiply(x, y, _), _) =>
+      case Divide(NativeExpression("dot_f64", Seq(a, b)), Multiply(x, y, _), _) =>
         Some((a, b, Some((x, y))))
-      case graft.functions.DotProductExpression(a, b) if assumeUnit =>
+      case NativeExpression("dot_f64", Seq(a, b)) if assumeUnit =>
         Some((a, b, None))
       case _ => None
     }
@@ -181,7 +181,7 @@ object CosineLshRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * kept in scope; returns (plan, posAttr, bucketAttr, bandArrayAttr). */
   private def banded(child: LogicalPlan, vec: Expression, tag: String)
       : (LogicalPlan, Attribute, Attribute, Attribute) = {
-    val bands = Alias(SignLshBandsExpression(vec), s"__graft_lsh_bands_$tag")()
+    val bands = Alias(NativeExpression("sign_lsh_bands", Seq(vec)), s"__graft_lsh_bands_$tag")()
     val proj = Project(child.output :+ bands, child)
     val pos = AttributeReference(s"__graft_lsh_band_$tag", IntegerType, nullable = false)()
     val bkt = AttributeReference(s"__graft_lsh_bucket_$tag", LongType, nullable = false)()

@@ -84,6 +84,16 @@ class ExtensionsSpec extends AnyFunSuite {
       TestSession.spark.sql("SELECT dot_f64(array(1.0D))").collect()
     }
     assert(e.getMessage.contains("dot_f64"), e.getMessage)
+    // a wrong input type fails at analysis too, not in constant folding
+    // or in the generated code's compile
+    for ((query, message) <- Seq(
+        "SELECT feature_id(1)" -> "feature_id requires string, got int",
+        "SELECT feature_id(id) FROM range(3)" -> "feature_id requires string, got bigint")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        TestSession.spark.sql(query).collect()
+      }
+      assert(e.getMessage.contains(message), e.getMessage)
+    }
   }
 
   test("typed Dataset path decodes incidents into WildCadIncident") {

@@ -13,8 +13,9 @@ import graft.functions.Natives
 /** One native-function table, one session factory, one query scope, one
   * scratch-dir owner: the table reaches every session through an entry or
   * GraftExtensions, and `src/main` keeps no second way to build a session,
-  * register a native, checkpoint, persist, run concurrent legs, make or
-  * delete a scratch dir, or drop a memory-sink view. */
+  * register a native, check a native's arity, write a native's expression
+  * node, checkpoint, persist, run concurrent legs, make or delete a
+  * scratch dir, or drop a memory-sink view. */
 class NativesSpec extends AnyFunSuite {
   private val names = Natives.table.map(_._1)
 
@@ -67,6 +68,16 @@ class NativesSpec extends AnyFunSuite {
     assert(offenders("createOrReplaceTempFunction",
       Set("Natives.scala", "ScaleOps.scala")) === Seq.empty)
     assert(offenders("""\w+(Expression|Codec|Fallback)\.register\(""", Set.empty) === Seq.empty)
+  }
+
+  test("src/main checks native arity in one place and has one kernel expression node") {
+    assert(sources.size > 100, s"source scan found only ${sources.size} files")
+    assert(offenders("WRONG_NUM_ARGS", Set("Natives.scala")) === Seq.empty)
+    assert(sources.filter(f => f.toString.contains("graft/functions/") &&
+      Files.readString(f).contains("def build(")) === Seq.empty)
+    assert(offenders("""(extends|with)\s+(UnaryExpression|BinaryExpression|CodegenFallback)\b""",
+      Set("NativeExpression.scala", "WildWebEnvelopeExpression.scala",
+        "JsonBytesExpression.scala")) === Seq.empty)
   }
 
   test("src/main checkpoints, persists and runs concurrent legs only through QueryScope") {

@@ -215,9 +215,9 @@ object Bench {
 
     // min-of-3 absorbs the host's multi-second CPU-steal spikes
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // Local-A/B filter only (driver never sets it): comma-separated bench
-    // names → time just those (the Verify SPARK_GRAFT_ONLY convention)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    // Local-A/B filter only (driver never sets it): comma-separated entry
+    // names → time just those (the filter Verify reads too)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val entries = SparkEntry.benchQueries
       .filter(e => only.forall(_.contains(e.name)))
 

@@ -102,14 +102,16 @@ object Natives {
     native("random_project", longs)(
       kernel(RandomProjectExpression, "project", ArrayType(FloatType))),
     native("bpe_encode", StringType)(kernel(BpeEncodeExpression, "encode", StringType)),
-    native("bpe_decode", StringType)(kernel(BpeDecodeExpression, "decode", StringType)),
+    native("bpe_decode", StringType)(kernel(BpeEncodeExpression, "decode", StringType)),
     native("unigram_encode", StringType)(kernel(UnigramEncodeExpression, "encode", StringType)),
     native("wordpiece_encode", StringType)(
       kernel(WordPieceEncodeExpression, "encode", StringType)),
-    native("bpe_encode_bf", StringType)(kernel(BpeByteFallback, "encode", StringType)),
-    native("bpe_decode_bf", StringType)(kernel(BpeByteFallback, "decode", StringType)),
-    native("unigram_encode_bf", StringType)(kernel(UnigramByteFallback, "encode", StringType)),
-    native("unigram_decode_bf", StringType)(kernel(UnigramByteFallback, "decode", StringType)),
+    native("bpe_encode_bf", StringType)(kernel(BpeEncodeExpression, "encodeBf", StringType)),
+    native("bpe_decode_bf", StringType)(kernel(BpeEncodeExpression, "decodeBf", StringType)),
+    native("unigram_encode_bf", StringType)(
+      kernel(UnigramEncodeExpression, "encodeBf", StringType)),
+    native("unigram_decode_bf", StringType)(
+      kernel(UnigramEncodeExpression, "decodeBf", StringType)),
     native("encode_postings", BinaryType)(kernel(PostingCodec, "encode", i64s)),
     native("decode_postings", longs)(kernel(PostingCodec, "decode", BinaryType)),
     native("dot_i64", LongType, nullResult = true)(kernel(LongVecKernels, "dot", i64s, i64s)),

@@ -22,20 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * shuffle at any corpus size. */
 object WordPieceEncodeExpression {
 
-  private val memoCap = 65536
-  /** ADVICE r14: cap KEY size too — the entry-count cap alone leaves
-    * retained width unbounded on adversarial/high-entropy corpora (64Ki
-    * arbitrary-length words per executor JVM for the process lifetime).
-    * Words past this length are encoded but never memoized, bounding
-    * retained heap to memoCap * O(memoMaxKeyLen). Real-token hit rates
-    * are unaffected (natural-language words are far shorter). */
-  private val memoMaxKeyLen = 64
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Max-munch over one word; OOV char → the whole word is "0". */
   private def encodeWord(w: String): String = {
-    val cached = memo.get(w)
-    if (cached != null) return cached
     val table = UnigramEncodeExpression.pieceTable
     val maxLen = UnigramEncodeExpression.maxPieceLen
     val L = w.length
@@ -58,14 +46,11 @@ object WordPieceEncodeExpression {
         pos += len
       }
     }
-    val ids = if (dead) "0" else out.toString
-    if (w.length <= memoMaxKeyLen && memo.size < memoCap) memo.put(w, ids)
-    ids
+    if (dead) "0" else out.toString
   }
 
+  private val memo = new WordMemo(encodeWord)
+
   /** Shared by eval, the generated code, and the spec's JVM oracle. */
-  def encode(s: UTF8String): UTF8String = {
-    val words = s.toString.split(" ", -1).filter(_.nonEmpty)
-    UTF8String.fromString(words.map(encodeWord).mkString(" "))
-  }
+  def encode(s: UTF8String): UTF8String = memo.encode(s)
 }

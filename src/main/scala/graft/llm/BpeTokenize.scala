@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.functions._
 import graft.Registry._
-import graft.functions.BpeEncodeExpression
+import graft.functions.{BpeEncodeExpression, Tokenizer}
 import graft.sources.Tables
 
 /** B122 — deterministic subword tokenization (SURVEY §2C tier (b); the
@@ -100,7 +100,7 @@ object BpeTokenize {
   /** B151 round-trip oracle: replay encode (stages 1-2) then decode
     * (stage 3) in DuckDB and check decode(encode(text)) ≡ text minus
     * spaces — BPE ids join words with the same separator as tokens, so
-    * despaced text is the exact inverse image (BpeDecodeExpression doc). */
+    * despaced text is the exact inverse image (BpeEncodeExpression doc). */
   private[llm] def roundtripOracleSql: String = {
     val e1 = charifyMergesExpr("text")
     val e2 = idifyExpr("w")
@@ -114,7 +114,7 @@ object BpeTokenize {
   }
 
   /** B151 — BPE DECODE + ROUND-TRIP GATE (VERDICT r12 item 3): the
-    * native codegen inverse [[graft.functions.BpeDecodeExpression]] run
+    * native codegen inverse `bpe_decode` ([[graft.functions.BpeEncodeExpression]]) run
     * over the encoder's output corpus-wide, hash-pinned against the
     * DuckDB replay of BOTH directions. A hash-green run proves
     * decode(encode(text)) ≡ despaced text for every document at the gate
@@ -137,9 +137,9 @@ object BpeTokenize {
 
   private val bytefallbackCsv = "/root/repo/fixtures/csv/bytefallback_probe.csv"
 
-  /** B172 — BYTE-FALLBACK ROUND-TRIP GATE (VERDICT r13 item 5): the b151
-    * law extended from the corpus charset to ARBITRARY input — the
-    * [[graft.functions.BpeByteFallback]] encode→decode chain run over a
+  /** A BYTE-FALLBACK ROUND-TRIP GATE (b172 for BPE, b177 for unigram;
+    * VERDICT r13 item 5): the b151 law extended from the corpus charset to
+    * ARBITRARY input — the `encode`→`decode` native chain run over a
     * fixture of accented Latin, Cyrillic, CJK, supplementary-plane
     * (😀, 𝄞, 𝌆), uppercase, punctuation and digit text, where the base
     * tokenizer would collapse every out-of-charset code point to the
@@ -152,36 +152,39 @@ object BpeTokenize {
     * Unicode); (b) `n_fallback_bytes` — the count of byte ids the real
     * encoder emitted — must equal DuckDB's INDEPENDENT prediction,
     * octet_length of the text with the trained charset [a-z ] stripped:
-    * exactly the non-vocab code points' UTF-8 bytes, since merges never
-    * leave [a-z] and fallback decomposes after merging. A fallback that
-    * over- or under-emits bytes (e.g. splitting surrogate halves) fails
-    * (b) even where the round-trip happens to survive.
+    * exactly the non-vocab code points' UTF-8 bytes (BPE: merges never
+    * leave [a-z] and fallback decomposes after merging; unigram: the
+    * exchange argument in [[graft.functions.UnigramEncodeExpression]]).
+    * A fallback that over- or under-emits bytes (e.g. splitting surrogate
+    * halves) fails (b) even where the round-trip happens to survive.
     *
     * Scale posture: two chained map-side codegen scalars + one array
     * filter — shuffle-free at any corpus size (the b151 posture). */
-  private val b172 = entry(
-    "b172_bpe_byte_fallback",
-    s"""SELECT probe_id,
-       |       replace(text, ' ', '') AS decoded,
-       |       CAST(1 AS BIGINT) AS roundtrip_ok,
-       |       CAST(octet_length(encode(regexp_replace(text, '[a-z ]', '', 'g')))
-       |            AS BIGINT) AS n_fallback_bytes
-       |FROM read_csv('$bytefallbackCsv', header=true,
-       |              columns={probe_id: 'BIGINT', text: 'VARCHAR'})
-       |ORDER BY probe_id""".stripMargin) { (s, _) =>
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("probe_id", LongType), StructField("text", StringType)))
-    s.read.option("header", "true").schema(schema).csv(bytefallbackCsv)
-      .withColumn("ids", expr("bpe_encode_bf(text)"))
-      .withColumn("decoded", expr("bpe_decode_bf(ids)"))
-      .select(col("probe_id"), col("decoded"),
-        (col("decoded") === regexp_replace(col("text"), " ", ""))
-          .cast("long").as("roundtrip_ok"),
-        expr(s"CAST(size(filter(split(ids, ' '), x -> CAST(x AS INT) >= ${graft.functions.BpeByteFallback.ByteBase})) AS BIGINT)")
-          .as("n_fallback_bytes"))
-      .orderBy("probe_id")
-  }
+  private[llm] def byteFallbackEntry(name: String, encode: String, decode: String): Entry =
+    entry(name,
+      s"""SELECT probe_id,
+         |       replace(text, ' ', '') AS decoded,
+         |       CAST(1 AS BIGINT) AS roundtrip_ok,
+         |       CAST(octet_length(encode(regexp_replace(text, '[a-z ]', '', 'g')))
+         |            AS BIGINT) AS n_fallback_bytes
+         |FROM read_csv('$bytefallbackCsv', header=true,
+         |              columns={probe_id: 'BIGINT', text: 'VARCHAR'})
+         |ORDER BY probe_id""".stripMargin) { (s, _) =>
+      import org.apache.spark.sql.types._
+      val schema = StructType(Seq(
+        StructField("probe_id", LongType), StructField("text", StringType)))
+      s.read.option("header", "true").schema(schema).csv(bytefallbackCsv)
+        .withColumn("ids", expr(s"$encode(text)"))
+        .withColumn("decoded", expr(s"$decode(ids)"))
+        .select(col("probe_id"), col("decoded"),
+          (col("decoded") === regexp_replace(col("text"), " ", ""))
+            .cast("long").as("roundtrip_ok"),
+          expr(s"CAST(size(filter(split(ids, ' '), x -> CAST(x AS INT) >= ${Tokenizer.ByteBase})) AS BIGINT)")
+            .as("n_fallback_bytes"))
+        .orderBy("probe_id")
+    }
+
+  private val b172 = byteFallbackEntry("b172_bpe_byte_fallback", "bpe_encode_bf", "bpe_decode_bf")
 
   val entries: Seq[Entry] = Seq(b122, b151, b172)
 }

@@ -253,51 +253,14 @@ object UnigramTokenize {
       .orderBy("tokenizer")
   }
 
-  private val bytefallbackCsv = "/root/repo/fixtures/csv/bytefallback_probe.csv"
-
   /** B177 — UNIGRAM BYTE-FALLBACK ROUND-TRIP GATE (completing VERDICT
     * r13 item 5's "extend b122/b152" — b172 covered the BPE half): the
-    * [[graft.functions.UnigramByteFallback]] encode→decode chain over
-    * the same unicode fixture b172 drives, where the base unigram
-    * tokenizer would emit the lossy OOV sentinel for every word touching
-    * a non-[a-z] code point.
-    *
-    * The b172 two-sided contract verbatim: (a) `decoded` must equal the
-    * despaced input — DuckDB states the identity law, Spark runs the
-    * real expressions, so any encode OR decode defect breaks the hash;
-    * (b) `n_fallback_bytes` must equal DuckDB's INDEPENDENT prediction —
-    * octet_length of the text with [a-z ] stripped — which holds because
-    * vocab pieces are [a-z]-only and an optimal Viterbi path never
-    * spends a byte piece on a coverable code point (the exchange
-    * argument, require-guarded in UnigramByteFallback and brute-force-
-    * pinned in UnigramSpec). An encoder that over- or under-falls-back
-    * fails (b) even where the round-trip happens to survive.
-    *
-    * Scale posture: two chained map-side codegen scalars + one array
-    * filter — shuffle-free at any corpus size (the b151/b172 posture). */
-  private val b177 = entry(
-    "b177_unigram_byte_fallback",
-    s"""SELECT probe_id,
-       |       replace(text, ' ', '') AS decoded,
-       |       CAST(1 AS BIGINT) AS roundtrip_ok,
-       |       CAST(octet_length(encode(regexp_replace(text, '[a-z ]', '', 'g')))
-       |            AS BIGINT) AS n_fallback_bytes
-       |FROM read_csv('$bytefallbackCsv', header=true,
-       |              columns={probe_id: 'BIGINT', text: 'VARCHAR'})
-       |ORDER BY probe_id""".stripMargin) { (s, _) =>
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("probe_id", LongType), StructField("text", StringType)))
-    s.read.option("header", "true").schema(schema).csv(bytefallbackCsv)
-      .withColumn("ids", expr("unigram_encode_bf(text)"))
-      .withColumn("decoded", expr("unigram_decode_bf(ids)"))
-      .select(col("probe_id"), col("decoded"),
-        (col("decoded") === regexp_replace(col("text"), " ", ""))
-          .cast("long").as("roundtrip_ok"),
-        expr(s"CAST(size(filter(split(ids, ' '), x -> CAST(x AS INT) >= ${graft.functions.UnigramByteFallback.ByteBase})) AS BIGINT)")
-          .as("n_fallback_bytes"))
-      .orderBy("probe_id")
-  }
+    * b172 gate ([[BpeTokenize.byteFallbackEntry]]) over the
+    * `unigram_encode_bf`→`unigram_decode_bf` chain, where the base
+    * unigram tokenizer would emit the lossy OOV sentinel for every word
+    * touching a non-[a-z] code point. */
+  private val b177 = BpeTokenize.byteFallbackEntry(
+    "b177_unigram_byte_fallback", "unigram_encode_bf", "unigram_decode_bf")
 
   val entries: Seq[Entry] = Seq(b152, b155, b159, b177)
 }

@@ -73,13 +73,19 @@ object WildWebPipeline {
     * `from_json(value, WildWebSchemas.envelope)`. Corrupt/mismatched bodies
     * yield a null envelope (PERMISSIVE) and are quarantined by [[run]],
     * mirroring the per-center try/catch (A14) rather than failing the job.
+    * The center is the landed file's name. `_metadata` holds it
+    * URI-encoded (`CA KRN` reads `CA%20KRN`), so it is decoded as a URI
+    * path: a literal `+` is escaped first, as `url_decode` would read it as
+    * a space.
     * Installs the natives first: a plain session carries no extensions. */
   def readEnvelopes(spark: SparkSession, dir: String): DataFrame = {
     Natives.install(spark)
+    val name = regexp_extract(col("_metadata.file_name"), "(.+)\\.json$", 1)
+    // url_decode is typed nullable and a file name is never null: the
+    // coalesce keeps `center` non-nullable
+    val center = coalesce(url_decode(replace(name, lit("+"), lit("%2B"))), name)
     spark.read.option("wholetext", "true").text(dir)
-      .select(
-        regexp_extract(col("_metadata.file_path"), "([^/]+)\\.json$", 1).as("center"),
-        col("value"))
+      .select(center.as("center"), col("value"))
       .withColumn("envelope", call_function("wildweb_envelope", col("value")))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{BpeDecodeExpression, BpeEncodeExpression}
+import graft.functions.{BpeEncodeExpression, Tokenizer}
 import graft.sources.Tables
 
 /** [[graft.functions.BpeEncodeExpression]] / B122 — the frozen-vocab BPE
@@ -61,15 +61,17 @@ class BpeSpec extends AnyFunSuite {
   test("equivalence holds on adversarial shapes (self-adjacency, overlaps, boundaries)") {
     // cases the corpus may not exercise: repeated letters (leftmost
     // tiebreak), merge-result adjacency, words that are single tokens,
-    // multi-space boundaries, out-of-vocab letters (x/z → singles)
+    // multi-space boundaries, out-of-vocab letters (x/z → singles),
+    // out-of-charset chars (the OOV sentinel once per UTF-16 char)
     val cases = Seq(
       "eeee errr erer", "stst stastast", "join joinjoin",
       "hashhash ashash", "batchbatch atchatch", "  double  spaces  ",
-      "xzxz zzz", "value valuevalue", "a", "", "merge mergemerge")
-    cases.foreach { t =>
-      val fast = BpeEncodeExpression.encode(UTF8String.fromString(t)).toString
-      assert(fast === greedyIds(t), s"divergence on: '$t'")
-    }
+      "xzxz zzz", "value valuevalue", "a", "", "merge mergemerge",
+      "é", "😀", "café 😀x naïve", "ABC a1b2")
+    def enc(t: String) = BpeEncodeExpression.encode(UTF8String.fromString(t)).toString
+    cases.foreach(t => assert(enc(t) === greedyIds(t), s"divergence on: '$t'"))
+    assert(enc("é") === "0")
+    assert(enc("😀") === "0 0")
   }
 
   test("corpus alphabet stays inside [a-z ] (the oracle charify precondition)") {
@@ -97,7 +99,7 @@ class BpeSpec extends AnyFunSuite {
   test("bpe_decode inverts bpe_encode up to despacing (corpus + adversarial + random)") {
     def rt(t: String): Unit = {
       val ids = BpeEncodeExpression.encode(UTF8String.fromString(t)).toString
-      val back = BpeDecodeExpression.decode(UTF8String.fromString(ids)).toString
+      val back = BpeEncodeExpression.decode(UTF8String.fromString(ids)).toString
       assert(back === t.replace(" ", ""), s"round-trip broke on: '${t.take(80)}'")
     }
     Tables.documents(spark, sf).select("text").collect()
@@ -113,12 +115,15 @@ class BpeSpec extends AnyFunSuite {
 
   test("bpe_decode: OOV sentinel and malformed ids decode to nothing, vocab ids to their surface") {
     BpeEncodeExpression.tokenIds.foreach { case (tok, id) =>
-      assert(BpeDecodeExpression.decode(UTF8String.fromString(id.toString)).toString === tok)
+      assert(BpeEncodeExpression.decode(UTF8String.fromString(id.toString)).toString === tok)
     }
-    assert(BpeDecodeExpression.decode(UTF8String.fromString("0")).toString === "")
-    assert(BpeDecodeExpression.decode(UTF8String.fromString("9999")).toString === "")
-    assert(BpeDecodeExpression.decode(UTF8String.fromString("")).toString === "")
-    assert(BpeDecodeExpression.decode(UTF8String.fromString("1  2")).toString === "ab")
+    assert(BpeEncodeExpression.decode(UTF8String.fromString("0")).toString === "")
+    assert(BpeEncodeExpression.decode(UTF8String.fromString("9999")).toString === "")
+    assert(BpeEncodeExpression.decode(UTF8String.fromString("")).toString === "")
+    assert(BpeEncodeExpression.decode(UTF8String.fromString("1  2")).toString === "ab")
+    // byte ids are unknown to the base decoder
+    val byteIds = (Tokenizer.ByteBase to Tokenizer.ByteBase + 255).mkString(" ")
+    assert(BpeEncodeExpression.decode(UTF8String.fromString(byteIds)).toString === "")
   }
 
   test("B151 entry: roundtrip_ok = 1 corpus-wide") {
@@ -145,13 +150,18 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("B172: byte-fallback encoder equals the base encoder on in-charset input") {
-    // merges only ever fire on [a-z] symbols, so on corpus text the two
+    // merges only ever fire on [a-z] symbols, so on [a-z ] text the two
     // encoders must produce identical id streams (fallback is reachable
     // only out of charset)
-    Tables.documents(spark, sf).select("text").collect().take(200).foreach { r =>
-      val t = UTF8String.fromString(r.getString(0))
-      assert(graft.functions.BpeByteFallback.encode(t).toString ===
-        BpeEncodeExpression.encode(t).toString)
+    val rnd = new scala.util.Random(172)
+    val alphabet = ('a' to 'z') :+ ' '
+    val randoms = (1 to 300).map(_ =>
+      (0 until rnd.nextInt(40)).map(_ => alphabet(rnd.nextInt(27))).mkString)
+    (Tables.documents(spark, sf).select("text").collect().take(200).map(_.getString(0)) ++
+        randoms).foreach { text =>
+      val t = UTF8String.fromString(text)
+      assert(BpeEncodeExpression.encodeBf(t).toString ===
+        BpeEncodeExpression.encode(t).toString, s"modes diverged on '$text'")
     }
   }
 
@@ -173,8 +183,8 @@ class BpeSpec extends AnyFunSuite {
     }
     (1 to 500).foreach { _ =>
       val text = (1 to (1 + rng.nextInt(6))).map(_ => randWord()).mkString(" ")
-      val ids = graft.functions.BpeByteFallback.encode(UTF8String.fromString(text))
-      val back = graft.functions.BpeByteFallback.decode(ids).toString
+      val ids = BpeEncodeExpression.encodeBf(UTF8String.fromString(text))
+      val back = BpeEncodeExpression.decodeBf(ids).toString
       assert(back === text.replace(" ", ""), s"round-trip broke on <$text>")
       // no OOV sentinel 0 ever appears with fallback on
       assert(!ids.toString.split(" ").contains("0"), s"sentinel id on <$text>")
@@ -182,16 +192,15 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("B172: a fallback code point's bytes stay contiguous and count exactly") {
-    val enc = graft.functions.BpeByteFallback
-      .encode(UTF8String.fromString("ab😀cd")).toString
+    val enc = BpeEncodeExpression.encodeBf(UTF8String.fromString("ab😀cd")).toString
     val ids = enc.split(" ").map(_.toInt)
     // 😀 is 4 UTF-8 bytes -> exactly 4 consecutive byte ids between the
     // vocab ids for the a-z runs
-    val byteIds = ids.filter(_ >= graft.functions.BpeByteFallback.ByteBase)
+    val byteIds = ids.filter(_ >= Tokenizer.ByteBase)
     assert(byteIds.length === 4)
-    val first = ids.indexWhere(_ >= graft.functions.BpeByteFallback.ByteBase)
-    assert(ids.slice(first, first + 4).forall(_ >= graft.functions.BpeByteFallback.ByteBase))
-    assert(new String(byteIds.map(i => (i - graft.functions.BpeByteFallback.ByteBase).toByte),
+    val first = ids.indexWhere(_ >= Tokenizer.ByteBase)
+    assert(ids.slice(first, first + 4).forall(_ >= Tokenizer.ByteBase))
+    assert(new String(byteIds.map(i => (i - Tokenizer.ByteBase).toByte),
       java.nio.charset.StandardCharsets.UTF_8) === "😀")
   }
 }

@@ -14,8 +14,9 @@ import graft.functions.Natives
   * scratch-dir owner: the table reaches every session through an entry or
   * GraftExtensions, and `src/main` keeps no second way to build a session,
   * register a native, check a native's arity, write a native's expression
-  * node, checkpoint, persist, run concurrent legs, make or delete a
-  * scratch dir, or drop a memory-sink view. */
+  * node, memoize a tokenizer's words, place byte-fallback ids, checkpoint,
+  * persist, run concurrent legs, make or delete a scratch dir, or drop a
+  * memory-sink view. */
 class NativesSpec extends AnyFunSuite {
   private val names = Natives.table.map(_._1)
 
@@ -78,6 +79,18 @@ class NativesSpec extends AnyFunSuite {
     assert(offenders("""(extends|with)\s+(UnaryExpression|BinaryExpression|CodegenFallback)\b""",
       Set("NativeExpression.scala", "WildWebEnvelopeExpression.scala",
         "JsonBytesExpression.scala")) === Seq.empty)
+  }
+
+  test("src/main writes the tokenizer core once: one word memo, one byte-id plane") {
+    val functions = sources.filter(_.toString.contains("graft/functions/"))
+    assert(functions.size > 20, s"source scan found only ${functions.size} kernel files")
+    def holding(pattern: String): Seq[String] = functions
+      .filter(f => pattern.r.findFirstIn(Files.readString(f)).isDefined)
+      .map(_.getFileName.toString)
+    assert(holding("ConcurrentHashMap") === Seq("Tokenizer.scala"))
+    assert(holding("""\bByteBase\s*=""") === Seq("Tokenizer.scala"))
+    assert(offenders("""object\s+(BpeByteFallback|UnigramByteFallback|BpeDecodeExpression)\b""",
+      Set.empty) === Seq.empty)
   }
 
   test("src/main checkpoints, persists and runs concurrent legs only through QueryScope") {

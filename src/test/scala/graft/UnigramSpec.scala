@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.UnigramEncodeExpression
+import graft.functions.{Tokenizer, UnigramEncodeExpression}
 import graft.sources.Tables
 
 /** [[graft.functions.UnigramEncodeExpression]] / B152 — the frozen-vocab
@@ -75,6 +75,11 @@ class UnigramSpec extends AnyFunSuite {
       val want = bruteBest(w).map(_._3.mkString(" ")).getOrElse("0")
       assert(dpIds(w) === want, s"DP diverged from brute force on '$w'")
     }
+    // a non-[a-z] char anywhere kills every path
+    Seq("café", "x😀", "Ab", "naïve").foreach { w =>
+      assert(bruteBest(w) === None)
+      assert(dpIds(w) === "0", s"'$w' must encode as the OOV sentinel")
+    }
   }
 
   test("vocab is well-formed: letters complete, costs positive, pieces unique") {
@@ -119,12 +124,10 @@ class UnigramSpec extends AnyFunSuite {
       "vocab memorized every corpus word — Viterbi untested")
   }
 
-  // ——— B177 byte-fallback (graft.functions.UnigramByteFallback) ———
-
-  import graft.functions.UnigramByteFallback
+  // ——— B177 byte-fallback (UnigramEncodeExpression.encodeBf) ———
 
   private def dpBfIds(w: String): String =
-    UnigramByteFallback.encode(UTF8String.fromString(w)).toString
+    UnigramEncodeExpression.encodeBf(UTF8String.fromString(w)).toString
 
   /** bruteBest extended by the byte candidate: at each position, besides
     * vocab pieces, the single code point as its UTF-8 bytes at
@@ -148,9 +151,9 @@ class UnigramSpec extends AnyFunSuite {
         val cc = Character.charCount(cp)
         val bytes = w.substring(pos, pos + cc)
           .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          .map(b => (UnigramByteFallback.ByteBase + (b & 0xFF)).toString).toList
+          .map(b => (Tokenizer.ByteBase + (b & 0xFF)).toString).toList
         val bytePaths = go(pos + cc).map { case (cost, mask, ids) =>
-          (cost + UnigramByteFallback.ByteCostPerByte * bytes.length,
+          (cost + UnigramEncodeExpression.ByteCostPerByte * bytes.length,
             mask + cut, bytes ::: ids)
         }
         vocabPaths ::: bytePaths
@@ -163,7 +166,10 @@ class UnigramSpec extends AnyFunSuite {
       .flatMap(r => Option(r.getString(0)).toSeq)
       .flatMap(_.split(" ", -1)).filter(_.nonEmpty).distinct
     assert(words.nonEmpty)
-    words.foreach { w =>
+    val rnd = new scala.util.Random(1772)
+    val randoms = (1 to 300).map(_ =>
+      (0 until rnd.nextInt(30)).map(_ => (' ' +: ('a' to 'z'))(rnd.nextInt(27))).mkString)
+    (words ++ randoms).foreach { w =>
       assert(dpBfIds(w) === dpIds(w), s"bf diverged from base on in-charset '$w'")
     }
   }
@@ -200,15 +206,15 @@ class UnigramSpec extends AnyFunSuite {
       val text = new String(
         (0 until n).map(_ => cps(rnd.nextInt(cps.length))).toArray, 0, n)
       val ids = dpBfIds(text)
-      val decoded = UnigramByteFallback
-        .decode(UTF8String.fromString(ids)).toString
+      val decoded = UnigramEncodeExpression
+        .decodeBf(UTF8String.fromString(ids)).toString
       assert(decoded === text.replace(" ", ""), s"round-trip broke on '$text'")
       val wantBytes = text.codePoints().toArray
         .filterNot(cp => (cp >= 'a' && cp <= 'z') || cp == ' ')
         .map(cp => new String(Character.toChars(cp))
           .getBytes(java.nio.charset.StandardCharsets.UTF_8).length).sum
       val gotBytes = ids.split(" ").filter(_.nonEmpty)
-        .count(_.toInt >= UnigramByteFallback.ByteBase)
+        .count(_.toInt >= Tokenizer.ByteBase)
       assert(gotBytes === wantBytes,
         s"fallback fired off-domain on '$text': $gotBytes vs $wantBytes")
     }

@@ -191,6 +191,22 @@ class WildWebPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("A14: a quarantined center keeps its name when its file name needs URI escaping") {
+    // the landed file's path reaches Spark as a URI: ' ' reads as %20,
+    // '%' as %25, and '+' must not decode to a space
+    val centers = Seq("CA KRN", "a+b", "CA%41")
+    val dir = TestDirs("wildweb_names")
+    val (landed, fetchErrors) = graft.sources.WildWebFetcher.fetchAll(
+      centers, c => s"http://feed.invalid/$c", dir.toString,
+      _ => (200, corrupt.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    assert(landed === centers && fetchErrors.isEmpty)
+    WildWebPipeline.run(spark, dir.toString, WildWebConfig("1 Week", now)) match {
+      case WildWebPipeline.Completed(_, errors) =>
+        assert(errors.select("center").collect().map(_.getString(0)).toSeq === centers.sorted)
+      case other => fail(s"expected Completed, got $other")
+    }
+  }
+
   test("no landed center (every fetch failed) completes with nothing to submit or quarantine") {
     landed() { dir =>
       WildWebPipeline.run(spark, dir, WildWebConfig("1 Week", now)) match {

@@ -84,6 +84,8 @@ class WordPieceSpec extends AnyFunSuite {
 
   test("OOV character yields the sentinel; empty and multi-space inputs behave") {
     assert(enc("ab9cd") === "0")
+    assert(enc("café") === "0")
+    assert(enc("a😀") === "0")
     assert(enc("") === "")
     assert(WordPieceEncodeExpression.encode(
       UTF8String.fromString("a  b")).toString === "1 2")
